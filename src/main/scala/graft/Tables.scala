@@ -12,15 +12,15 @@ import scala.util.Try
   */
 object Tables {
   /** Base-table read, its driver-side listing/footer-inference work
-    * memoized per file content stamp ([[graft.operators.LoadCache]]):
+    * memoized per file content stamp ([[graft.operators.Memo]]):
     * every query re-planning the same immutable fixture table should not
     * re-read the parquet footer per invocation. The data is NOT cached —
     * the memoized frame is a lazy plan whose every execution re-scans the
     * file; a regenerated fixture changes the stamp and reads fresh. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    graft.operators.LoadCache.memo(spark,
-      s"tbl|$path|${graft.operators.LoadCache.dirStamp(spark, path)}")(
+    graft.operators.Memo.loads(spark,
+      s"tbl|$path|${graft.operators.Memo.dirStamp(spark, path)}")(
       spark.read.parquet(path))
   }
 
@@ -48,8 +48,8 @@ object Tables {
     val path = s"$sfDir/events.parquet"
     // same stamp-keyed memo as `table` — doubly worth it here because the
     // drift-tolerant probe below reads the footer up to twice per call
-    graft.operators.LoadCache.memo(spark,
-      s"tblevents|$path|${graft.operators.LoadCache.dirStamp(spark, path)}")(
+    graft.operators.Memo.loads(spark,
+      s"tblevents|$path|${graft.operators.Memo.dirStamp(spark, path)}")(
       eventsUncached(spark, path))
   }
 

@@ -87,8 +87,8 @@ private[graft] object CellStore {
         // manifest read above plus one listing RPC, and the parquet files
         // are re-read on every execution (the frame is a lazy plan, never
         // data)
-        LoadCache.memo(spark,
-            s"cellstore|$dir|${render(m)}|${LoadCache.dirStamp(spark, dir)}") {
+        Memo.loads(spark,
+            s"cellstore|$dir|${render(m)}|${Memo.dirStamp(spark, dir)}") {
           val paths = m.toSeq.sorted.map { case (c, v) => s"$dir/cell=$c/v=$v" }
           spark.read.option("basePath", dir).parquet(paths: _*).drop("v")
         }

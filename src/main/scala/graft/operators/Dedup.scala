@@ -166,8 +166,8 @@ object Dedup {
     // The BUCKET table is cached: post-aggregation it is small (one row per
     // distinct shingle), it feeds both the pair counting and the per-doc
     // stats, and caching it means the corpus is shingled exactly once on
-    // the hot path. (MEMORY_ONLY via PlanCache.memo: eviction falls back
-    // to recompute; release with PlanCache.releaseAll.)
+    // the hot path. (MEMORY_AND_DISK via PlanCache.memo; release with
+    // PlanCache.releaseAll.)
     val buckets = PlanCache.memo(
       shingleArrays(docs).select(col("doc_id"), explode(col("sh")).as("shingle"))
         .groupBy("shingle")
@@ -429,34 +429,24 @@ object Dedup {
     * frame reads the LAST of them; set
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` for GC-driven
     * cleanup of the earlier rounds). An application-level checkpoint dir, if
-    * already configured on the context, is left untouched. */
-  /** Driver-side memo for converged cluster labels: the fixed-point loop
-    * runs ACTIONS per round (a checkpoint materialization plus the
-    * convergence probe), so rebuilding the same clustering over the same
-    * file-backed pairs re-pays the whole iteration — the exact cost the
-    * `ivfIndex`/`detKMeans` fit memos exist for. Keyed by input files +
-    * canonicalized pairs plan + maxRounds (`Similarity.memoKey`); inputs
-    * with no file scan skip the memo (same-schema collision risk), so
-    * in-memory spec frames always exercise the loop. The stored frame is
-    * the final checkpointed labels — materialized blocks, content frozen. */
-  private val ccMemo = scala.collection.mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]
-
+    * already configured on the context, is left untouched.
+    *
+    * The fixed-point loop runs actions per round (a checkpoint plus the
+    * convergence probe), so the converged labels are a fit: rebuilding the
+    * same clustering over the same file-backed pairs serves the memoized
+    * frame ([[Memo.fit]]), whose content is the final checkpointed blocks.
+    * In-memory pairs always run the loop. */
   def duplicateClusters(pairs: DataFrame, maxRounds: Int = 50,
                         checkpointDir: Option[String] = None): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
     checkpointDir.foreach(d => if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d))
-    val key = Similarity.memoKey(pairs, s"cc|$maxRounds")
-      .map(s => (pairs.sparkSession, s))
-    key.foreach { mk =>
-      ccMemo.synchronized {
-        ccMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-        ccMemo.get(mk)
-      } match {
-        case Some(hit) => return hit
-        case None =>
-      }
-    }
+    ccFits.fit(pairs, s"cc|$maxRounds")(clusterLabels(pairs, maxRounds, checkpointDir))
+  }
+
+  private val ccFits = new Memo(Memo.FitCap)
+
+  private def clusterLabels(pairs: DataFrame, maxRounds: Int,
+                            checkpointDir: Option[String]): DataFrame = {
     def barrier(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
     val edges = barrier(pairs
@@ -495,9 +485,7 @@ object Dedup {
       labels = updated.drop("chg")
       round += 1
     }
-    val out = labels.select("doc_id", "cluster")
-    key.foreach(mk => ccMemo.synchronized { ccMemo.update(mk, out) })
-    out
+    labels.select("doc_id", "cluster")
   }
 
   /** Which document SURVIVES each near-dup cluster — the keep/drop decision

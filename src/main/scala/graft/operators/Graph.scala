@@ -46,7 +46,7 @@ object Graph {
     * larger graphs drop Scale, not correctness. */
   def pageRank(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 20)
-    // memoized (MEMORY_ONLY, PlanCache lifecycle): every iteration's lineage
+    // memoized (MEMORY_AND_DISK, PlanCache lifecycle): every iteration's lineage
     // references the symmetrized edge list and the degree table — without
     // the persist, iteration i re-derives both i times from the raw input
     val und = PlanCache.memo(undirected(edges))

@@ -9,9 +9,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Operators like `Dedup.jaccardPairs` return LAZY DataFrames whose plans
   * reference an intermediate evaluated more than once downstream (a bucket
-  * table, a normalized corpus). Those intermediates are persisted MEMORY_ONLY
-  * — eviction falls back to recompute, never accreting disk blocks — but a
-  * plain `persist()` has two lifecycle problems in a long-lived session:
+  * table, a normalized corpus). Those intermediates are persisted
+  * MEMORY_AND_DISK (see `memo`), but a plain `persist()` has two lifecycle
+  * problems in a long-lived session:
   *
   *  1. building the same operator twice over the same input re-registers the
   *     identical plan with the CacheManager ("Asked to cache already cached
@@ -23,8 +23,8 @@ import org.apache.spark.storage.StorageLevel
   * CacheManager entry, so repeat builds silently share the first entry.
   * `release`/`releaseAll` fix (2): every memoized frame is tracked per
   * session, and a caller done with graft operators (or a test harness
-  * between suites) drops them all in one call. Entries are MEMORY_ONLY, so
-  * releasing is always safe — any still-running plan recomputes.
+  * between suites) drops them all in one call. Releasing is always safe —
+  * a still-running plan recomputes a released entry.
   */
 object PlanCache {
 
@@ -55,7 +55,7 @@ object PlanCache {
   }
 
   /** Unpersist every plan-builder cache entry this session accreted.
-    * Non-blocking; MEMORY_ONLY entries recompute if still referenced. */
+    * Non-blocking; a released entry recomputes if still referenced. */
   def releaseAll(spark: SparkSession): Unit = synchronized {
     tracked.remove(spark).foreach(_.foreach(_.unpersist(blocking = false)))
   }

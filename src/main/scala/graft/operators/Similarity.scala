@@ -23,6 +23,14 @@ import graft.GraftFunctions.cosine_similarity
   */
 object Similarity {
 
+  /** Fit memos ([[Memo.fit]]): an index exists to be probed repeatedly,
+    * so repeat builds over the same file-backed input (benchmark reps,
+    * probe and pair queries sharing one corpus) reuse the fit. */
+  private val ivfFits = new Memo(Memo.FitCap)
+  private val detKmFits = new Memo(Memo.FitCap)
+  private val pqFits = new Memo(Memo.FitCap)
+  private val coresetFits = new Memo(Memo.FitCap)
+
   /** Exact cosine scores of every (query, item) pair. `queries` must be small
     * (it is broadcast); the corpus side never shuffles. */
   def cosineScores(items: DataFrame, queries: DataFrame): DataFrame =
@@ -394,8 +402,8 @@ object Similarity {
                       bucketLength: Double = 0.5, numTables: Int = 6): DataFrame = {
     val radius = math.sqrt(math.max(2.0 - 2.0 * threshold, 0.0)) + 1e-9
     // evaluated 3x downstream (fit + both sides of the self-join);
-    // MEMORY_ONLY via PlanCache.memo (recompute on eviction, one entry
-    // across repeat builds, released by PlanCache.releaseAll)
+    // MEMORY_AND_DISK via PlanCache.memo (one entry across repeat
+    // builds, released by PlanCache.releaseAll)
     val ni = PlanCache.memo(normalized(items, "embedding"))
     val lsh = new BucketedRandomProjectionLSH()
       .setInputCol("nvec").setOutputCol("hashes")
@@ -464,8 +472,8 @@ object Similarity {
       // centroid tables only change by a rewrite of their dir (retrain /
       // split land as new generations; upserts freeze centroids) — memo
       // the frame's listing/schema work keyed on the dir's content stamp
-      LoadCache.memo(spark,
-          s"cents|$dir|${LoadCache.dirStamp(spark, s"$dir/centroids")}")(
+      Memo.loads(spark,
+          s"cents|$dir|${Memo.dirStamp(spark, s"$dir/centroids")}")(
         spark.read.parquet(s"$dir/centroids")))
   }
 
@@ -475,21 +483,8 @@ object Similarity {
     * assignments are materialized — the returned assignments are themselves
     * cached, since an index exists to be probed repeatedly. Deterministic
     * under the fixed seed. */
-  def ivfIndex(items: DataFrame, nLists: Int = 16): IvfIndex = {
-    val key = memoKey(items, s"ivf|$nLists").map(s => (items.sparkSession, s))
-    key.foreach { mk =>
-      ivfMemo.synchronized {
-        ivfMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-        ivfMemo.get(mk)
-      } match {
-        case Some(hit) => return hit
-        case None =>
-      }
-    }
-    val built = buildIvfIndex(items, nLists)
-    key.foreach(mk => ivfMemo.synchronized { ivfMemo.update(mk, built) })
-    built
-  }
+  def ivfIndex(items: DataFrame, nLists: Int = 16): IvfIndex =
+    ivfFits.fit(items, s"ivf|$nLists")(buildIvfIndex(items, nLists))
 
   private def buildIvfIndex(items: DataFrame, nLists: Int): IvfIndex = {
     val ni = normalized(items, "embedding").cache()
@@ -1311,51 +1306,15 @@ object Similarity {
     * table (k x dim doubles) is driver-side by design — same tiny-table
     * contract as `assignCells`. Returns (final centroids, assignments
     * against them). */
-  /** Driver-side memo for `detKMeans` builds: an index exists to be probed
-    * repeatedly (the `ivfIndex`/`PlanCache` contract), and the centroid
-    * table is plain Scala data PlanCache cannot hold. Keyed by the
-    * canonicalized input plan + params; sessions whose context stopped are
-    * swept on each build. */
-  private val detKmMemo = scala.collection.mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession, String),
-    (Seq[(Int, Array[Double])], DataFrame)]
-
-  /** Same contract for the MLlib-backed `ivfIndex`: repeat builds over the
-    * same file-backed input (benchmark reps, probe + pair queries sharing
-    * one corpus) reuse the fitted index instead of refitting KMeans. */
-  private val ivfMemo = scala.collection.mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession, String), IvfIndex]
-
-  /** Input-identity key for index memos: sorted input files + canonicalized
-    * plan + params. Returns None for inputs with no file scan (in-memory
-    * frames) — those must not be memoized (same-schema collisions). */
-  private[operators] def memoKey(df: DataFrame, params: String): Option[String] = {
-    val inputs = df.inputFiles.sorted.mkString(",")
-    if (inputs.isEmpty) None
-    else Some(inputs + "||" +
-      df.queryExecution.analyzed.canonicalized.toString + "|" + params)
-  }
-
   def detKMeans(items: DataFrame, k: Int, iters: Int = 3,
                 embCol: String = "embedding")
       : (Seq[(Int, Array[Double])], DataFrame) = {
     require(k >= 1 && iters >= 1, s"need k >= 1, iters >= 1; got k=$k iters=$iters")
-    // the canonicalized plan string alone is NOT a safe key: it elides the
-    // scan location, so two reads of different parquet paths canonicalize
-    // identically. `memoKey` disambiguates with the sorted input-file list;
-    // plans with no file inputs (in-memory test frames) skip the memo
-    // entirely rather than risk a same-schema collision.
-    val key = memoKey(items, s"$k|$iters|$embCol")
-      .map(s => (items.sparkSession, s))
-    key.foreach { mk =>
-      detKmMemo.synchronized {
-        detKmMemo.filterInPlace((key, _) => !key._1.sparkContext.isStopped)
-        detKmMemo.get(mk)
-      } match {
-        case Some(hit) => return hit
-        case None =>
-      }
-    }
+    detKmFits.fit(items, s"detkm|$k|$iters|$embCol")(buildDetKMeans(items, k, iters, embCol))
+  }
+
+  private def buildDetKMeans(items: DataFrame, k: Int, iters: Int,
+                             embCol: String): (Seq[(Int, Array[Double])], DataFrame) = {
     val nv = withNv(items, embCol).select(col("vec_id"), col("__nv")).cache()
     var cents: Seq[(Int, Array[Double])] = nv.orderBy("vec_id").limit(k)
       .select("__nv").collect()
@@ -1386,9 +1345,7 @@ object Similarity {
     val assigned = PlanCache.memo(assignNv(nv, cents).select("vec_id", "cell"))
     assigned.count() // materialize so the normalized input can be released
     nv.unpersist()
-    val out = (cents, assigned)
-    key.foreach(mk => detKmMemo.synchronized { detKmMemo.update(mk, out) })
-    out
+    (cents, assigned)
   }
 
   /** Deterministic, persistable IVF index: `detKMeans` cells packaged as
@@ -1613,7 +1570,7 @@ object Similarity {
     // flat table: memo the listing/schema work keyed on the dir's content
     // stamp (mutations land as new generations or rewrite the dir's files,
     // either way the stamp changes); the parquet is re-read per execution
-    LoadCache.memo(spark, s"flat|$dir|${LoadCache.dirStamp(spark, dir)}")(
+    Memo.loads(spark, s"flat|$dir|${Memo.dirStamp(spark, dir)}")(
       spark.read.parquet(dir))
   }
 
@@ -1661,7 +1618,7 @@ object Similarity {
     * listing-memo rule: keyed on the resolved dir's content stamp). */
   def loadBqIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val dir = resolveIndexDir(spark, path)
-    LoadCache.memo(spark, s"flat|$dir|${LoadCache.dirStamp(spark, dir)}")(
+    Memo.loads(spark, s"flat|$dir|${Memo.dirStamp(spark, dir)}")(
       spark.read.parquet(dir))
   }
 
@@ -1737,8 +1694,8 @@ object Similarity {
     // the codebook collect is a full Spark job against a table that only
     // a rewrite of its dir can change — memo the collected rows keyed on
     // the dir's content stamp (one listing RPC per load keeps freshness)
-    val codebooks = LoadCache.memo(spark,
-        s"pqcb|$path|${LoadCache.dirStamp(spark, s"$path/codebooks")}") {
+    val codebooks = Memo.loads(spark,
+        s"pqcb|$path|${Memo.dirStamp(spark, s"$path/codebooks")}") {
       val rows = spark.read.parquet(s"$path/codebooks").collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       require(rows.nonEmpty, s"empty codebook table at $path/codebooks")
@@ -1777,10 +1734,6 @@ object Similarity {
   private def codesArrayExpr(m: Int): String =
     (0 until m).map(s => s"__c_$s").mkString("array(", ", ", ")")
 
-  /** Driver-side memo for PQ builds — the detKMeans/ivfIndex contract. */
-  private val pqMemo = scala.collection.mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession, String), PqIndex]
-
   /** Product quantization — the classic memory-bound ANN index (Jégou et
     * al., "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
     * split the normalized vector into `m` subspaces of `dsub = inDim / m`
@@ -1812,20 +1765,8 @@ object Similarity {
               inDim: Int = 64, embCol: String = "embedding"): PqIndex = {
     require(m >= 1 && inDim % m == 0, s"inDim=$inDim must split into m=$m subspaces")
     require(ksub >= 1 && iters >= 1, s"need ksub >= 1, iters >= 1")
-    val key = memoKey(items, s"pq|$m|$ksub|$iters|$inDim|$embCol")
-      .map(s => (items.sparkSession, s))
-    key.foreach { mk =>
-      pqMemo.synchronized {
-        pqMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-        pqMemo.get(mk)
-      } match {
-        case Some(hit) => return hit
-        case None =>
-      }
-    }
-    val built = buildPqIndex(items, m, ksub, iters, inDim / m, embCol)
-    key.foreach(mk => pqMemo.synchronized { pqMemo.update(mk, built) })
-    built
+    pqFits.fit(items, s"pq|$m|$ksub|$iters|$inDim|$embCol")(
+      buildPqIndex(items, m, ksub, iters, inDim / m, embCol))
   }
 
   private def buildPqIndex(items: DataFrame, m: Int, ksub: Int, iters: Int,
@@ -2037,18 +1978,8 @@ object Similarity {
         s"zip_with(__nv, element_at($centsSql, cell + 1), (x, y) -> x - y)"))
     val residNv = resid.select(col("vec_id"), col("__nv"))
     val dsub = inDim / m
-    val key = memoKey(residNv, s"ivfpqr|$nLists|$kmIters|$m|$ksub|$pqIters|$inDim")
-      .map(s => (items.sparkSession, s))
-    val pq = key.flatMap { mk =>
-      pqMemo.synchronized {
-        pqMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-        pqMemo.get(mk)
-      }
-    }.getOrElse {
-      val built = buildPqFromNv(residNv, m, ksub, pqIters, dsub)
-      key.foreach(mk => pqMemo.synchronized { pqMemo.update(mk, built) })
-      built
-    }
+    val pq = pqFits.fit(residNv, s"ivfpqr|$nLists|$kmIters|$m|$ksub|$pqIters|$inDim")(
+      buildPqFromNv(residNv, m, ksub, pqIters, dsub))
     // query side: nProbe cells by centroid cosine (the q69 probe rule),
     // plus per-cell base dots and the residual lookup tables — all riding
     // the query broadcast
@@ -2684,7 +2615,7 @@ object Similarity {
     val lsh = new BucketedRandomProjectionLSH()
       .setInputCol("nvec").setOutputCol("hashes")
       .setBucketLength(bucketLength).setNumHashTables(numTables).setSeed(42L)
-    // evaluated twice (fit + join left side); MEMORY_ONLY as above
+    // evaluated twice (fit + join left side); MEMORY_AND_DISK as above
     val ni = PlanCache.memo(normalized(items, "embedding"))
     val nq = normalized(queries, "query_embedding")
     val model = lsh.fit(ni)
@@ -2848,29 +2779,17 @@ object Similarity {
     * distributed pass (min-distance against a ≤k-row broadcast of the
     * selected exemplars, partial-agg argmax) and one driver-side row; cost
     * k·scan, state k vectors. Output: (rank, vec_id, dist2) with the
-    * seed's dist2 = 0. */
-  /** Driver-side memo for [[kCenterCoreset]] builds: the greedy selection
-    * is k sequential driver jobs over the same input, i.e. a FIT (the
-    * `ivfIndex`/`detKMeans`/`ccMemo` contract) — repeat builds over the
-    * same file-backed input reuse the selected centers. In-memory inputs
-    * skip the memo (same-schema collision risk). */
-  private val coresetMemo = scala.collection.mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]
-
+    * seed's dist2 = 0. The greedy selection is k sequential driver jobs,
+    * i.e. a fit: repeat builds over the same file-backed input reuse the
+    * selected centers ([[Memo.fit]]). */
   def kCenterCoreset(items: DataFrame, k: Int = 4): DataFrame = {
     require(k >= 1 && k <= 64, s"k must be in [1, 64]: $k")
+    coresetFits.fit(items, s"coreset|$k")(buildCoreset(items, k))
+  }
+
+  private def buildCoreset(items: DataFrame, k: Int): DataFrame = {
     val spark = items.sparkSession
     import spark.implicits._
-    val key = memoKey(items, s"coreset|$k").map(s => (spark, s))
-    key.foreach { mk =>
-      coresetMemo.synchronized {
-        coresetMemo.filterInPlace((kk, _) => !kk._1.sparkContext.isStopped)
-        coresetMemo.get(mk)
-      } match {
-        case Some(hit) => return hit
-        case None =>
-      }
-    }
     // memoized: every greedy round (and the seed collect) is a full pass
     // over the quantized vectors — without the persist, each of the k
     // driver jobs re-scans the parquet and re-runs the transform
@@ -2881,11 +2800,8 @@ object Similarity {
     // filter that matched nothing must not crash the greedy seed collect
     val seedRows = q.orderBy(asc("vec_id")).limit(1)
       .as[(Long, Seq[Long])].collect()
-    if (seedRows.isEmpty)
-      return Seq.empty[(Int, Long, Double)].toDF("rank", "vec_id", "dist2")
-    val seed = seedRows.head
-    var selected = Vector((seed._1, seed._2, 0L))
-    var exhausted = false
+    var selected = seedRows.headOption.map(s => (s._1, s._2, 0L)).toVector
+    var exhausted = selected.isEmpty
     for (_ <- 2 to k if !exhausted) {
       val selDf = broadcast(
         selected.map { case (id, v, _) => (id, v) }.toDF("sid", "sqv"))
@@ -2906,14 +2822,12 @@ object Similarity {
         selected :+= ((chosen._1, chosen._3, chosen._2))
       }
     }
-    val out = selected.zipWithIndex
+    selected.zipWithIndex
       .map { case ((id, _, d2), i) =>
         (i + 1, id, BigDecimal(d2.toDouble / 1048576.0)
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
       }
       .toDF("rank", "vec_id", "dist2")
-    key.foreach(mk => coresetMemo.synchronized { coresetMemo.update(mk, out) })
-    out
   }
 
   /** Per-label prototype outliers — SemDeDup's cousin for label QA: the

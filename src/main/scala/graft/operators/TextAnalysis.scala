@@ -356,9 +356,9 @@ object TextAnalysis {
     require(terms.nonEmpty && terms.forall(_.matches("[a-z0-9]+")),
       "terms must be plain lowercase words (SQL-literal safe)")
     // memoized: the tokenized frame feeds both the stats aggregate and the
-    // per-doc scoring scan; MEMORY_ONLY falls back to recompute, so at
-    // corpus scale this is never worse than the two tokenize passes it
-    // replaces (the hybridSearchMany shared-subtree rule)
+    // per-doc scoring scan; PlanCache.memo persists MEMORY_AND_DISK, so
+    // at corpus scale an evicted block is a local disk read, not a second
+    // tokenize pass (the hybridSearchMany shared-subtree rule)
     val toksed = PlanCache.memo(docs.withColumn("toks", expr(tokensExpr))
       .withColumn("dl", expr("size(toks)")))
     val statAggs =

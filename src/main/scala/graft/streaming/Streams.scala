@@ -933,13 +933,13 @@ object Streams {
   private def readStateDir(spark: SparkSession, path: String,
                            dir: String): DataFrame =
     // listing/footer-inference work memoized per state snapshot
-    // (LoadCache): the stamp covers the epoch dirs and their mtimes, so a
+    // (Memo.loads): the stamp covers the epoch dirs and their mtimes, so a
     // new wave, a compaction or a generation rewrite reads fresh, while
     // the 50+ maintained-state readers stop re-listing and re-inferring
     // an unchanged state on every invocation. The frame stays a lazy
     // plan — every execution re-reads the parquet files.
-    graft.operators.LoadCache.memo(spark,
-        s"state|$path|$dir|${graft.operators.LoadCache.dirStamp(spark, dir)}") {
+    graft.operators.Memo.loads(spark,
+        s"state|$path|$dir|${graft.operators.Memo.dirStamp(spark, dir)}") {
       if (dir != path) spark.read.parquet(dir)
       else {
         val rootP = new org.apache.hadoop.fs.Path(path)

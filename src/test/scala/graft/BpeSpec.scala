@@ -54,6 +54,19 @@ class BpeSpec extends AnyFunSuite {
     assert(got === want)
   }
 
+  test("same-schema in-memory corpora with the same merges each get their own trajectory") {
+    // in-memory frames carry no input files and canonicalize alike whatever
+    // their rows, so the merge memo must never serve one for the other
+    Seq("aaaa aaaa aaaa bbbb", "xyxy xyxy zzzz qqqq").foreach { text =>
+      val docs = Seq((1L, text)).toDF("doc_id", "text")
+      val vocab = text.split(" ").groupBy(identity)
+        .map { case (w, ws) => w -> ws.size.toLong }
+      val got = Bpe.bpeMerges(docs, 2)
+        .as[(Int, String, String, Long)].collect().sortBy(_._1).toSeq
+      assert(got === refBpe(vocab, 2), s"corpus '$text'")
+    }
+  }
+
   test("overlapping pairs merge greedily left-to-right (aaa -> aa + a)") {
     val docs = Seq((1L, "aa aaa aaaa")).toDF("doc_id", "text")
     // pair (a,a) counts every adjacency: 1 + 2 + 3 = 6

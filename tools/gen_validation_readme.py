@@ -47,13 +47,16 @@ def item(text):
 t = read("sbt_test.txt")
 if t:
     # anchor on scalatest's one summary line — a bare "failed N" regex
-    # would match intentional-failure log noise from negative tests
-    m = re.search(r"Tests: succeeded (\d+), failed (\d+)", t)
+    # would match intentional-failure log noise from negative tests. A
+    # canceled test (a missing optional fixture) is neither a pass nor a
+    # failure, so it is reported on its own.
+    m = re.search(r"Tests: succeeded (\d+), failed (\d+), canceled (\d+)", t)
     if not m:
         sys.exit("cannot extract scalatest summary line")
     suites = one(r"Suites: completed (\d+)", t, "suite count")
     item(f"`sbt_test.txt` — full suite: {m.group(1)} succeeded / "
-         f"{m.group(2)} failed over {suites} suites.")
+         f"{m.group(2)} failed / {m.group(3)} canceled over {suites} "
+         f"suites.")
 
 for f, sf in (("planaudit_sf0001.txt", "sf0.001"),
               ("planaudit_sf001.txt", "sf0.01")):
