@@ -110,43 +110,28 @@ object Engine {
   def readIndex(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(indexSchema).parquet(path)
 
-  /** Latest committed index version under a versioned root, from the
-    * `_LATEST` pointer file; None before the first commit. */
-  def latestVersion(spark: SparkSession, root: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_LATEST")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
-      finally in.close()
-    }
-  }
+  /** The versioned-index store: `v=N` dirs behind a `_LATEST` pointer,
+    * committed, served and pruned by the one generation protocol
+    * ([[graft.operators.GenDir]]). */
+  private val versions = new graft.operators.GenDir("_LATEST", "v=")
+
+  /** The index version a versioned root serves: the `_LATEST` pointer
+    * (healed from its staged `.tmp` mid-flip), else the highest `v=N`
+    * dir; None before the first commit. */
+  def latestVersion(spark: SparkSession, root: String): Option[Int] =
+    versions.servingGen(spark, root)
 
   /** Zero-downtime reindex: write the new index as the NEXT `v=<n>`
     * directory while readers keep serving the current one, then flip the
     * tiny `_LATEST` pointer (staged + rename — the cheap-to-make-atomic
     * step; on HDFS/object stores with atomic rename the flip is atomic,
     * and a failed build never corrupts the serving version because it
-    * never touched it). Returns the committed version number. */
-  def writeIndexVersioned(index: DataFrame, root: String): Int = {
-    val spark = index.sparkSession
-    val next = latestVersion(spark, root).getOrElse(0) + 1
-    writeIndex(index, s"$root/v=$next")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/_LATEST.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val ptr = new org.apache.hadoop.fs.Path(s"$root/_LATEST")
-    // atomic REPLACE (no delete-then-rename window for concurrent readers)
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(ptr.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    next
-  }
+    * never touched it). A partial `v=<n>` left by a crashed earlier write
+    * is cleared before this one writes there, so none of its partitions
+    * can leak into the committed version. Returns the committed version
+    * number. */
+  def writeIndexVersioned(index: DataFrame, root: String): Int =
+    versions.rewrite(index.sparkSession, root)(writeIndex(index, _))._1
 
   /** Read the latest committed version of a versioned index (a specific
     * older version stays readable as `readIndex(spark, s"$root/v=$n")` —
@@ -157,21 +142,14 @@ object Engine {
     readIndex(spark, s"$root/v=$v")
   }
 
-  /** Drop all but the newest `keep` committed versions (reclaim space after
-    * reindexes); never touches the serving version. Returns dropped ones. */
+  /** Drop all but `keep` versions (reclaim space after reindexes); never
+    * touches the serving version, and with `keep >= 2` never the version
+    * it replaced (stamped at commit time), so a crashed uncommitted
+    * `v=<n>` above the serving one is dropped before the genuine
+    * predecessor. Returns the dropped versions. */
   def pruneIndexVersions(spark: SparkSession, root: String,
-                         keep: Int = 2): Seq[Int] = {
-    require(keep >= 1, "must keep at least the serving version")
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(rootP).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.stripPrefix("v=").toInt).sorted
-    val drop = versions.dropRight(keep)
-    drop.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/v=$v"), true))
-    drop
-  }
+                         keep: Int = 2): Seq[Int] =
+    versions.pruneGens(spark, root, keep)
 
   /** Compact the index's small files: every `source=` partition holding more
     * than `maxFiles` data files is rewritten as ONE file (a source partition

@@ -53,8 +53,9 @@ private[graft] object CellStore {
   private def render(m: Map[Int, Int]): String =
     m.toSeq.sorted.map { case (c, v) => s"$c=$v" }.mkString("\n")
 
-  /** The serving manifest, mid-flip-healed; None for a legacy flat
-    * cell-partitioned dir (or a dir that is not a cell store at all). */
+  /** The serving manifest, mid-flip-healed; None for a flat table (the
+    * codes a plain `PqIndex.save` writes) or a dir that is not a cell
+    * store at all. */
   def manifest(spark: SparkSession, dir: String): Option[Map[Int, Int]] =
     GenDir.readAtomicFileHealed(spark, manifestPath(dir)).map(parse)
 
@@ -63,9 +64,9 @@ private[graft] object CellStore {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Read the serving snapshot: the manifest's pinned version dir per
-    * cell (`v` never escapes). A manifest-less dir reads as the legacy
-    * flat layout — plain partition discovery, exactly the pre-versioned
-    * contract, so in-memory saves and old fixtures keep working.
+    * cell (`v` never escapes). A manifest-less dir reads as a flat
+    * table — plain partition discovery, the layout a plain
+    * `PqIndex.save` writes its codes in.
     *
     * A dir that HAS the versioned layout but no readable manifest is a
     * reader caught inside the `_CELLS` flip (delete-then-rename on
@@ -110,11 +111,19 @@ private[graft] object CellStore {
       render(cells.map(_ -> 1).toMap))
   }
 
+  /** The serving manifest of a store [[write]] created, read through the
+    * mid-flip retry; fails loudly on a dir with no versioned layout. */
+  private def servingManifest(spark: SparkSession,
+                              dir: String): Map[Int, Int] =
+    manifestRetryingMidFlip(spark, dir).getOrElse(
+      throw new IllegalStateException(s"$dir is not a versioned cell " +
+        "store (no _CELLS manifest) — only CellStore.write creates one"))
+
   private def manifestRetryingMidFlip(spark: SparkSession,
                                       dir: String): Option[Map[Int, Int]] =
     manifest(spark, dir) match {
       case some @ Some(_) => some
-      case None if !hasVersionedLayout(spark, dir) => None // legacy flat
+      case None if !hasVersionedLayout(spark, dir) => None // flat table
       case None =>
         var m: Option[Map[Int, Int]] = None
         var attempt = 0
@@ -130,7 +139,7 @@ private[graft] object CellStore {
 
   /** Whether `dir` carries the versioned `cell=c/v=k` layout — the bit
     * that distinguishes a mid-flip manifest blackout from a genuine
-    * legacy flat dir. Only consulted on the manifest-missing path. */
+    * flat table. Only consulted on the manifest-missing path. */
   private def hasVersionedLayout(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, dir)
@@ -160,29 +169,13 @@ private[graft] object CellStore {
       .flatMap(_.getPath.getName.stripPrefix("v=").toIntOption).sorted
   }
 
-  /** One-time migration of a legacy flat cell dir (part files directly
-    * under `cell=c/`) into the versioned layout — a full rewrite, paid
-    * once, only ever hit by pre-versioned stores mutated in place. */
-  def ensureVersioned(spark: SparkSession, dir: String): Unit =
-    if (manifest(spark, dir).isEmpty) {
-      val rows = spark.read.parquet(dir)
-      val tmp = s"$dir.__convert"
-      rows.write.mode("overwrite").parquet(tmp)
-      val staged = spark.read.parquet(tmp)
-      val fs = fsOf(spark, dir)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      write(staged, dir)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    }
-
   /** The mutation primitive: replace the CONTENT of `touched` cells with
     * `stagedRows` (which must contain rows of touched cells only — a cell
     * whose rows all vanished is dropped from the manifest). Appends new
     * version dirs, flips the manifest, prunes old versions keep-2. */
   def rewriteCells(spark: SparkSession, dir: String, touched: Seq[Int],
                    stagedRows: DataFrame): Unit = {
-    val man = manifest(spark, dir).getOrElse(throw new IllegalStateException(
-      s"cell store at $dir has no manifest — run ensureVersioned first"))
+    val man = servingManifest(spark, dir)
     import spark.implicits._
     // next version per touched cell: past the serving one AND any orphan
     // dirs a crashed attempt left (the retry must never append into a
@@ -218,24 +211,15 @@ private[graft] object CellStore {
 
   /** Per-cell physical layout of the SERVING snapshot — (cell, n_files,
     * bytes) from the manifest's pinned version dirs; the `ivfCellStats`
-    * listing, manifest-aware. */
+    * listing. The manifest is read through the same mid-flip retry as
+    * [[read]], so a stats reader racing a flip still sees a snapshot. */
   def cellFileStats(spark: SparkSession,
                     dir: String): Seq[(Int, Int, Long)] = {
     val fs = fsOf(spark, dir)
-    def statsOf(p: org.apache.hadoop.fs.Path): (Int, Long) = {
-      val files = fs.listStatus(p)
+    servingManifest(spark, dir).toSeq.sorted.map { case (c, v) =>
+      val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/cell=$c/v=$v"))
         .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-      (files.length, files.map(_.getLen).sum)
-    }
-    manifest(spark, dir) match {
-      case Some(m) => m.toSeq.sorted.map { case (c, v) =>
-        val (n, b) = statsOf(new org.apache.hadoop.fs.Path(s"$dir/cell=$c/v=$v"))
-        (c, n, b)
-      }
-      case None => listCellDirs(spark, dir).sorted.map { c =>
-        val (n, b) = statsOf(new org.apache.hadoop.fs.Path(s"$dir/cell=$c"))
-        (c, n, b)
-      }
+      (c, files.length, files.map(_.getLen).sum)
     }
   }
 }

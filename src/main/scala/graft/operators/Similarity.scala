@@ -614,7 +614,6 @@ object Similarity {
                               tableDir: String, table: DataFrame,
                               newRows: DataFrame, deltaIds: DataFrame,
                               rowCols: Seq[String]): Unit = {
-    CellStore.ensureVersioned(spark, tableDir)
     val cur = CellStore.read(spark, tableDir)
     val oldCells = cur
       .join(broadcast(deltaIds), Seq("vec_id"))
@@ -668,7 +667,6 @@ object Similarity {
   private def deleteFromCellTable(spark: org.apache.spark.sql.SparkSession,
                                   tableDir: String, ids: DataFrame,
                                   rowCols: Seq[String]): Unit = {
-    CellStore.ensureVersioned(spark, tableDir)
     val table = CellStore.read(spark, tableDir)
     // bounded collect: cell domain is nLists by construction
     val touched = table
@@ -690,8 +688,10 @@ object Similarity {
     * convention — every parameter that changes the index content must be in
     * `key`), guard the build with the `_INDEX_READY` marker + build lock
     * (double-checked, no non-local return inside the lock), and hand
-    * `build` the index dir. One definition so a marker-protocol fix lands
-    * everywhere at once. */
+    * `build` the index dir — wiped first, so no generation or pointer a
+    * crashed earlier attempt left can leak into the rebuilt index and
+    * every retried build is identical. One definition so a
+    * marker-protocol fix lands everywhere at once. */
   private def ensureIndexDir(spark: org.apache.spark.sql.SparkSession,
                              prefix: String, key: String)
                             (build: String => Unit): String = {
@@ -704,6 +704,7 @@ object Similarity {
     if (fs.exists(marker)) return index
     graft.TmpCache.withBuildLock(base) {
       if (!fs.exists(marker)) {
+        fs.delete(new org.apache.hadoop.fs.Path(index), true)
         build(index)
         fs.create(marker, true).close()
       }
@@ -714,12 +715,13 @@ object Similarity {
   // ------------------------------------- generation-pointer serving —
 
   /** Zero-downtime generation serving for the persisted ANN index family
-    * (the `Engine.writeIndexVersioned` pattern applied to the IVF / IVF-PQ
-    * / SQ8 / BQ stores): the index ROOT holds numbered generation dirs
+    * (the protocol `Engine.writeIndexVersioned` shares, applied to the
+    * IVF / IVF-PQ / SQ8 / BQ stores): the index ROOT holds numbered generation dirs
     * (`gen=N/`) plus a tiny `_GEN` pointer file naming the serving one.
     * Readers resolve the pointer once per query ([[resolveIndexDir]]) and
     * read only that generation; STRUCTURAL rewrites (retrain, compact,
-    * the full-table SQ/BQ/flat rewrites) build the NEXT generation
+    * the full-table SQ/BQ/flat rewrites) go through [[GenDir.rewrite]]:
+    * build the NEXT generation
     * completely beside the serving one and then flip the pointer (staged
     * `_GEN.tmp` + rename — atomic on HDFS/object stores with atomic
     * rename), so a concurrent probe never sees a missing or
@@ -749,39 +751,10 @@ object Similarity {
   def resolveIndexDir(spark: org.apache.spark.sql.SparkSession,
                       root: String): String = GenDir.resolve(spark, root)
 
-  /** Start building the NEXT generation: returns (number, dir) with any
-    * partial dir from a crashed earlier build cleared. The serving
-    * generation is never touched. */
-  private def beginGen(spark: org.apache.spark.sql.SparkSession,
-                       root: String): (Int, String) =
-    GenDir.beginGen(spark, root)
-
-  /** Flip the `_GEN` pointer to a COMPLETELY built generation — staged
-    * tmp write + ATOMIC REPLACE rename (`FileContext` with
-    * `Options.Rename.OVERWRITE`, the POSIX/HDFS atomic-rename path): a
-    * delete-then-rename flip would leave a pointerless window in which a
-    * concurrent reader of a pure-generation root resolves to nothing.
-    * The zero-downtime spec probes in a loop WHILE a retrain flips this
-    * pointer. */
-  private def commitGen(spark: org.apache.spark.sql.SparkSession,
-                        root: String, n: Int): Unit =
-    GenDir.commitGen(spark, root, n)
-
   /** Drop all but the newest `keep` generations (the serving one plus one
     * predecessor for in-flight readers, by default). */
   def pruneGens(spark: org.apache.spark.sql.SparkSession, root: String,
                 keep: Int = 2): Seq[Int] = GenDir.pruneGens(spark, root, keep)
-
-  /** Wipe an index root before a from-scratch ensure* build: the build
-    * body owns the dir exclusively (no `_INDEX_READY` marker yet, build
-    * lock held), and starting from a clean slate makes every retried
-    * build identical — no stale generation or pointer from a crashed
-    * earlier attempt can leak into the rebuilt index. */
-  private def resetIndexRoot(spark: org.apache.spark.sql.SparkSession,
-                             root: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
 
   /** Copy a TINY parquet table (centroids, codebooks — nLists / m x ksub
     * rows) into a new generation that leaves it unchanged. */
@@ -820,12 +793,10 @@ object Similarity {
     // predicate change can never serve a stale deleted-set from cache
     ensureIndexDir(spark, "detivfdel", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$nLists|$iters|" +
           s"del=mod${delMod}eq$delRes|v3") { index =>
-      resetIndexRoot(spark, index)
-      val (g1n, g1) = beginGen(spark, index)
       val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
       val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      detIvfIndex(w0, nLists, iters).save(g1)
-      commitGen(spark, index, g1n)
+      val (_, g1) = GenDir.rewrite(spark, index)(
+        detIvfIndex(w0, nLists, iters).save(_))
       upsertIvfAt(spark, g1, w1)
       deleteIvfAt(spark, g1,
         embeddings.filter(pmod(col("vec_id"), lit(delMod)) === delRes)
@@ -851,13 +822,13 @@ object Similarity {
   def retrainIvfAt(spark: org.apache.spark.sql.SparkSession, root: String,
                    nLists: Int = 8, iters: Int = 3): Unit = {
     val cur = resolveIndexDir(spark, root)
-    val (n, next) = beginGen(spark, root)
-    val stored = CellStore.read(spark, s"$cur/assignments")
-      .select("vec_id", "embedding")
-    val idx = detIvfIndex(stored, nLists, iters)
-    CellStore.write(idx.assignments, s"$next/assignments")
-    idx.centroids.write.mode("overwrite").parquet(s"$next/centroids")
-    commitGen(spark, root, n)
+    GenDir.rewrite(spark, root) { next =>
+      val stored = CellStore.read(spark, s"$cur/assignments")
+        .select("vec_id", "embedding")
+      val idx = detIvfIndex(stored, nLists, iters)
+      CellStore.write(idx.assignments, s"$next/assignments")
+      idx.centroids.write.mode("overwrite").parquet(s"$next/centroids")
+    }
     pruneGens(spark, root)
   }
 
@@ -892,17 +863,17 @@ object Similarity {
     val sub = detIvfIndex(hot, 2, iters)
     val remap = when(col("cell") === 0, lit(cell))
       .otherwise(lit(newId)).as("cell")
-    val (n, next) = beginGen(spark, root)
-    CellStore.write(
-      asg.filter(col("cell") =!= cell)
-        .unionByName(sub.assignments
-          .select(col("vec_id"), col("embedding"), remap)),
-      s"$next/assignments")
-    cents.filter(col("cell") =!= cell)
-      .unionByName(sub.centroids.select(remap, col("centroid")))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$next/centroids")
-    commitGen(spark, root, n)
+    GenDir.rewrite(spark, root) { next =>
+      CellStore.write(
+        asg.filter(col("cell") =!= cell)
+          .unionByName(sub.assignments
+            .select(col("vec_id"), col("embedding"), remap)),
+        s"$next/assignments")
+      cents.filter(col("cell") =!= cell)
+        .unionByName(sub.centroids.select(remap, col("centroid")))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$next/centroids")
+    }
     pruneGens(spark, root)
   }
 
@@ -931,7 +902,7 @@ object Similarity {
     * index equals a fresh [[detIvfIndex]] on the full corpus — which is
     * what makes the probe hash-oracled (detKmeansOracle with
     * fitSrc = nv), unlike the frozen-centroid lifecycles whose fit wave
-    * is the even half. The initial reset wipes any partial state a
+    * is the even half. [[ensureIndexDir]] wipes any partial state a
     * crashed earlier build left (including a half-built next
     * generation), so the retry is from-scratch clean. */
   def ensurePersistedDetIvfRetrained(spark: org.apache.spark.sql.SparkSession,
@@ -939,12 +910,10 @@ object Similarity {
                                      nLists: Int = 8, iters: Int = 3): String = {
     ensureIndexDir(spark, "detivfrtr", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$nLists|$iters|" +
           "retrain|v3") { index =>
-      resetIndexRoot(spark, index)
-      val (g1n, g1) = beginGen(spark, index)
       val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
       val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      detIvfIndex(w0, nLists, iters).save(g1)
-      commitGen(spark, index, g1n)
+      val (_, g1) = GenDir.rewrite(spark, index)(
+        detIvfIndex(w0, nLists, iters).save(_))
       upsertIvfAt(spark, g1, w1)
       retrainIvfAt(spark, index, nLists, iters)
     }
@@ -964,12 +933,9 @@ object Similarity {
       : (String, Int, Int) = {
     val root = ensureIndexDir(spark, "detivfsplit",
       s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$nLists|$iters|split|v3") { index =>
-      resetIndexRoot(spark, index)
-      val (g1n, g1) = beginGen(spark, index)
       val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
       val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      detIvfIndex(w0, nLists, iters).save(g1)
-      commitGen(spark, index, g1n)
+      GenDir.rewrite(spark, index)(detIvfIndex(w0, nLists, iters).save(_))
       upsertIvfAt(spark, index, w1)
       splitHottestIvfCellAt(spark, index)
     }
@@ -1034,12 +1000,12 @@ object Similarity {
   def compactIvfAt(spark: org.apache.spark.sql.SparkSession,
                    root: String): Unit = {
     val cur = resolveIndexDir(spark, root)
-    val (n, next) = beginGen(spark, root)
-    CellStore.write(
-      CellStore.read(spark, s"$cur/assignments").repartition(col("cell")),
-      s"$next/assignments")
-    copyTinyParquet(spark, s"$cur/centroids", s"$next/centroids")
-    commitGen(spark, root, n)
+    GenDir.rewrite(spark, root) { next =>
+      CellStore.write(
+        CellStore.read(spark, s"$cur/assignments").repartition(col("cell")),
+        s"$next/assignments")
+      copyTinyParquet(spark, s"$cur/centroids", s"$next/centroids")
+    }
     pruneGens(spark, root)
   }
 
@@ -1051,16 +1017,15 @@ object Similarity {
   def compactIvfPqAt(spark: org.apache.spark.sql.SparkSession,
                      root: String): Unit = {
     val cur = resolveIndexDir(spark, root)
-    val (n, next) = beginGen(spark, root)
-    CellStore.write(
-      CellStore.read(spark, s"$cur/coarse/assignments").repartition(col("cell")),
-      s"$next/coarse/assignments")
-    copyTinyParquet(spark, s"$cur/coarse/centroids", s"$next/coarse/centroids")
-    CellStore.write(
-      CellStore.read(spark, s"$cur/pq/codes").repartition(col("cell")),
-      s"$next/pq/codes")
-    copyTinyParquet(spark, s"$cur/pq/codebooks", s"$next/pq/codebooks")
-    commitGen(spark, root, n)
+    GenDir.rewrite(spark, root) { next =>
+      CellStore.write(CellStore.read(spark, s"$cur/coarse/assignments")
+          .repartition(col("cell")), s"$next/coarse/assignments")
+      copyTinyParquet(spark, s"$cur/coarse/centroids", s"$next/coarse/centroids")
+      CellStore.write(
+        CellStore.read(spark, s"$cur/pq/codes").repartition(col("cell")),
+        s"$next/pq/codes")
+      copyTinyParquet(spark, s"$cur/pq/codebooks", s"$next/pq/codebooks")
+    }
     pruneGens(spark, root)
   }
 
@@ -1080,13 +1045,11 @@ object Similarity {
                                       nLists: Int = 8, iters: Int = 3): String = {
     ensureIndexDir(spark, "detivfmnt", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$nLists|$iters|" +
           "waves=4|compact|v3") { index =>
-      resetIndexRoot(spark, index)
-      val (g1n, g1) = beginGen(spark, index)
       val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
       val w1 = embeddings.filter(pmod(col("vec_id"), lit(4)) === 1)
       val w3 = embeddings.filter(pmod(col("vec_id"), lit(4)) === 3)
-      detIvfIndex(w0, nLists, iters).save(g1)
-      commitGen(spark, index, g1n)
+      val (_, g1) = GenDir.rewrite(spark, index)(
+        detIvfIndex(w0, nLists, iters).save(_))
       upsertIvfAt(spark, g1, w1)
       upsertIvfAt(spark, g1, w3)
       compactIvfAt(spark, index)
@@ -1127,16 +1090,13 @@ object Similarity {
                                   root: String, rows: DataFrame,
                                   refuseEmpty: Boolean): Unit = {
     val legacyRoot = resolveIndexDir(spark, root) == root
-    val (n, next) = beginGen(spark, root)
-    rows.write.mode("overwrite").parquet(next)
-    if (refuseEmpty && spark.read.parquet(next).isEmpty) {
-      val p = new org.apache.hadoop.fs.Path(next)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      throw new IllegalArgumentException(
-        s"delete would empty the entire index at $root — refusing " +
-          "(drop the index directory instead if that is intended)")
+    GenDir.rewrite(spark, root) { next =>
+      rows.write.mode("overwrite").parquet(next)
+      if (refuseEmpty && spark.read.parquet(next).isEmpty)
+        throw new IllegalArgumentException(
+          s"delete would empty the entire index at $root — refusing " +
+            "(drop the index directory instead if that is intended)")
     }
-    commitGen(spark, root, n)
     pruneGens(spark, root)
     if (legacyRoot) {
       // one-time conversion: drop the legacy root-level files (their rows
@@ -1208,12 +1168,9 @@ object Similarity {
   def ensurePersistedSq(spark: org.apache.spark.sql.SparkSession,
                         embeddings: DataFrame, sfDir: String): String = {
     ensureIndexDir(spark, "sqidx", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|v3") { index =>
-      resetIndexRoot(spark, index)
-      val (g1n, g1) = beginGen(spark, index)
       val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
       val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      saveSqIndex(sqIndex(w0), g1)
-      commitGen(spark, index, g1n)
+      GenDir.rewrite(spark, index)(saveSqIndex(sqIndex(w0), _))
       upsertSqAt(spark, index, w1)
     }
   }
@@ -1230,12 +1187,9 @@ object Similarity {
                                delMod: Int = 5, delRes: Int = 3): String = {
     ensureIndexDir(spark, "sqidxdel", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|" +
         s"del=mod${delMod}eq$delRes|v3") { index =>
-      resetIndexRoot(spark, index)
-      val (g1n, g1) = beginGen(spark, index)
       val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
       val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      saveSqIndex(sqIndex(w0), g1)
-      commitGen(spark, index, g1n)
+      GenDir.rewrite(spark, index)(saveSqIndex(sqIndex(w0), _))
       upsertSqAt(spark, index, w1)
       deleteSqAt(spark, index,
         embeddings.filter(pmod(col("vec_id"), lit(delMod)) === delRes)
@@ -1410,14 +1364,10 @@ object Similarity {
                             embeddings: DataFrame, sfDir: String,
                             nLists: Int = 8, iters: Int = 3): String = {
     ensureIndexDir(spark, "detivf", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$nLists|$iters|v3") { index =>
-      // crash-convergent: the reset wipes any partial earlier attempt, so
-      // every retried build is identical from a clean slate
-      resetIndexRoot(spark, index)
-      val (g1n, g1) = beginGen(spark, index)
       val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
       val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      detIvfIndex(w0, nLists, iters).save(g1)
-      commitGen(spark, index, g1n)
+      val (_, g1) = GenDir.rewrite(spark, index)(
+        detIvfIndex(w0, nLists, iters).save(_))
       upsertIvfAt(spark, g1, w1)
     }
   }
@@ -2107,12 +2057,9 @@ object Similarity {
                         embeddings: DataFrame, sfDir: String,
                         numBits: Int = 63): String = {
     ensureIndexDir(spark, "bqidx", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$numBits|v3") { index =>
-      resetIndexRoot(spark, index)
-      val (g1n, g1) = beginGen(spark, index)
       val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
       val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      saveBqIndex(bqIndex(w0, numBits), g1)
-      commitGen(spark, index, g1n)
+      GenDir.rewrite(spark, index)(saveBqIndex(bqIndex(w0, numBits), _))
       upsertBqAt(spark, index, w1, numBits)
     }
   }
@@ -2130,12 +2077,9 @@ object Similarity {
                                delRes: Int = 3): String = {
     ensureIndexDir(spark, "bqidxdel", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|" +
         s"$numBits|del=mod${delMod}eq$delRes|v3") { index =>
-      resetIndexRoot(spark, index)
-      val (g1n, g1) = beginGen(spark, index)
       val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
       val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      saveBqIndex(bqIndex(w0, numBits), g1)
-      commitGen(spark, index, g1n)
+      GenDir.rewrite(spark, index)(saveBqIndex(bqIndex(w0, numBits), _))
       upsertBqAt(spark, index, w1, numBits)
       deleteBqAt(spark, index,
         embeddings.filter(pmod(col("vec_id"), lit(delMod)) === delRes)
@@ -2249,7 +2193,7 @@ object Similarity {
     * the f32 rounding of the saved coarse centroids. The codes land
     * CELL-PARTITIONED ([[savePqCellPartitioned]] — the IVFADC layout that
     * makes the serving scan partition-pruned) in a `gen=1` dir behind the
-    * `_GEN` pointer; crash-convergent via the reset-then-rebuild rule;
+    * `_GEN` pointer; crash-convergent via [[ensureIndexDir]]'s wipe;
     * same marker + build lock + loud source stamp as the det-IVF cache. */
   def ensurePersistedIvfPq(spark: org.apache.spark.sql.SparkSession,
                            embeddings: DataFrame, sfDir: String,
@@ -2263,8 +2207,8 @@ object Similarity {
     }
   }
 
-  /** The shared gen=1 build for the persisted IVF-PQ lifecycles: reset
-    * the root, fit BOTH trained artifacts on the even wave, save them
+  /** The shared gen=1 build for the persisted IVF-PQ lifecycles: fit
+    * BOTH trained artifacts on the even wave, save them
     * cell-partitioned under `gen=1`, flip the pointer, then upsert each
     * given wave against the frozen artifacts IN ORDER (coarse first —
     * the assignments are the source of truth the code rows take their
@@ -2274,13 +2218,12 @@ object Similarity {
                              upsertWaves: Seq[DataFrame],
                              nLists: Int, kmIters: Int, m: Int,
                              ksub: Int, pqIters: Int): String = {
-    resetIndexRoot(spark, index)
-    val (g1n, g1) = beginGen(spark, index)
     val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
-    detIvfIndex(w0, nLists, kmIters).save(s"$g1/coarse")
-    savePqCellPartitioned(pqIndex(w0, m, ksub, pqIters),
-      CellStore.read(spark, s"$g1/coarse/assignments"), s"$g1/pq")
-    commitGen(spark, index, g1n)
+    val (_, g1) = GenDir.rewrite(spark, index) { g =>
+      detIvfIndex(w0, nLists, kmIters).save(s"$g/coarse")
+      savePqCellPartitioned(pqIndex(w0, m, ksub, pqIters),
+        CellStore.read(spark, s"$g/coarse/assignments"), s"$g/pq")
+    }
     upsertWaves.foreach { w =>
       upsertIvfAt(spark, s"$g1/coarse", w)
       upsertCellPqAt(spark, s"$g1/pq",
@@ -2333,13 +2276,13 @@ object Similarity {
                      nLists: Int = 8, kmIters: Int = 3, m: Int = 16,
                      ksub: Int = 16, pqIters: Int = 2): Unit = {
     val cur = resolveIndexDir(spark, root)
-    val (n, next) = beginGen(spark, root)
-    val stored = CellStore.read(spark, s"$cur/coarse/assignments")
-      .select("vec_id", "embedding")
-    detIvfIndex(stored, nLists, kmIters).save(s"$next/coarse")
-    savePqCellPartitioned(pqIndex(stored, m, ksub, pqIters),
-      CellStore.read(spark, s"$next/coarse/assignments"), s"$next/pq")
-    commitGen(spark, root, n)
+    GenDir.rewrite(spark, root) { next =>
+      val stored = CellStore.read(spark, s"$cur/coarse/assignments")
+        .select("vec_id", "embedding")
+      detIvfIndex(stored, nLists, kmIters).save(s"$next/coarse")
+      savePqCellPartitioned(pqIndex(stored, m, ksub, pqIters),
+        CellStore.read(spark, s"$next/coarse/assignments"), s"$next/pq")
+    }
     pruneGens(spark, root)
   }
 
@@ -2357,8 +2300,6 @@ object Similarity {
                                     pqIters: Int = 2): String = {
     ensureIndexDir(spark, "ivfpqrtr", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|" +
         s"$nLists|$kmIters|$m|$ksub|$pqIters|retrain|v3") { index =>
-      // the initial reset (inside buildIvfPqGen1) wipes any partial next
-      // generation a crashed earlier build left, so the retry is clean
       buildIvfPqGen1(spark, index, embeddings,
         Seq(embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)),
         nLists, kmIters, m, ksub, pqIters)

@@ -989,10 +989,8 @@ object Streams {
                              partCols: Seq[String] = Seq("epoch"))
                             (make: DataFrame => DataFrame): Unit = {
     val gd = graft.operators.GenDir
-    val (n, next) = gd.beginGen(spark, path)
-    make(epochsAt(spark, path)).write.mode("overwrite")
-      .partitionBy(partCols: _*).parquet(next)
-    gd.commitGen(spark, path, n)
+    val (n, _) = gd.rewrite(spark, path)(make(epochsAt(spark, path))
+      .write.mode("overwrite").partitionBy(partCols: _*).parquet(_))
     gd.pruneGens(spark, path)
     // the legacy root layout is "generation 0": once two rewrites old
     // (no reader from before the FIRST flip can still be in flight under
@@ -1391,9 +1389,7 @@ object Streams {
   private def replaceState(spark: SparkSession, path: String,
                            df: DataFrame): Unit = {
     val gd = graft.operators.GenDir
-    val (n, next) = gd.beginGen(spark, path)
-    df.write.mode("overwrite").parquet(next)
-    gd.commitGen(spark, path, n)
+    gd.rewrite(spark, path)(df.write.mode("overwrite").parquet(_))
     gd.pruneGens(spark, path)
   }
 

@@ -435,6 +435,75 @@ class EngineSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
+  test("versioned index: a crashed writer's partial next version is never served") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ver").toString + "/idx"
+    Engine.writeIndexVersioned(index, root)
+    // a writer that died mid-write left one partition of v=2 behind
+    Engine.writeIndex(index.limit(1).withColumn("source", lit("stale")), s"$root/v=2")
+    val src = index.select("source").as[String].head()
+    val batch = index.filter($"source" === src)
+    Engine.writeIndexVersioned(batch, root)
+    val served = Engine.readIndexLatest(spark, root)
+    assert(served.filter($"source" === "stale").count() == 0)
+    assert(served.count() == batch.count())
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
+  test("versioned index: prune keeps the genuine predecessor, drops a crashed version above it") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ver").toString + "/idx"
+    Engine.writeIndexVersioned(index, root)
+    Engine.writeIndexVersioned(index, root)
+    // a crashed, never-committed v=3 above the serving v=2
+    Engine.writeIndex(index.limit(1), s"$root/v=3")
+    assert(Engine.pruneIndexVersions(spark, root, keep = 2) == Seq(3))
+    assert(new java.io.File(s"$root/v=1").exists())
+    assert(!new java.io.File(s"$root/v=3").exists())
+    assert(Engine.latestVersion(spark, root).contains(2))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
+  test("versioned index: readers racing 40 back-to-back commits always see a committed version") {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
+    val root = java.nio.file.Files.createTempDirectory("graft-ver").toString + "/idx"
+    val src = index.select("source").as[String].head()
+    val batch = index.filter($"source" === src).coalesce(1)
+    val committed = new AtomicInteger(Engine.writeIndexVersioned(batch, root))
+    val done = new AtomicBoolean(false)
+    val reads = new AtomicLong(0)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val servedVersion = "/v=(\\d+)/".r
+    def reader(read: () => Int): Thread = {
+      val t = new Thread(() =>
+        while (!done.get) {
+          try {
+            val v = read()
+            // read the counter AFTER the version: the writer bumps it only
+            // once its commit returned, so a committed v is at most one
+            // ahead of it
+            val c = committed.get
+            if (v < 1 || v > c + 1) failures.add(s"served v=$v with $c committed")
+          } catch { case e: Throwable => failures.add(e.toString) }
+          reads.incrementAndGet()
+        })
+      t.start()
+      t
+    }
+    val readers = Seq(
+      reader(() => Engine.latestVersion(spark, root).getOrElse(-1)),
+      reader(() => servedVersion.findFirstMatchIn(
+        Engine.readIndexLatest(spark, root).inputFiles.head).get.group(1).toInt))
+    try (1 to 40).foreach(_ => committed.set(Engine.writeIndexVersioned(batch, root)))
+    finally {
+      done.set(true)
+      readers.foreach(_.join())
+    }
+    assert(failures.isEmpty,
+      s"${failures.size} of ${reads.get} reads failed, e.g. ${failures.peek()}")
+    assert(reads.get > 40)
+    assert(Engine.latestVersion(spark, root).contains(41))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
   test("stats: per-source counts sum to total; dimension constant") {
     val bySource = Engine.statsBySource(index).as[(String, Long)].collect().toMap
     val total = Engine.statsTotal(index).collect()(0)

@@ -78,4 +78,28 @@ class GenDirSpec extends AnyFunSuite {
     assert(dirExists(s"$root/gen=4") && dirExists(s"$root/gen=6"))
     assert(GenDir.resolve(spark, root) == s"$root/gen=6")
   }
+
+  test("rewrite: a throwing write leaves the serving generation untouched and no partial dir") {
+    val root = Files.createTempDirectory("graft-gendir").toString + "/store"
+    val (n1, d1) = GenDir.rewrite(spark, root)(writeGen(_, 1))
+    assert(n1 == 1 && GenDir.resolve(spark, root) == d1)
+    val boom = intercept[IllegalStateException] {
+      GenDir.rewrite(spark, root) { d =>
+        writeGen(d, 2)
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(boom.getMessage == "build failed")
+    assert(GenDir.currentGen(spark, root).contains(1))
+    assert(GenDir.resolve(spark, root) == s"$root/gen=1")
+    assert(!dirExists(s"$root/gen=2"), "the failed build's dir must be deleted")
+    assert(spark.read.parquet(GenDir.resolve(spark, root))
+      .select("v").as[String].head() == "v1")
+    // the next rewrite commits normally, and gen 1 stays as its predecessor
+    val (n2, d2) = GenDir.rewrite(spark, root)(writeGen(_, 2))
+    assert(n2 == 2 && GenDir.resolve(spark, root) == d2)
+    assert(spark.read.parquet(d2).select("v").as[String].head() == "v2")
+    assert(GenDir.pruneGens(spark, root).isEmpty)
+    assert(dirExists(s"$root/gen=1"))
+  }
 }
