@@ -3,13 +3,16 @@ package graft
 import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
-import graft.functions.{ByteDot, ChunkText, CosineSimilarity, HashEmbed, HilbertIndex, JaroWinkler, MinGramHash, MinHashSig, RandProjBuckets, SignSketch, SimHash, SqDist, TermCounts, WordShingles}
+import graft.functions.{Adc, ByteDot, ChunkText, CosineSimilarity, DotTable, HashEmbed, HilbertIndex, JaroWinkler, L2Normalize, MinGramHash, MinHashSig, NearestCell, PqEncode, RandProjBuckets, Residual, SignSketch, SimHash, SqDist, TermCounts, VecTables, WordShingles}
 
 /** Column-API + SQL-registry surface for the custom Catalyst expressions.
   *
-  * Everything else in the engine is stock `org.apache.spark.sql.functions` —
-  * these three are the only operators the reference computes that Spark's
-  * built-ins can't express efficiently (SURVEY §2.12, §7.3).
+  * Everything else in the engine is stock `org.apache.spark.sql.functions`;
+  * these are the operators Spark's built-ins cannot express efficiently
+  * (SURVEY §2.12, §7.3), each a codegen'd expression in `graft.functions`.
+  * `GraftExtensions.functionSpecs` lists the ones also registered for
+  * SQL; the vector-quantization kernels take a driver-side table
+  * ([[VecTables]]) and have a Column form only.
   */
 object GraftFunctions {
 
@@ -79,6 +82,28 @@ object GraftFunctions {
     * pass instead of a per-term interpreted `filter` (BM25/TF-IDF extension). */
   def term_counts(tokens: Column, terms: Seq[String]): Column =
     col(TermCounts(ex(tokens), terms))
+
+  /** L2-normalize a vector in f64; a zero vector passes through widened. */
+  def l2_normalize(v: Column): Column = col(L2Normalize(ex(v)))
+
+  /** Cell id of the nearest centroid of a single-table `cells`. */
+  def nearest_cell(nv: Column, cells: VecTables): Column =
+    col(NearestCell(ex(nv), cells))
+
+  /** PQ codes (`array<int>`) of a vector against per-subspace codebooks. */
+  def pq_encode(nv: Column, books: VecTables): Column =
+    col(PqEncode(ex(nv), books))
+
+  /** Dots (or, with `cosine`, cosines) of a vector with a table's rows. */
+  def dot_table(v: Column, table: VecTables, cosine: Boolean = false): Column =
+    col(DotTable(ex(v), table, cosine))
+
+  /** A vector minus row `pos` (0-based) of a centroid table. */
+  def residual(nv: Column, pos: Column, cents: VecTables): Column =
+    col(Residual(ex(nv), ex(pos), cents))
+
+  /** The ADC score: `lt[s][codes[s]]` summed subspace-ascending. */
+  def adc(lt: Column, codes: Column): Column = col(Adc(ex(lt), ex(codes)))
 
   /** Register every custom expression as a temp SQL function in an existing
     * session. Idempotent. (Sessions created from config should prefer

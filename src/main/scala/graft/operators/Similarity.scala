@@ -3,11 +3,12 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, Normalizer}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GraftFunctions.cosine_similarity
+import graft.GraftFunctions.{adc, cosine_similarity, dot_table, l2_normalize, nearest_cell, pq_encode, residual}
+import graft.functions.VecTables
 
 /** Similarity-search operators over an embedding column (`array<float>`):
   *
@@ -524,33 +525,20 @@ object Similarity {
     * Euclidean on the L2-normalized vector, the KMeans assignment rule
     * (centroids are cell means, NOT unit vectors, so argmax-cosine would
     * mis-assign; the |c|^2 term matters) — without refitting. The centroid
-    * table is tiny by construction (nLists rows): it collects into one
-    * literal expression, so assignment is map-only — no join, no shuffle,
-    * no MLlib model object needed (a loaded index carries only the table).
+    * table is tiny by construction (nLists rows): it collects into the
+    * `nearest_cell` kernel's table, so assignment is map-only — no join,
+    * no shuffle, no MLlib model object needed (a loaded index carries only
+    * the table).
     * Ties break to the lowest cell id; a zero vector passes through
     * un-normalized (the Normalizer's behavior at build time). */
   def assignCells(vectors: DataFrame, centroids: DataFrame,
                   embCol: String = "embedding"): DataFrame = {
     val cents = centroids.select("cell", "centroid").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1)))
-      .sortBy(_._1)
+      .map(r => (r.getInt(0), r.getSeq[Float](1).map(_.toDouble).toArray))
     require(cents.nonEmpty, "empty centroid table")
-    val centsSql = cents.map { case (_, c) =>
-      c.map(v => v.toDouble.toString).mkString("array(", ", ", ")")
-    }.mkString("array(", ", ", ")")
-    val cellIds = cents.map(_._1).mkString("array(", ", ", ")")
     vectors
-      .withColumn("__nrm", expr(
-        s"sqrt(aggregate($embCol, CAST(0.0 AS DOUBLE), (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"))
-      .withColumn("__nv", expr(
-        s"IF(__nrm = 0.0, CAST($embCol AS array<double>), transform($embCol, x -> CAST(x AS DOUBLE) / __nrm))"))
-      .withColumn("__d2", expr(
-        s"transform($centsSql, c -> aggregate(zip_with(__nv, c, (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), (a, x) -> a + x))"))
-      .withColumn("cell", expr(
-        s"""element_at($cellIds, aggregate(sequence(1, size(__d2)),
-              named_struct('bd', CAST('Infinity' AS DOUBLE), 'bi', 1),
-              (acc, i) -> IF(__d2[i-1] < acc.bd, named_struct('bd', __d2[i-1], 'bi', i), acc),
-              acc -> acc.bi))"""))
+      .withColumn("cell",
+        nearest_cell(l2_normalize(col(embCol)), VecTables.cells(cents.toSeq)))
       .select(col("vec_id"), col(embCol), col("cell"))
   }
 
@@ -1209,28 +1197,13 @@ object Similarity {
   /** f64-normalize `embCol` into "__nv" (a zero vector passes through as
     * the raw f32 cast — the Normalizer convention `assignCells` follows). */
   private def withNv(df: DataFrame, embCol: String): DataFrame =
-    df.withColumn("__nrm", expr(
-        s"sqrt(aggregate($embCol, CAST(0.0 AS DOUBLE), (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"))
-      .withColumn("__nv", expr(
-        s"IF(__nrm = 0.0, CAST($embCol AS array<double>), transform($embCol, x -> CAST(x AS DOUBLE) / __nrm))"))
+    df.withColumn("__nv", l2_normalize(col(embCol)))
 
   /** argmin-squared-distance assignment of "__nv" rows against a tiny
     * driver-side f64 centroid table (ties to the lowest cell id) — the
     * `assignCells` rule, parameterized on exact doubles. Map-only. */
-  private def assignNv(nv: DataFrame, cents: Seq[(Int, Array[Double])]): DataFrame = {
-    val sorted = cents.sortBy(_._1)
-    val centsSql = sorted.map(_._2.map(_.toString).mkString("array(", ", ", ")"))
-      .mkString("array(", ", ", ")")
-    val cellIds = sorted.map(_._1).mkString("array(", ", ", ")")
-    nv.withColumn("__d2", expr(
-        s"transform($centsSql, c -> aggregate(zip_with(__nv, c, (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), (a, x) -> a + x))"))
-      .withColumn("cell", expr(
-        s"""element_at($cellIds, aggregate(sequence(1, size(__d2)),
-              named_struct('bd', CAST('Infinity' AS DOUBLE), 'bi', 1),
-              (acc, i) -> IF(__d2[i-1] < acc.bd, named_struct('bd', __d2[i-1], 'bi', i), acc),
-              acc -> acc.bi))"""))
-      .drop("__d2")
-  }
+  private def assignNv(nv: DataFrame, cents: Seq[(Int, Array[Double])]): DataFrame =
+    nv.withColumn("cell", nearest_cell(col("__nv"), VecTables.cells(cents)))
 
   /** Fixed-point scale for deterministic centroid means: 2^20 keeps ~6
     * decimal digits of each coordinate, far beyond what cell assignment
@@ -1380,25 +1353,11 @@ object Similarity {
   def detIvfTopK(items: DataFrame, queries: DataFrame, k: Int,
                  nLists: Int = 8, iters: Int = 3, nProbe: Int = 3): DataFrame = {
     val (cents, assigned) = detKMeans(items, nLists, iters)
-    val sorted = cents.sortBy(_._1)
-    val centsSql = sorted.map(_._2.map(_.toString).mkString("array(", ", ", ")"))
-      .mkString("array(", ", ", ")")
-    val cellIds = sorted.map(_._1).mkString("array(", ", ", ")")
-    val cnorms = sorted.map { case (_, c) =>
-      math.sqrt(c.map(x => x * x).sum).toString
-    }.mkString("array(", ", ", ")")
-    // per-query cell scores: cosine(normalized query, centroid) as a pair
-    // of literal-array expressions — map-only, no join against centroids
+    // per-query cell scores: cosine(normalized query, centroid) from one
+    // dot-table kernel — map-only, no join against centroids
     val qscored = withNv(queries, "query_embedding")
-      .withColumn("__cs", expr(
-        s"""zip_with(
-              transform($centsSql, c -> aggregate(zip_with(__nv, c, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, x) -> a + x)),
-              $cnorms,
-              (d, nc) -> IF(nc = 0.0D, CAST(0.0 AS DOUBLE), d / nc))"""))
       .select(col("query_id"), col("query_embedding"),
-        posexplode(col("__cs")).as(Seq("__i", "cscore")))
-      .withColumn("cell", expr(s"element_at($cellIds, __i + 1)"))
-      .select(col("query_id"), col("query_embedding"), col("cell"), col("cscore"))
+        posexplode(centroidScores(cents, cosine = true)).as(Seq("cell", "cscore")))
     val probes = graft.plans.GroupedTopK(qscored,
         Seq(col("query_id")), Seq(desc("cscore"), asc("cell")), nProbe)
       .select(col("query_id"), col("query_embedding"), col("cell"))
@@ -1658,31 +1617,22 @@ object Similarity {
       codebooks.head.head.length)
   }
 
-  private def centsSqlOf(cb: Seq[Array[Double]]): String =
-    cb.map(_.map(_.toString).mkString("array(", ", ", ")"))
-      .mkString("array(", ", ", ")")
+  /** The 0-based PQ codes of "__nv": per subspace, argmin squared distance
+    * of the `dsub`-wide `__nv` slice against that subspace's codebook
+    * (strict-< scan with ties to the lowest cell — the `assignCells` rule).
+    * Map-only: one codegen'd `pq_encode` over the codebook table. */
+  private def subCodes(cbs: Seq[Seq[Array[Double]]]): Column =
+    pq_encode(col("__nv"), VecTables.books(cbs))
 
-  /** Append 0-based code columns `__c_0..__c_{m-1}` to a "__nv" frame: per
-    * subspace, argmin squared distance of the `dsub`-wide `__nv` slice
-    * against that subspace's codebook (strict-< scan with ties to the
-    * lowest cell — the `assignCells` rule). Map-only; the codebooks unroll
-    * into literal expressions inside whole-stage codegen. */
-  private def withSubCodes(nv: DataFrame, cbs: Seq[Seq[Array[Double]]],
-                           dsub: Int): DataFrame =
-    cbs.zipWithIndex.foldLeft(nv) { case (d, (cb, s)) =>
-      val off = s * dsub
-      d.withColumn(s"__d2_$s", expr(
-          s"transform(${centsSqlOf(cb)}, c -> aggregate(zip_with(slice(__nv, ${off + 1}, $dsub), c, (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), (a, x) -> a + x))"))
-        .withColumn(s"__c_$s", expr(
-          s"""aggregate(sequence(1, size(__d2_$s)),
-                named_struct('bd', CAST('Infinity' AS DOUBLE), 'bi', 1),
-                (acc, i) -> IF(__d2_$s[i-1] < acc.bd, named_struct('bd', __d2_$s[i-1], 'bi', i), acc),
-                acc -> acc.bi) - 1"""))
-        .drop(s"__d2_$s")
-    }
-
-  private def codesArrayExpr(m: Int): String =
-    (0 until m).map(s => s"__c_$s").mkString("array(", ", ", ")")
+  /** Per-query dots (or cosines) of "__nv" with the `detKMeans` centroids,
+    * one per cell in cell order; those cells are 0 until k, so a score's
+    * position is its cell. */
+  private def centroidScores(cents: Seq[(Int, Array[Double])],
+                             cosine: Boolean): Column = {
+    val cells = VecTables.cells(cents)
+    require(cells.ids.sameElements(cells.ids.indices), "cells must be 0 until k")
+    dot_table(col("__nv"), cells, cosine)
+  }
 
   /** Product quantization — the classic memory-bound ANN index (Jégou et
     * al., "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
@@ -1696,7 +1646,7 @@ object Similarity {
     * their centroid — so two builds are bit-identical and the whole
     * codebook trajectory reproduces in SQL (the q76 oracle). All `m`
     * subspaces train in ONE pass per iteration: a single map-only
-    * assignment projection (the m argmins unroll into codegen) + one
+    * assignment projection (one `pq_encode` gives all m argmins) + one
     * (sub, cell, dim)-keyed aggregation whose shuffle is
     * partitions x m x ksub x dsub partial rows — corpus-size-independent,
     * same shape as one full-dim detKMeans iteration. */
@@ -1743,13 +1693,11 @@ object Similarity {
       initRows.map(r => r.slice(s * dsub, (s + 1) * dsub)).toSeq
     }
     for (_ <- 1 to iters) {
-      val scArr = (0 until m).map(s => s"named_struct('sub', $s, 'cell', __c_$s)")
-        .mkString("array(", ", ", ")")
-      val sums = withSubCodes(fit, cbs, dsub)
-        .select(col("__nv"), explode(expr(scArr)).as("sc"))
-        .select(col("sc.sub").as("sub"), col("sc.cell").as("cell"), col("__nv"))
+      val sums = fit
+        .select(col("__nv"), posexplode(subCodes(cbs)).as(Seq("sub", "cell")))
         .select(col("sub"), col("cell"),
-          posexplode(expr(s"slice(__nv, sub * $dsub + 1, $dsub)")).as(Seq("dim", "x")))
+          posexplode(slice(col("__nv"), col("sub") * dsub + 1, lit(dsub)))
+            .as(Seq("dim", "x")))
         .withColumn("fx", expr(s"CAST(floor(x * $DetKmFx + 0.5) AS BIGINT)"))
         .groupBy("sub", "cell", "dim")
         .agg(sum("fx").as("sfx"), count(lit(1)).as("n"))
@@ -1769,8 +1717,7 @@ object Similarity {
     }
     fit.unpersist()
     // the ONE full-corpus pass: encode everything against the fitted books
-    val codes = PlanCache.memo(withSubCodes(nv, cbs, dsub)
-      .select(col("vec_id"), expr(codesArrayExpr(m)).as("codes")))
+    val codes = PlanCache.memo(nv.select(col("vec_id"), subCodes(cbs).as("codes")))
     codes.count() // materialize so the normalized input can be released
     nv.unpersist()
     PqIndex(codes, cbs, dsub)
@@ -1792,28 +1739,25 @@ object Similarity {
   /** Per-query ADC lookup tables for a PQ index: `lt(sub)(cell)` = dot of
     * the normalized query subvector with that cell's centroid. Map-only
     * over the (tiny, broadcastable) query set. */
-  private def pqLookupTables(index: PqIndex, queries: DataFrame): DataFrame = {
-    val dsub = index.dsub
-    val ltArr = index.codebooks.zipWithIndex.map { case (cb, s) =>
-      val off = s * dsub
-      s"transform(${centsSqlOf(cb)}, c -> aggregate(zip_with(slice(__nv, ${off + 1}, $dsub), c, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, x) -> a + x))"
-    }.mkString("array(", ", ", ")")
+  private def pqLookupTables(index: PqIndex, queries: DataFrame): DataFrame =
     withNv(queries, "query_embedding")
-      .select(col("query_id"), expr(ltArr).as("lt"))
-  }
+      .select(col("query_id"), lookupTables(index.codebooks).as("lt"))
 
-  /** The ADC total: m table lookups folded subspace-ascending (the exact
-    * order the DuckDB oracles reproduce). Expects `lt` and `codes` cols. */
-  private def adcExpr(m: Int): org.apache.spark.sql.Column = expr(
-    s"""aggregate(sequence(1, $m), CAST(0.0 AS DOUBLE),
-          (a, s) -> a + element_at(element_at(lt, s), element_at(codes, s) + 1))""")
+  /** `lt(sub)(cell)` of "__nv": per subspace, a dot table of the `dsub`-wide
+    * slice against that subspace's codebook. */
+  private def lookupTables(cbs: Seq[Seq[Array[Double]]]): Column = {
+    val books = VecTables.books(cbs)
+    array((0 until books.m).map { s =>
+      dot_table(slice(col("__nv"), s * books.width + 1, books.width), books.table(s))
+    }: _*)
+  }
 
   def pqProbe(index: PqIndex, items: DataFrame, queries: DataFrame, k: Int,
               shortlist: Int = 64): DataFrame = {
     val qlt = pqLookupTables(index, queries)
     val short = graft.plans.GroupedTopK(
         index.codes.crossJoin(broadcast(qlt))
-          .select(col("query_id"), col("vec_id"), adcExpr(index.m).as("adc")),
+          .select(col("query_id"), col("vec_id"), adc(col("lt"), col("codes")).as("adc")),
         Seq(col("query_id")), Seq(desc("adc"), asc("vec_id")), shortlist)
       .select("query_id", "vec_id")
     topKPerQuery(
@@ -1853,22 +1797,9 @@ object Similarity {
     val pq = pqIndex(items, m, ksub, pqIters)
     // per-query nProbe closest cells by cosine against the exact f64
     // centroids — identical to detIvfTopK's probe stage
-    val sorted = cents.sortBy(_._1)
-    val centsSql = sorted.map(_._2.map(_.toString).mkString("array(", ", ", ")"))
-      .mkString("array(", ", ", ")")
-    val cellIds = sorted.map(_._1).mkString("array(", ", ", ")")
-    val cnorms = sorted.map { case (_, c) =>
-      math.sqrt(c.map(x => x * x).sum).toString
-    }.mkString("array(", ", ", ")")
     val qscored = withNv(queries, "query_embedding")
-      .withColumn("__cs", expr(
-        s"""zip_with(
-              transform($centsSql, c -> aggregate(zip_with(__nv, c, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, x) -> a + x)),
-              $cnorms,
-              (d, nc) -> IF(nc = 0.0D, CAST(0.0 AS DOUBLE), d / nc))"""))
-      .select(col("query_id"), posexplode(col("__cs")).as(Seq("__i", "cscore")))
-      .withColumn("cell", expr(s"element_at($cellIds, __i + 1)"))
-      .select(col("query_id"), col("cell"), col("cscore"))
+      .select(col("query_id"),
+        posexplode(centroidScores(cents, cosine = true)).as(Seq("cell", "cscore")))
     val probes = graft.plans.GroupedTopK(qscored,
         Seq(col("query_id")), Seq(desc("cscore"), asc("cell")), nProbe)
       .select(col("query_id"), col("cell"))
@@ -1880,7 +1811,7 @@ object Similarity {
     val short = graft.plans.GroupedTopK(
         cand.hint("SHUFFLE_HASH").join(pq.codes, Seq("vec_id"))
           .join(broadcast(qlt), Seq("query_id"))
-          .select(col("query_id"), col("vec_id"), adcExpr(m).as("adc")),
+          .select(col("query_id"), col("vec_id"), adc(col("lt"), col("codes")).as("adc")),
         Seq(col("query_id")), Seq(desc("adc"), asc("vec_id")), shortlist)
       .select("query_id", "vec_id")
     topKPerQuery(
@@ -1912,20 +1843,12 @@ object Similarity {
                         shortlist: Int = 64, inDim: Int = 64): DataFrame = {
     require(m >= 1 && inDim % m == 0, s"inDim=$inDim must split into m=$m subspaces")
     val (cents, assigned) = detKMeans(items, nLists, kmIters)
-    val sorted = cents.sortBy(_._1)
-    val centsSql = sorted.map(_._2.map(_.toString).mkString("array(", ", ", ")"))
-      .mkString("array(", ", ", ")")
-    val cellIds = sorted.map(_._1).mkString("array(", ", ", ")")
-    val cnorms = sorted.map { case (_, c) =>
-      math.sqrt(c.map(x => x * x).sum).toString
-    }.mkString("array(", ", ", ")")
     // residual frame: __nv := nv - centroid(cell); cells are 0..k-1 by
-    // construction (first-k-by-id init), so element_at(cell+1) is exact
+    // construction (first-k-by-id init), so a cell is its table row
     val resid = withNv(items, "embedding")
       .select(col("vec_id"), col("__nv"))
       .join(assigned, Seq("vec_id"))
-      .withColumn("__nv", expr(
-        s"zip_with(__nv, element_at($centsSql, cell + 1), (x, y) -> x - y)"))
+      .withColumn("__nv", residual(col("__nv"), col("cell"), VecTables.cells(cents)))
     val residNv = resid.select(col("vec_id"), col("__nv"))
     val dsub = inDim / m
     val pq = pqFits.fit(residNv, s"ivfpqr|$nLists|$kmIters|$m|$ksub|$pqIters|$inDim")(
@@ -1933,31 +1856,22 @@ object Similarity {
     // query side: nProbe cells by centroid cosine (the q69 probe rule),
     // plus per-cell base dots and the residual lookup tables — all riding
     // the query broadcast
-    val ltArr = pq.codebooks.zipWithIndex.map { case (cb, s) =>
-      val off = s * dsub
-      s"transform(${centsSqlOf(cb)}, c -> aggregate(zip_with(slice(__nv, ${off + 1}, $dsub), c, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, x) -> a + x))"
-    }.mkString("array(", ", ", ")")
     val qn = withNv(queries, "query_embedding")
-      .withColumn("__bs", expr(
-        s"transform($centsSql, c -> aggregate(zip_with(__nv, c, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, x) -> a + x))"))
-      .withColumn("__cs", expr(
-        s"""zip_with(__bs, $cnorms,
-              (d, nc) -> IF(nc = 0.0D, CAST(0.0 AS DOUBLE), d / nc))"""))
     val qscored = qn
-      .select(col("query_id"), posexplode(col("__cs")).as(Seq("__i", "cscore")))
-      .withColumn("cell", expr(s"element_at($cellIds, __i + 1)"))
-      .select(col("query_id"), col("cell"), col("cscore"))
+      .select(col("query_id"),
+        posexplode(centroidScores(cents, cosine = true)).as(Seq("cell", "cscore")))
     val probes = graft.plans.GroupedTopK(qscored,
         Seq(col("query_id")), Seq(desc("cscore"), asc("cell")), nProbe)
       .select(col("query_id"), col("cell"))
-    val qlt = qn.select(col("query_id"), expr(ltArr).as("lt"), col("__bs").as("bs"))
+    val qlt = qn.select(col("query_id"), lookupTables(pq.codebooks).as("lt"),
+      centroidScores(cents, cosine = false).as("bs"))
     val cand = assigned.join(broadcast(probes), Seq("cell"))
       .select("query_id", "vec_id", "cell")
     val short = graft.plans.GroupedTopK(
         cand.hint("SHUFFLE_HASH").join(pq.codes, Seq("vec_id"))
           .join(broadcast(qlt), Seq("query_id"))
           .select(col("query_id"), col("vec_id"),
-            (expr("element_at(bs, cell + 1)") + adcExpr(m)).as("adc")),
+            (element_at(col("bs"), col("cell") + 1) + adc(col("lt"), col("codes"))).as("adc")),
         Seq(col("query_id")), Seq(desc("adc"), asc("vec_id")), shortlist)
       .select("query_id", "vec_id")
     topKPerQuery(
@@ -1976,9 +1890,8 @@ object Similarity {
     * equality). */
   def upsertPq(index: PqIndex, delta: DataFrame,
                embCol: String = "embedding"): PqIndex = {
-    val nv = withNv(delta, embCol).select(col("vec_id"), col("__nv"))
-    val newCodes = withSubCodes(nv, index.codebooks, index.dsub)
-      .select(col("vec_id"), expr(codesArrayExpr(index.m)).as("codes"))
+    val newCodes = withNv(delta, embCol)
+      .select(col("vec_id"), subCodes(index.codebooks).as("codes"))
     PqIndex(
       newCodes.unionByName(
         index.codes.join(delta.select("vec_id"), Seq("vec_id"), "left_anti")),
@@ -2022,13 +1935,12 @@ object Similarity {
                      coarseAssignments: DataFrame, delta: DataFrame,
                      embCol: String = "embedding"): Unit = {
     val pq = loadPqIndex(spark, path)
-    val nv = withNv(delta, embCol).select(col("vec_id"), col("__nv"))
     val deltaCells = coarseAssignments.select("vec_id", "cell")
       .join(broadcast(delta.select("vec_id")), Seq("vec_id"))
     // delta-sized × delta-sized equi-join: SHUFFLE_HASH, not broadcast —
     // an upsert wave can be any size, only its ids ride broadcasts
-    val newCodes = withSubCodes(nv, pq.codebooks, pq.dsub)
-      .select(col("vec_id"), expr(codesArrayExpr(pq.m)).as("codes"))
+    val newCodes = withNv(delta, embCol)
+      .select(col("vec_id"), subCodes(pq.codebooks).as("codes"))
       .hint("SHUFFLE_HASH").join(deltaCells, Seq("vec_id"))
     upsertCellTable(spark, s"$path/codes", pq.codes,
       newCodes.select("vec_id", "codes", "cell"),
@@ -2144,7 +2056,7 @@ object Similarity {
             pq.codes.filter(col("cell").isin(cells: _*))
               .join(broadcast(probesLocal), Seq("cell"))
               .join(broadcast(qlt), Seq("query_id"))
-              .select(col("query_id"), col("vec_id"), adcExpr(pq.m).as("adc")),
+              .select(col("query_id"), col("vec_id"), adc(col("lt"), col("codes")).as("adc")),
             Seq(col("query_id")), Seq(desc("adc"), asc("vec_id")), shortlist)
           .select("query_id", "vec_id")
         // shortlisted ids live in probed cells by construction, so the
@@ -2158,7 +2070,7 @@ object Similarity {
         val s = graft.plans.GroupedTopK(
             cand.hint("SHUFFLE_HASH").join(pq.codes, Seq("vec_id"))
               .join(broadcast(qlt), Seq("query_id"))
-              .select(col("query_id"), col("vec_id"), adcExpr(pq.m).as("adc")),
+              .select(col("query_id"), col("vec_id"), adc(col("lt"), col("codes")).as("adc")),
             Seq(col("query_id")), Seq(desc("adc"), asc("vec_id")), shortlist)
           .select("query_id", "vec_id")
         (s, coarse.assignments.select("vec_id", "embedding"))
