@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.GraftFunctions.hash_embed
+import graft.io.LocalFs
 import graft.multimodal.Multimodal
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 
@@ -98,6 +99,8 @@ object SparkEntry {
     * of every shingle/minhash/simhash pipeline ~3x; the engine's tables are
     * non-null, so the rules buy nothing here — excluded. */
   def tune(s: SparkSession): SparkSession = {
+    // before anything touches a file: the fork-free `file:` filesystem
+    LocalFs.install(s)
     // All entry points agree on UTC: the events loader casts any inferred
     // TIMESTAMP_NTZ to session-TZ timestamp, and the DuckDB oracle reads the
     // same parquet naively — UTC makes the two µs values bit-identical.

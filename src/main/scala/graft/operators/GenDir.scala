@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Generation-pointer serving shared by every on-disk versioned store:
@@ -21,8 +21,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Pointer-flip protocol: the new value is staged to `<pointer>.tmp` and
   * renamed over the pointer with `FileContext` + `Options.Rename.OVERWRITE`
-  * — atomic on HDFS-like stores. On stores whose overwrite-rename
-  * degrades to delete-then-rename (RawLocalFileSystem, S3A), a reader can
+  * — atomic on HDFS-like stores. One flip is a create and two renames:
+  * about 3 ms on a local disk through [[graft.io.LocalFs]] (a commit
+  * makes two flips, the pointer and its `_PREV` stamp); Hadoop's stock
+  * local classes fork a process per step and take about 60 ms. On
+  * stores whose overwrite-rename degrades to delete-then-rename
+  * (RawLocalFileSystem, S3A), a reader can
   * land in the brief pointerless window — [[resolve]] closes it by
   * COMPLETING the flip from the staged `.tmp` (written fully before the
   * rename starts), and only then falling back to the highest existing
@@ -184,11 +188,19 @@ private[graft] object GenDir extends GenDir("_GEN", "gen=") {
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Read a tiny metadata file, None when absent/unreadable. */
+  /** Read a tiny metadata file, None when absent/unreadable. The read
+    * skips the `.crc` sidecar: a checksummed `FileContext` rename moves
+    * the data and its sidecar in two steps, so a reader racing a flip or
+    * a heal could pair the new bytes with the old checksum and read the
+    * pointer as missing. The bytes themselves only ever arrive whole, by
+    * one rename of a fully written stage. */
   private[graft] def readAtomicFile(spark: SparkSession,
                                     path: String): Option[String] = {
     val p = new Path(path)
-    val fs = fsOf(spark, p)
+    val fs = fsOf(spark, p) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
     if (!fs.exists(p)) None
     else try {
       val in = fs.open(p)
@@ -209,9 +221,9 @@ private[graft] object GenDir extends GenDir("_GEN", "gen=") {
     * zero-downtime race spec caught exactly that — the heal renamed the
     * tmp between the writer's create and close). A racing heal that
     * renames the completed tmp away is tolerated by verifying the
-    * destination content. All three renames go through [[FileContext]]
-    * (raw local fs): mixing in the checksummed `FileSystem.rename` would
-    * move crc sidecars that the FileContext renames then strand stale. */
+    * destination content. All three renames go through [[FileContext]];
+    * on `file:` it is checksummed and moves each `.crc` sidecar after its
+    * data, which is why [[readAtomicFile]] reads the bytes unverified. */
   private[graft] def writeAtomicFile(spark: SparkSession, path: String,
                                      content: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -245,10 +257,9 @@ private[graft] object GenDir extends GenDir("_GEN", "gen=") {
     }
     val staged = readAtomicFile(spark, s"$path.tmp")
     staged.foreach { _ =>
-      // FileContext (raw), NOT the checksummed FileSystem.rename: the
-      // writer's own renames are raw and move no crc sidecars, so a
-      // checksummed heal rename would strand a `.crc` for content the
-      // next raw flip replaces — poisoning every later checksummed read
+      // FileContext, as the writer's own renames: a heal that loses its
+      // sidecar rename to the writer's stale `.crc` leaves the bytes
+      // right, and readAtomicFile never checks the sidecar
       val dst = new Path(path)
       try org.apache.hadoop.fs.FileContext
         .getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)

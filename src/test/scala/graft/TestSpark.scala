@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.io.LocalFs
+
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -12,6 +14,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    LocalFs.install(s)
     GraftFunctions.register(s)
     s
   }
