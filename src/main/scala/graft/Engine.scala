@@ -764,10 +764,12 @@ object Engine {
     *   - vector leg: [[graft.operators.Similarity.ivfPqProbe]] over a
     *     PERSISTED IVF-PQ index (frozen coarse centroids + codebooks,
     *     loaded from storage — the `ensurePersistedIvfPq` lifecycle);
-    *   - lexical leg: a caller-supplied scorer over a MAINTAINED inverted
-    *     index (the streamed, compacted lex state's `bm25Indexed` reader —
-    *     passed as a function so this serving façade does not depend on
-    *     the streaming module), one term set per query;
+    *   - lexical leg: ONE pre-scored (query_id, doc_id, bm25) frame for
+    *     the whole batch over a MAINTAINED inverted index (the streamed,
+    *     compacted lex state's fused `bm25StreamedBatchAt` reader — passed
+    *     in as a frame so this serving façade does not depend on the
+    *     streaming module): one postings pass for the batch, never a
+    *     filter+2-aggregation subtree per query;
     *   - fusion: the `hybridSearch` RRF tail — each leg ranks its top
     *     `nLeg` independently (GroupedTopK shapes, so only
     *     2 × nLeg × |queries| rows survive to the fusion), then
@@ -780,44 +782,9 @@ object Engine {
     * nothing is refit and the corpus never shuffles. Deterministic
     * end-to-end (detKMeans cells, fixed-order ADC folds, integer-exact
     * BM25 stats), so the whole serving path is hash-oracled.
-    * Output: (query_id, doc_id, rnk_vec, rnk_lex, rrf) top-k per query by
-    * (rrf desc, doc_id asc). */
-  def hybridServing(coarse: graft.operators.Similarity.IvfIndex,
-                    pq: graft.operators.Similarity.PqIndex,
-                    queries: DataFrame,
-                    termsByQuery: Seq[(Long, Seq[String])],
-                    lexLeg: Seq[String] => DataFrame,
-                    k: Int = 5, nLeg: Int = 10, kRrf: Int = 60,
-                    nProbe: Int = 3, shortlist: Int = 64): DataFrame = {
-    require(termsByQuery.nonEmpty, "need at least one (query_id, terms) set")
-    // the lexical side builds ONE union branch per query leg, so plan
-    // size is linear in the batch — fine at serving batch sizes, not for
-    // a bulk scoring job. Enforce the bound instead of documenting it:
-    // past it, split the batch (or use hybridSearchMany's grouped form).
-    require(termsByQuery.size <= MaxServingBatch,
-      s"hybridServing builds a per-query plan branch: batch of " +
-        s"${termsByQuery.size} exceeds MaxServingBatch=$MaxServingBatch — " +
-        "split the request into smaller batches")
-    // one scored frame for all lexical legs; each leg's postings read is
-    // term-pruned by the reader before any row reaches the union
-    val lexScored = termsByQuery.map { case (qid, terms) =>
-      lexLeg(terms)
-        .select(lit(qid).cast("long").as("query_id"), col("doc_id"),
-          col("bm25"))
-    }.reduce(_ unionByName _)
-    hybridServingScored(coarse, pq, queries, termsByQuery.size, lexScored,
-      k, nLeg, kRrf, nProbe, shortlist)
-  }
-
-  /** [[hybridServing]] with the lexical side pre-scored as ONE
-    * (query_id, doc_id, bm25) frame for the whole batch — the serving
-    * entry the declared queries use with the fused
-    * `bm25StreamedBatchAt` reader (r19: the per-leg form compiled a
-    * filter+2-aggregation subtree PER QUERY — 86 Exchanges in q292's
-    * captured plan; the fused lexical side is one postings pass, and this
-    * tail is identical, so the two entries fuse identical rows).
-    * `batchSize` is the request's query count, held to the same
-    * [[MaxServingBatch]] bound as the per-leg form. */
+    * `batchSize` is the request's query count, held to
+    * [[MaxServingBatch]]. Output: (query_id, doc_id, rnk_vec, rnk_lex,
+    * rrf) top-k per query by (rrf desc, doc_id asc). */
   def hybridServingScored(coarse: graft.operators.Similarity.IvfIndex,
                           pq: graft.operators.Similarity.PqIndex,
                           queries: DataFrame, batchSize: Int,
@@ -867,10 +834,10 @@ object Engine {
     query.toLowerCase(java.util.Locale.ROOT).split("\\s+").toSeq
       .map(_.replaceAll("[^a-z0-9]", "")).filter(_.nonEmpty).distinct
 
-  /** Largest per-request query batch [[hybridServing]] accepts — its
-    * lexical legs are one plan branch per query (linear plan growth), so
-    * the bound keeps a mis-aimed bulk job from compiling a 10k-branch
-    * plan; serving batches are far below it. */
+  /** Largest per-request query batch [[hybridServingScored]] accepts. It
+    * validates outside input: a serving request is a handful of queries,
+    * and a bulk scoring job belongs to `hybridSearchMany`'s grouped form,
+    * so a request past the bound is refused instead of served. */
   val MaxServingBatch = 64
 
   /** GET /health equivalent (main.py:228-253): "healthy" with index stats

@@ -74,7 +74,7 @@ object SparkEntry {
     * FAR from every corpus vector, unlike q292's corpus-member batch —
     * so the coarse cell ranking carries less signal and the probe must
     * go deeper to hold quality. Measured on the overlap@5 gate
-    * (ScaleRehearsal `gate_serving_text_overlap_at_5`): nProbe=3/64 →
+    * (`gate_serving_text_overlap_at_5` in REHEARSAL.json): nProbe=3/64 →
     * 0.88, nProbe=5/128 → 0.96 at 1x. Shortlist scales WITH the probe
     * depth: a deeper probe admits more ADC-noisy candidates, and a fixed
     * 64-row shortlist truncates the re-rank pool below the fusion's
@@ -6926,7 +6926,7 @@ SELECT CAST(count(*) AS DOUBLE) AS n_docs, round(avg(dl), 6) AS avgdl FROM t""",
     // q310: the maintained state's per-bucket postings stats vs a
     // from-scratch re-derivation — postings are distinct (doc, token)
     // pairs over the q258 tokenization, and the bucket is the SAME
-    // sha-derived assignment writeLexIndex partitions by (first two
+    // sha-derived assignment the lex state partitions by (first two
     // SHA-256 bytes of the token, mod 64 — TextAnalysis.tokenBucket)
     "q310_lex_bucket_stats" -> s"""WITH $dkTok,
   p AS (SELECT doc_id, unnest(toks) AS token FROM tok),

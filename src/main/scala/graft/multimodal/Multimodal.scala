@@ -183,22 +183,8 @@ object Multimodal {
     sb.toString
   }
 
-  /** Stub-decode aHash of one frame's bytes — the per-frame unit
-    * `sceneCuts` applies, exposed for the streaming twin. */
-  def frameHash(bytes: Array[Byte]): String =
-    ahashHex(decode("raw", bytes), bytes)
-
-  /** Hex-signature Hamming distance (4 x 16-bit bands) — driver/JVM side
-    * of the SQL band expression `sceneCuts`/`phashPairs` use. */
-  def hexHamming(a: String, b: String): Int =
-    (0 until 4).map { k =>
-      java.lang.Long.bitCount(
-        java.lang.Long.parseLong(a.substring(k * 4, k * 4 + 4), 16) ^
-          java.lang.Long.parseLong(b.substring(k * 4, k * 4 + 4), 16))
-    }.sum
-
   /** Scene-cut detection on video-like payloads: stride through the payload
-    * in `frameSize` blocks (the `sampleFrames` plumbing), aHash every frame
+    * in `frameSize` blocks, aHash every frame
     * with the SAME grid/mean/packing as `perceptualHash` (stub decode — the
     * q28/q144 contract: exact integer math the oracle reproduces; a real
     * codec would slot in at `decode`), then flag transitions whose
@@ -345,21 +331,5 @@ object Multimodal {
         (m.media_id, outW, outH, c, out)
       }
     }.toDF("media_id", "width", "height", "channels", "pixels")
-  }
-
-  /** Frame-sampling plumbing for video-like payloads: emit every `stride`-th
-    * fixed-size block as a "frame" (stub for codec frame extraction; the
-    * explode/streaming shape is the real thing). */
-  def sampleFrames(media: Dataset[Media], frameSize: Int, stride: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.flatMap { m =>
-      val n = m.content.length
-      (0 until n by frameSize * stride).map { off =>
-        val end = math.min(off + frameSize, n)
-        (m.media_id, off / (frameSize * stride),
-          java.util.Arrays.copyOfRange(m.content, off, end))
-      }
-    }.toDF("media_id", "frame_idx", "frame_bytes")
   }
 }

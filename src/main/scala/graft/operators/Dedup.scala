@@ -56,22 +56,6 @@ object Dedup {
                     j -> struct(ds[i] AS a, ds[j] AS b))))""")).as("p"))
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
 
-  /** Candidate pairs from the inverted shingle index, with a document-
-    * frequency cap: shingles appearing in more than `maxShingleDf` documents
-    * are dropped BEFORE bucket-pair generation. Without the cap, one
-    * boilerplate shingle shared by m documents materializes an O(m) bucket
-    * array and an O(m^2) pair explosion — the one all-pairs-shaped cost in
-    * this pipeline at corpus scale. A shingle that frequent carries no
-    * near-duplicate signal (it cannot discriminate pairs at any useful
-    * threshold), so dropping it loses only pairs whose ENTIRE overlap is
-    * boilerplate. Capped buckets are bounded (<= maxShingleDf elements), so
-    * the in-bucket pair explode is safe by construction. */
-  def jaccardCandidates(docs: DataFrame, maxShingleDf: Int): DataFrame =
-    bucketPairs(
-      shingles(docs).groupBy("shingle")
-        .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")) <= maxShingleDf)).distinct()
-
   /** Exact-Jaccard verification of candidate (doc_a, doc_b) pairs against the
     * full shingle sets: `common` and `jaccard` are computed on the complete
     * arrays (array_intersect), independent of how candidates were generated.
@@ -343,11 +327,8 @@ object Dedup {
       .orderBy("source")
   }
 
-  def minhashBuckets(docs: DataFrame): DataFrame =
-    minhashBands(docs).select(col("doc_id"), posexplode(
-      array((0 until 4).map(b => col(s"band$b")): _*)).as(Seq("band_idx", "band_key")))
-
-  /** [[minhashBuckets]] carrying the shingle array through the explode —
+  /** The (doc_id, band_idx, band_key) LSH buckets of [[minhashBands]],
+    * carrying the shingle array through the explode —
     * the pair-join shape (`Similarity.rpBucketTableWithVec`): verification
     * rides the one (band_idx, band_key) shuffle, 4 copies per doc, so no
     * candidate-pair re-join against the corpus is ever needed. Band keys

@@ -101,15 +101,14 @@ object Graph {
 
   /** Distinct (g, item) rows with an ENFORCED per-basket size cap: baskets
     * larger than `maxBasketSize` keep their first `maxBasketSize` items in
-    * item-id order (deterministic, engine-neutral — the same truncation is
-    * one `row_number() <= cap` in oracle SQL). This is `jaccardCandidates`'
-    * maxShingleDf argument applied to baskets: one pathological mega-basket
-    * of m items otherwise materializes m² join rows, the single
-    * all-pairs-shaped cost in this file at corpus scale. Items beyond the
-    * cap carry the least pair signal a deterministic rule can pick (highest
-    * ids of an already-degenerate basket); monitor the dropped volume with
-    * `basketCapDrops`. Capping rides `GroupedTopK` (bounded partial heaps,
-    * no WindowExec), so the cap itself is mega-basket-safe. */
+    * item-id order (deterministic, engine-neutral — the same truncation is one
+    * `row_number() <= cap` in oracle SQL). This is `Dedup.jaccardPairs`'
+    * maxShingleDf argument applied to baskets: one pathological mega-basket of
+    * m items otherwise materializes m² join rows, the single all-pairs-shaped
+    * cost in this file at corpus scale. Items beyond the cap carry the least
+    * pair signal a deterministic rule can pick (highest ids of an
+    * already-degenerate basket). Capping rides `GroupedTopK` (bounded partial
+    * heaps, no WindowExec), so the cap itself is mega-basket-safe. */
   private[operators] def cappedItems(df: DataFrame, groupCol: String, itemCol: String,
                                      maxBasketSize: Int): DataFrame = {
     require(maxBasketSize >= 1, s"maxBasketSize must be positive, got $maxBasketSize")
@@ -117,17 +116,6 @@ object Graph {
     graft.plans.GroupedTopK(items, Seq(col("g")), Seq(asc("item")), maxBasketSize)
       .drop("rank")
   }
-
-  /** The cap's reporting twin: (g, n_items, n_dropped) for every basket the
-    * `maxBasketSize` cap truncates — empty when the cap never fires (the
-    * expected state; a non-empty result is the "cap upstream" alarm). */
-  def basketCapDrops(df: DataFrame, groupCol: String, itemCol: String,
-                     maxBasketSize: Int = DefaultMaxBasketSize): DataFrame =
-    df.select(col(groupCol).as("g"), col(itemCol).as("item")).distinct()
-      .groupBy("g").agg(count(lit(1)).as("n_items"))
-      .filter(col("n_items") > maxBasketSize)
-      .select(col("g"), col("n_items"),
-        (col("n_items") - maxBasketSize).as("n_dropped"))
 
   /** Far above any organic basket (TPC-H orders top out at 7 lineitems;
     * retail/session baskets at hundreds) yet it bounds the per-basket pair

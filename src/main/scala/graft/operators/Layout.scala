@@ -45,18 +45,6 @@ object Layout {
   def withZValue(df: DataFrame, a: String, b: String, bits: Int = 16): DataFrame =
     df.withColumn("zval", expr(zValueSql(a, b, bits)))
 
-  /** The layout action itself: range-partition and sort by z-value, so a
-    * parquet write of the result yields files/row-groups whose (a, b)
-    * min/max envelopes are small boxes. Range boundaries come from Spark's
-    * reservoir sample — fine for layout (placement need not be
-    * reproducible; the CONTENT of each row is), which is why the
-    * deterministic zone-map audit below is the oracle surface instead. */
-  def clusterByZ(df: DataFrame, a: String, b: String,
-                 numPartitions: Int, bits: Int = 16): DataFrame =
-    withZValue(df, a, b, bits)
-      .repartitionByRange(numPartitions, col("zval"))
-      .sortWithinPartitions("zval")
-
   /** Hilbert curve index of two non-negative `bits`-bit integers — Z-order's
     * better-locality sibling: consecutive Hilbert values are always
     * Manhattan-adjacent cells (no Z-shaped jumps), so range reads along the

@@ -1428,8 +1428,8 @@ object Similarity {
     ivfProbe(ivfIndex(items, nLists), queries, k, nProbe, pruneScan = false)
   // nProbe default is set from the recall@3 >= 0.9 gate measured at THREE
   // scales — the sf0.01 fixture (SimilaritySpec/GATES.json), sf0.1, and
-  // the 8x rotated-replica octave (ScaleRehearsal's recall family,
-  // committed in REHEARSAL.json): 12 passed only the fixture (0.87 at
+  // the 8x rotated-replica octave (the recall family recorded in
+  // REHEARSAL.json): 12 passed only the fixture (0.87 at
   // sf0.1); 13 clears 0.9 at all three. On weakly-clustered corpora cell
   // locality is soft, and probing fewer cells silently drops true
   // neighbours. Strongly-clustered real-world embeddings can lower it
@@ -2528,10 +2528,9 @@ object Similarity {
   /** The additive-cell form of the scored frame: (f, label) → cnt.
     * AUC and calibration depend on the corpus ONLY through these counts
     * (they are tie-midrank / bin statistics), so the cells are the
-    * smallest exactly-mergeable state for both. The streaming read paths
-    * (`Streams.aucStreamedAt` / `Streams.calibrationStreamedAt`) build
-    * the same cells from the maintained scored frame via
-    * [[scoreCellsFromScored]]. */
+    * smallest exactly-mergeable state for both. The streaming read path
+    * (`Streams.aucStreamedAt`) builds the same cells from the maintained
+    * scored frame via [[scoreCellsFromScored]]. */
   def scoreCellsFromScored(scored: DataFrame): DataFrame =
     scored.groupBy("f", "label").agg(count(lit(1)).as("cnt"))
 
@@ -2586,11 +2585,10 @@ object Similarity {
                 buckets: Int = 10): DataFrame =
     liftTableFromScored(linearProbeScored(items), positiveLabel, buckets)
 
-  /** [[liftTable]] from the already-scored (vec_id, label, f) frame — the
-    * seam the streaming read path (`Streams.liftStreamedAt`) shares with
-    * the batch operator, so parity is by construction. Lift cannot run
-    * off [[scoreCellsFromScored]]'s cells alone: decile assignment
-    * tie-breaks on vec_id, a per-ROW identity the cells erase. */
+  /** [[liftTable]] from the already-scored (vec_id, label, f) frame. Lift
+    * cannot run off [[scoreCellsFromScored]]'s cells alone: decile
+    * assignment tie-breaks on vec_id, a per-ROW identity the cells
+    * erase. */
   def liftTableFromScored(scored: DataFrame, positiveLabel: Int = 0,
                           buckets: Int = 10): DataFrame = {
     require(buckets >= 2 && buckets <= 1000, s"bad buckets: $buckets")
@@ -2823,8 +2821,7 @@ object Similarity {
   /** [[calibrationTable]] from the (f, label, cnt) cell table — per-bin
     * n/f_sum/n_pos are all cell-additive (n = Σcnt, f_sum = Σf·cnt,
     * n_pos = Σcnt over the positive label), so calibration reads the same
-    * mergeable state as the AUC; the streaming read path
-    * (`Streams.calibrationStreamedAt`) shares every line below. */
+    * mergeable state as the AUC. */
   def calibrationTableFromCells(cells: DataFrame, positiveLabel: Int = 0,
                                 bins: Int = 10): DataFrame = {
     require(bins >= 2 && bins <= 1000, s"bad bins: $bins")

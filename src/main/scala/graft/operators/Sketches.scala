@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Deterministic, hash-checkable sketches for the 100 TB regime.
   *
-  * `TextAnalysis.corpusSketch` already exposes Spark's built-in HLL++ /
-  * t-digest sketches, but those are engine-specific (rows-only vs an
-  * oracle). The sketches here are built from sha256-derived hashes and
-  * pure integer arithmetic, so the SAME construction runs in any engine
-  * and the full register/counter state — and the estimate itself — is
-  * hash-exact reproducible. That buys two things at scale:
+  * Spark's built-in HLL++ / t-digest sketches (`approx_count_distinct`,
+  * `percentile_approx`) are engine-specific (rows-only vs an oracle). The
+  * sketches here are built from sha256-derived hashes and pure integer
+  * arithmetic, so the SAME construction runs in any engine and the full
+  * register/counter state — and the estimate itself — is hash-exact
+  * reproducible. That buys two things at scale:
   *
   *  - the sketch state is *auditable*: a 1000-executor run and a
   *    laptop run produce bit-identical registers, so a corrupted

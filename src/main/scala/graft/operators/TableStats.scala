@@ -117,23 +117,6 @@ object TableStats {
       .groupBy("bin").agg(count(lit(1)).as("n"))
   }
 
-  /** Pivot (cross-tab) counts: one row per `rowCol` value, one BIGINT
-    * column per `colValues` entry. The column set is an EXPLICIT sorted
-    * list, not discovered from data — at 100 TB, `.pivot(col)` without
-    * values runs a full distinct scan just to learn the schema, and an
-    * unbounded value domain would explode the row width; pinning the list
-    * keeps the plan one map-side-combined aggregate and makes the output
-    * schema stable across corpus versions. Absent combinations are 0, not
-    * null (the contract a downstream matrix consumer wants). */
-  def pivotCounts(df: DataFrame, rowCol: String, colCol: String,
-                  colValues: Seq[String]): DataFrame = {
-    require(colValues.nonEmpty && colValues.distinct == colValues,
-      "colValues must be a non-empty distinct list")
-    df.groupBy(rowCol).pivot(colCol, colValues).count()
-      .select(col(rowCol) +: colValues.map(v =>
-        coalesce(col(s"`$v`"), lit(0L)).as(v)): _*)
-  }
-
   /** Robust outlier audit per group: median / MAD (median absolute
     * deviation) fences, the heavy-tail-safe alternative to z-scores (one
     * wild value drags a mean+stddev fence, not a median+MAD one). Two
@@ -169,9 +152,9 @@ object TableStats {
     * sketch — and on integer inputs the linear interpolation
     * ((1-f)*lo + f*hi at rank p*(n-1)) is closed under doubles below 2^53,
     * so the result is engine-exact (the reason the input contract is
-    * integer cents/units, mirroring `corrMatrix`). For the sketch-based
-    * scale path over huge groups see `TextAnalysis.corpusSketch`
-    * (t-digest); this is the exact small-group complement. */
+    * integer cents/units, mirroring `corrMatrix`). Over huge groups the
+    * scale path is a sketch (`percentile_approx`, t-digest); this is the
+    * exact small-group complement. */
   def percentilesBy(df: DataFrame, groupCol: String, valueExpr: String,
                     ps: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.9)): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1))

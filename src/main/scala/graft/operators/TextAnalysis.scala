@@ -325,22 +325,6 @@ object TextAnalysis {
         countDistinct(col("doc_id")).as("n_docs"))
       .orderBy(desc("n_occurrences"), asc("token")).limit(k)
 
-  /** Sketch-based corpus statistics for the 100 TB regime: HyperLogLog++
-    * distinct counts (`approx_count_distinct`, mergeable, constant state)
-    * and t-digest-style quantiles (`percentile_approx`) instead of exact
-    * DISTINCT / sort-based percentiles, whose state grows with cardinality.
-    * Rows-only vs an oracle (sketches are engine-specific); accuracy is
-    * gated in TextAnalysisSpec against exact computations. */
-  def corpusSketch(docs: DataFrame, relativeSD: Double = 0.02): DataFrame =
-    docs.withColumn("toks", expr(tokensExpr))
-      .select(col("doc_id"), explode(col("toks")).as("token"),
-        length(col("token")).as("token_len"))
-      .agg(
-        approx_count_distinct(col("token"), relativeSD).as("approx_distinct_tokens"),
-        count(lit(1)).as("n_tokens"),
-        percentile_approx(col("token_len"), lit(0.5), lit(10000)).as("p50_token_len"),
-        percentile_approx(col("token_len"), lit(0.99), lit(10000)).as("p99_token_len"))
-
   /** BM25 keyword scoring over the corpus for a fixed (small) term set — the
     * lexical retrieval twin of the embedding search, and the hybrid-search
     * second leg every production vector store grows. One pass computes the
@@ -461,15 +445,15 @@ object TextAnalysis {
     * DISCOUNTS common ones). Document vectors are binary over the distinct
     * word-3-gram shingle space (`Dedup.shingles`), restricted to
     * DISCRIMINATIVE shingles with df <= `maxDf` (a frequent shingle carries
-    * no pair signal — the `jaccardCandidates` cap argument — so dropping it
-    * bounds every per-shingle bucket at maxDf docs BY CONSTRUCTION; pair
-    * generation is bucket², never corpus²). Weights are FIXED-POINT idf:
-    * w = round(ln(N/df) * 4096) — integer, so dots and norms are exact
-    * integer sums (order-independent, engine-neutral) and the only float op
-    * is the final cosine division, one shared expression rounded at 6. The
-    * 2^-12 idf quantization shifts cosines by < 1e-3 relative — immaterial
-    * to pair mining, essential to reproducibility (the `Graph.pageRank`
-    * fixed-point argument).
+    * no pair signal — the `Dedup.jaccardPairs` maxShingleDf argument — so
+    * dropping it bounds every per-shingle bucket at maxDf docs BY
+    * CONSTRUCTION; pair generation is bucket², never corpus²). Weights are
+    * FIXED-POINT idf: w = round(ln(N/df) * 4096) — integer, so dots and
+    * norms are exact integer sums (order-independent, engine-neutral) and
+    * the only float op is the final cosine division, one shared expression
+    * rounded at 6. The 2^-12 idf quantization shifts cosines by < 1e-3
+    * relative — immaterial to pair mining, essential to reproducibility
+    * (the `Graph.pageRank` fixed-point argument).
     *
     * Shape: distinct shingles -> df filter -> per-shingle sorted bucket ->
     * in-bucket pair dot contributions -> (a, b)-keyed sum -> two doc-keyed
@@ -570,8 +554,9 @@ object TextAnalysis {
 
   /** Positional inverted index: (token, doc_id, pos) — the structure phrase
     * and proximity queries need, where the plain `postings` table can only
-    * answer bag-of-words. One posexplode; persist bucketed by token like
-    * `writeLexIndex` when a corpus outgrows recomputation. */
+    * answer bag-of-words. One posexplode; persist bucketed by
+    * `tokenBucket` like the maintained lex state when a corpus outgrows
+    * recomputation. */
   def positionalPostings(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), posexplode(expr(tokensExpr)).as(Seq("pos", "token")))
 
@@ -608,31 +593,6 @@ object TextAnalysis {
     val d = java.security.MessageDigest.getInstance("SHA-256")
       .digest(token.getBytes("UTF-8"))
     (((d(0) & 0xffL) * 256 + (d(1) & 0xffL)) % 64)
-  }
-
-  /** Persist the inverted index partitioned by token bucket, plus the
-    * doc-lengths table beside it — the lexical twin of the vector index
-    * lifecycle (`Engine.writeIndex`). A query's terms map to a handful of
-    * buckets, so the postings read is PARTITION-PRUNED at the source
-    * (pinned in TextAnalysisSpec), not filtered after a full scan. */
-  def writeLexIndex(docs: DataFrame, path: String): Unit = {
-    postings(docs)
-      .withColumn("pbk", expr(tokenBucketExpr("token")))
-      .write.mode("overwrite").partitionBy("pbk").parquet(s"$path/postings")
-    docLengths(docs).write.mode("overwrite").parquet(s"$path/doclens")
-  }
-
-  /** BM25 over the PERSISTED index: prunes the postings scan to the query
-    * terms' buckets before the token filter, then scores via
-    * `bm25Indexed`. Per-query I/O ~ index-bytes * |buckets| / 64. */
-  def bm25IndexedAt(spark: org.apache.spark.sql.SparkSession, path: String,
-                    terms: Seq[String], k1: Double = 1.2,
-                    b: Double = 0.75): DataFrame = {
-    val buckets = terms.map(tokenBucket).distinct
-    val p = spark.read.parquet(s"$path/postings")
-      .filter(col("pbk").isin(buckets: _*))
-      .select("token", "doc_id", "tf")
-    bm25Indexed(p, spark.read.parquet(s"$path/doclens"), terms, k1, b)
   }
 
   /** BM25 over the inverted index: score the SAME formula as `bm25`, but

@@ -5,66 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.Engine
-
-/** Streaming extension (SURVEY §2.11): the reference's request-driven batch
-  * ingest lifted to Structured Streaming, plus event-time analytics over the
-  * `events` table shape.
-  *
-  * The chunk+embed pipeline is stateless (flatMap + project), so it lifts to
-  * streaming unchanged — `Engine.ingest` is applied verbatim to a streaming
-  * DataFrame. Aggregations carry watermarks so state is bounded.
+/** Streaming extension (SURVEY §2.11): the maintained states behind the
+  * streamed board queries. Each maintainer is a Structured Streaming
+  * query whose micro-batches reduce to bounded mergeable partials under
+  * idempotent `epoch=<n>` partitions ([[epochPartials]]); the matching
+  * `...At` reader folds them without touching raw history, and the
+  * `ensure*` builders land the fixture waves the declared queries read.
   */
 object Streams {
-
-  // INVARIANT: these forced schemas describe ENGINE-OWNED landing-dir
-  // formats — files are written by this library's own sinks/tests, never by
-  // the driver's fixture generator, so hard-coding the physical type here is
-  // safe (unlike fixture reads, which must go through `Tables` and tolerate
-  // drift — see Tables.events and FixtureSanitySpec).
-  val eventsSchema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-    "event_type STRING, value DOUBLE, props STRING"
-
-  val documentsSchema = "doc_id BIGINT, text STRING, lang STRING, " +
-    "source STRING, n_chars BIGINT"
-
-  /** Streaming ingest: watch a landing directory of document parquet files,
-    * chunk + embed each micro-batch, append to the index table. */
-  def streamingIngest(spark: SparkSession, landingDir: String,
-                      indexDir: String, checkpointDir: String): StreamingQuery = {
-    val docs = spark.readStream.schema(documentsSchema).parquet(landingDir)
-    Engine.ingest(docs).writeStream
-      .format("parquet")
-      .option("path", indexDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Streaming UPSERT ingest: like `streamingIngest` but each micro-batch
-    * replaces the `source` partitions it touches (dynamic partition
-    * overwrite via Engine.writeIndex) — the reference's replace-by-id
-    * semantics (main.py:172) lifted to a stream through `foreachBatch`,
-    * which is the hook for sinks whose write semantics exceed append.
-    *
-    * CONTRACT: a micro-batch must contain every current document of each
-    * source it touches (the reference's unit of ingest is a complete PDF).
-    * If one source's documents straddle two micro-batches, the second
-    * batch's overwrite replaces the first's rows — size triggers
-    * (`maxFilesPerTrigger`) that can split a source violate this; landing
-    * whole-source files per trigger satisfies it. */
-  def streamingUpsertIngest(spark: SparkSession, landingDir: String,
-                            indexDir: String, checkpointDir: String): StreamingQuery = {
-    val docs = spark.readStream.schema(documentsSchema).parquet(landingDir)
-    Engine.ingest(docs).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) Engine.writeIndex(batch.toDF(), indexDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
 
   /** Streaming JSONL ingest — the batch source's error-tolerant contract
     * (`JsonlCorpusSource`: keep every parseable row, surface — never
@@ -439,438 +387,21 @@ object Streams {
       epochsAt(spark, bandsPath)
         .select("doc_id", "sh", "band_idx", "band_key"), threshold)
 
-  /** Compaction for the band index — rows are immutable per-doc
-    * projections, so the fold is identity; partition count resets. */
-  def compactMinhashBandsAt(spark: SparkSession, bandsPath: String): Unit =
-    compactEpochs(spark, bandsPath)(st => st.drop("epoch"))
-
-  /** Tumbling event-time window aggregation with a watermark (late data
-    * beyond 30 minutes dropped; state bounded by watermark horizon). */
-  def tumblingCounts(events: DataFrame, width: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), width).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("total_value"))
-
-  /** Sliding window: 10-minute windows every 5 minutes. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"))
-
-  /** Custom streaming state (§2.11 "mapGroupsWithState"): per-user running
-    * totals across micro-batches — event count and value sum accumulate in
-    * the state store and emit an updated row per user per batch. */
-  def userRunningTotals(events: org.apache.spark.sql.Dataset[
-      org.apache.spark.sql.Row]): DataFrame = {
-    import org.apache.spark.sql.streaming.GroupState
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.selectExpr("user_id", "value").as[(Long, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[(Long, Double), (Long, Long, Double)](
-        GroupStateTimeout.NoTimeout) {
-        case (userId, rows, state: GroupState[(Long, Double)]) =>
-          val (prevN, prevSum) = state.getOption.getOrElse((0L, 0.0))
-          var n = prevN
-          var sum = prevSum
-          rows.foreach { case (_, v) => n += 1; sum += v }
-          state.update((n, sum))
-          (userId, n, sum)
-      }
-      .toDF("user_id", "n_events", "total_value")
-  }
-
-  /** Ordered-step funnel lifted to streaming (§2.11 custom state): per-user
-    * state is the ascending list of completed-step timestamps (micros) —
-    * O(|steps|) per user, watermark-free. Each micro-batch folds its rows
-    * in event-time order (ties broken by step index, so a same-timestamp
-    * next step does NOT advance — the batch operator's strictly-after
-    * contract) and emits only the NEWLY completed (user, step, step_ts)
-    * rows, so the accumulated append-mode output equals
-    * `EventAnalytics.funnel` over the seen prefix whenever each user's
-    * events arrive in event-time order across batches (the in-order ingest
-    * contract; late cross-batch arrivals need the batch recompute, since
-    * k-bounded state cannot retract a completed step). */
-  def streamingFunnel(events: DataFrame, steps: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    require(steps.nonEmpty && steps.distinct.size == steps.size)
-    val spark = events.sparkSession
-    import spark.implicits._
-    val idx = steps.zipWithIndex.toMap
-    events.selectExpr("user_id", "event_type", "unix_micros(ts) AS ts_us")
-      .as[(Long, String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[List[Long], (Long, Int, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        case (userId, rows, state: GroupState[List[Long]]) =>
-          var done = state.getOption.getOrElse(Nil)
-          val before = done.length
-          rows.toSeq
-            .sortBy { case (_, typ, ts) => (ts, idx.getOrElse(typ, Int.MaxValue)) }
-            .foreach { case (_, typ, ts) =>
-              if (done.length < steps.length && typ == steps(done.length) &&
-                  (done.isEmpty || ts > done.last)) done = done :+ ts
-            }
-          if (done.length > before) state.update(done)
-          done.zipWithIndex.drop(before)
-            .map { case (ts, i) => (userId, i + 1, ts) }.iterator
-      }
-      .toDF("user_id", "step", "ts_us")
-      .select(col("user_id"), col("step"),
-        expr("timestamp_micros(ts_us)").as("step_ts"))
-  }
-
-  /** Retrigger/burst dedup lifted to streaming (`EventAnalytics.
-    * dedupBursts`' twin): per-(user, type) state is ONE long — the last
-    * SEEN event time (kept or dropped; a chain of rapid retriggers must
-    * measure each gap from its immediate predecessor, so last-kept state
-    * would be wrong). Each micro-batch folds its rows in (ts, event_id)
-    * order and emits only burst heads. Same in-order ingest contract as
-    * `streamingFunnel`: per-key arrival in event-time order across
-    * batches; late arrivals need the batch recompute. */
-  def streamingDedupBursts(events: DataFrame,
-                           gapSeconds: Long = 3600): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    require(gapSeconds >= 1)
-    val gapUs = gapSeconds * 1000000L
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.selectExpr("event_id", "user_id", "event_type", "unix_micros(ts) AS ts_us")
-      .as[(Long, Long, String, Long)]
-      .groupByKey(r => (r._2, r._3))
-      .flatMapGroupsWithState[Long, (Long, Long, String, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        case (_, rows, state: GroupState[Long]) =>
-          var prev: Option[Long] = state.getOption
-          val kept = Seq.newBuilder[(Long, Long, String, Long)]
-          rows.toSeq.sortBy(r => (r._4, r._1)).foreach { case (id, u, t, ts) =>
-            if (prev.forall(p => ts - p > gapUs)) kept += ((id, u, t, ts))
-            prev = Some(ts)
-          }
-          prev.foreach(state.update)
-          kept.result().iterator
-      }
-      .toDF("event_id", "user_id", "event_type", "ts_us")
-  }
-
-  /** Per-user EWMA of daily spend lifted to streaming
-    * (`EventAnalytics.ewmaDailySpend`'s twin). State per user is the
-    * retained (day -> cents) window — at most `maxDays` entries, the
-    * BOUNDED tail the decay-1/2 ladder makes principled (a day beyond 32
-    * half-lives is below the 6-dp boundary rounding). Each micro-batch
-    * folds its rows into the window, drops days that fell off the
-    * recency tail, and emits the user's refreshed (n_days, ewma) — Update
-    * semantics, one row per touched user per batch. The smoothing itself
-    * is the same exact-int64 2^k weighted sum as batch, so after any
-    * prefix the emitted value equals the batch operator over the events
-    * seen so far — EXCEPT an event for a day already aged out of the
-    * window (> maxDays behind the user's newest), which the batch twin
-    * also excludes; parity is exact under that shared truncation. */
-  def streamingEwmaDailySpend(events: DataFrame, maxDays: Int = 32): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    require(maxDays >= 1 && maxDays <= 32, "weight ladder must fit int64/2^53")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.selectExpr("user_id",
-        s"${graft.operators.EventAnalytics.dayIdxSql("ts", "2024-01-01")} AS d",
-        "CAST(round(value * 100) AS BIGINT) AS cents")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Seq[(Long, Long)], (Long, Long, Double)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        case (userId, rows, state: GroupState[Seq[(Long, Long)]]) =>
-          val acc = scala.collection.mutable.Map[Long, Long]() ++
-            state.getOption.getOrElse(Nil)
-          rows.foreach { case (_, d, c) => acc(d) = acc.getOrElse(d, 0L) + c }
-          // most recent maxDays days, newest first (rank i = 2^-i weight)
-          val kept = acc.toSeq.sortBy(-_._1).take(maxDays)
-          state.update(kept)
-          val s = kept.zipWithIndex
-            .map { case ((_, c), i) => c * (1L << (maxDays - 1 - i)) }.sum
-          val ewma = BigDecimal(s.toDouble / (1L << (maxDays - 1)) / 100.0)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          Iterator((userId, kept.size.toLong, ewma))
-      }
-      .toDF("user_id", "n_days", "ewma")
-  }
-
-  /** Deterministic HLL distinct-count lifted to streaming
-    * (`Sketches.hllDistinct`'s twin) — the live-dashboard shape: per
-    * event_type, state is the 64-register sketch itself (the whole point
-    * of a mergeable sketch: O(m) state per group FOREVER, no per-user
-    * state), each micro-batch folds its rows in with register max, and
-    * every update emits the refreshed estimate. The register recipe is
-    * bit-for-bit the batch operator's (sha256("hll:" || user_id), bucket =
-    * byte0 mod 64, rho over bytes 1..6, estimate = the same folded
-    * numerator / exact integer register sum), so after any prefix of the
-    * stream the emission EQUALS the batch operator run on that prefix —
-    * the parity StreamingSpec asserts exactly that. Output per update:
-    * (event_type, n_seen, n_zero, est); n_seen is monotone, so "latest
-    * state" = max n_seen per key. */
-  def streamingHllDistinct(events: DataFrame, p: Int = 6): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    require(p >= 4 && p <= 8, s"p must be in [4, 8], got $p")
-    val m = 1 << p
-    val numerator = graft.operators.Sketches.hllNumerator(m).toDouble
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("event_type"), col("user_id"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Map[Int, Int]), (String, Long, Long, Double)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        case (etype, rows, state: GroupState[(Long, Map[Int, Int])]) =>
-          var (nSeen, regs) = state.getOption.getOrElse((0L, Map.empty[Int, Int]))
-          rows.foreach { case (_, userId) =>
-            nSeen += 1
-            val d = java.security.MessageDigest.getInstance("SHA-256")
-              .digest(s"hll:$userId".getBytes("UTF-8")).map(_ & 0xff)
-            val bucket = d(0) % m
-            val bits = (1 to 6)
-              .flatMap(j => (7 to 0 by -1).map(b => (d(j) >> b) & 1))
-            val rho = bits.indexOf(1) match { case -1 => 49; case i => i + 1 }
-            if (rho > regs.getOrElse(bucket, 0)) regs += bucket -> rho
-          }
-          state.update((nSeen, regs))
-          val intsum = (0 until m).map(b => 1L << (49 - regs.getOrElse(b, 0))).sum
-          val est = BigDecimal(numerator / intsum)
-            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-          Iterator((etype, nSeen, (m - regs.size).toLong, est))
-      }
-      .toDF("event_type", "n_seen", "n_zero", "est")
-  }
-
-  /** Scene-cut detection lifted to streaming (`Multimodal.sceneCuts`'
-    * twin) — the live-camera shape: FRAMES arrive as a stream
-    * (media_id, frame_idx, frame_bytes), per-media state is ONE
-    * (last_idx, last_hash) pair, and each micro-batch folds its frames in
-    * frame_idx order, emitting the transition rows. Hashing is the same
-    * stub aHash unit as batch (`Multimodal.frameHash`); distance the same
-    * 4x16-bit band Hamming. Same in-order ingest contract as
-    * `streamingFunnel`: per-media arrival in frame order across batches.
-    * Output: (media_id, frame_idx, hamming, is_cut). */
-  def streamingSceneCuts(frames: DataFrame, cutDist: Int = 48): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    require(cutDist >= 0 && cutDist <= 64)
-    val spark = frames.sparkSession
-    import spark.implicits._
-    frames.select(col("media_id"), col("frame_idx").cast("long"), col("frame_bytes"))
-      .as[(Long, Long, Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, String), (Long, Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        case (mediaId, rows, state: GroupState[(Long, String)]) =>
-          var prev = state.getOption
-          val out = Seq.newBuilder[(Long, Long, Long, Long)]
-          rows.toSeq.sortBy(_._2).foreach { case (_, idx, bytes) =>
-            val h = graft.multimodal.Multimodal.frameHash(bytes)
-            prev.foreach { case (_, ph) =>
-              val d = graft.multimodal.Multimodal.hexHamming(ph, h).toLong
-              out += ((mediaId, idx, d, if (d >= cutDist) 1L else 0L))
-            }
-            prev = Some((idx, h))
-          }
-          prev.foreach(state.update)
-          out.result().iterator
-      }
-      .toDF("media_id", "frame_idx", "hamming", "is_cut")
-  }
-
-  /** Streaming exact dedup: suppress re-deliveries of the same `event_id`
-    * arriving within the watermark horizon. State is bounded — an id's
-    * dedup record is dropped once the watermark passes its event time
-    * (ids re-arriving later than the horizon are treated as new, the
-    * standard at-least-once ingest contract). */
-  def dedupEvents(events: DataFrame, horizon: String = "30 minutes"): DataFrame =
-    events.withWatermark("ts", horizon)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** The flagship search lifted to streaming: as chunks append to the
-    * index stream, maintain the running top-k per query in the state store
-    * and emit each query's refreshed result list per micro-batch. Scoring
-    * is the same map-only projection as batch search (queries broadcast via
-    * the crossJoin literal set); state per query is a bounded k-list —
-    * O(queries x k), watermark-free. Contract: on an append-only index
-    * (chunks immutable; re-deliveries allowed), the emitted top-k after any
-    * prefix equals batch search over the distinct chunks seen so far.
-    * Re-ingesting a chunk with changed text needs the batch rebuild path —
-    * k-bounded state cannot demote below rank k. */
-  def streamingTopK(index: DataFrame, queries: Seq[String], k: Int = 5):
-      DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.GraftFunctions.{cosine_similarity, hash_embed}
-    val spark = index.sparkSession
-    import spark.implicits._
-    require(queries.nonEmpty && queries.forall(_.trim.nonEmpty))
-    val q = queries.toDF("query").withColumn("qvec", hash_embed(col("query")))
-    val scored = index.crossJoin(broadcast(q))
-      .withColumn("score", cosine_similarity(col("embedding"), col("qvec")))
-      .filter(length(col("text")) > 0)
-      .select(col("query"), col("id"), col("score"))
-      .as[(String, String, Double)]
-    scored.groupByKey(_._1)
-      .flatMapGroupsWithState[List[(String, Double)], (String, Int, String, Double)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        case (query, rows, state: GroupState[List[(String, Double)]]) =>
-          // dedup by chunk id, MAX score winning — deterministic regardless
-          // of iterator order. On an append-only index (re-deliveries carry
-          // identical scores) this makes a re-delivered chunk occupy ONE
-          // rank, like batch search over distinct ids. Re-ingesting a chunk
-          // with CHANGED text is out of contract for k-bounded state (a
-          // demoted score cannot resurrect the truncated k+1-th entry) —
-          // that path is the batch rebuild.
-          val incoming = rows.map { case (_, id, s) => (id, s) }.toSeq
-          val merged =
-            (state.getOption.getOrElse(Nil) ++ incoming)
-            .groupMapReduce(_._1)(_._2)(math.max)
-            .toList
-            .sortBy { case (id, s) => (-s, id) } // score desc, id asc
-            .take(k)
-          state.update(merged)
-          merged.iterator.zipWithIndex.map { case ((id, s), i) =>
-            (query, i + 1, id, s)
-          }
-      }
-      .toDF("query", "rank", "id", "score")
-  }
-
-  /** Embedding-stream schema for ANN-index maintenance. */
-  // INVARIANT: engine-owned landing-dir format (see note at eventsSchema) —
-  // safe to force; fixture reads must go through `Tables` instead.
-  val embeddingsSchema = "vec_id BIGINT, embedding ARRAY<FLOAT>"
-
-  /** Streaming ANN-index maintenance — the online-vector-DB write path:
-    * each micro-batch of (vec_id, embedding) rows upserts into the
-    * PERSISTED IVF index via `Similarity.upsertIvfAt` (frozen centroids
-    * re-assign only the delta; dynamic partition overwrite rewrites only
-    * the touched cells, including the delta ids' OLD cells for moved
-    * vectors). Cheap streaming upserts between periodic full refits — the
-    * classic IVF maintenance contract, now fed by a stream. Exactly-once
-    * per batch comes from the checkpointed epoch + replace-by-id
-    * idempotence (re-running a batch rewrites the same rows). */
-  def streamingIvfUpsert(spark: SparkSession, landingDir: String,
-                         indexPath: String,
-                         checkpointDir: String): StreamingQuery = {
-    val vecs = spark.readStream.schema(embeddingsSchema).parquet(landingDir)
-    vecs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Similarity.upsertIvfAt(spark, indexPath, batch.toDF())
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Streaming incremental dedup — the admission-control form of
-    * `Similarity.rpCrossNearDupPairs`: each arriving micro-batch of
-    * (vec_id, embedding) rows is near-dup-checked AGAINST THE PERSISTED
-    * CORPUS before admission; duplicate pairs are reported through
-    * `onDupes` (epoch-tagged), and only novel vectors append to the
-    * corpus, so the corpus stays deduplicated as it grows. Per-batch work
-    * ~ batch-side bucket collisions, never batch x corpus.
-    *
-    * The novel rows are STAGED through a temp directory and appended from
-    * the materialized copy — the batch's plan reads the same corpus path
-    * it is about to append to, and a lazy self-referential write could
-    * otherwise re-list the directory mid-write (the `upsertIvfAt`
-    * durability rule). Duplicate pairs are locally checkpointed before the
-    * append for the same reason. */
-  def streamingCrossDedup(spark: SparkSession, landingDir: String,
-                          corpusPath: String, checkpointDir: String,
-                          threshold: Double = 0.3)
-                         (onDupes: (DataFrame, Long) => Unit): StreamingQuery = {
-    val vecs = spark.readStream.schema(embeddingsSchema).parquet(landingDir)
-    vecs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       epoch: Long) =>
-        if (!batch.isEmpty) {
-          val corpus = spark.read.parquet(corpusPath)
-          val dupes = graft.operators.Similarity
-            .rpCrossNearDupPairs(batch.toDF(), corpus, threshold)
-            .localCheckpoint()
-          onDupes(dupes, epoch)
-          val novel = batch.toDF().join(
-            dupes.select(col("vec_new").as("vec_id")).distinct(),
-            Seq("vec_id"), "left_anti")
-          // staged as a SIBLING of the corpus dir, not inside it: inside
-          // relied on the underscore-hidden-path convention, and a crash
-          // between write and delete would leak invisible garbage under the
-          // corpus. A retried epoch reuses its path via mode=overwrite; any
-          // older abandoned stage dirs are swept on the next batch.
-          val staging = s"$corpusPath.__staging"
-          val tmp = s"$staging/$epoch"
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            spark.sparkContext.hadoopConfiguration)
-          val stagingPath = new org.apache.hadoop.fs.Path(staging)
-          if (fs.exists(stagingPath))
-            fs.listStatus(stagingPath).foreach { st =>
-              if (st.getPath.getName != epoch.toString) fs.delete(st.getPath, true)
-            }
-          novel.write.mode("overwrite").parquet(tmp)
-          spark.read.parquet(tmp).write.mode("append").parquet(corpusPath)
-          fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Hybrid (vector + BM25) search lifted to streaming — the stats-refresh-
-    * per-batch form, which is the honest contract: BM25's corpus statistics
-    * (per-term df, avgdl, N) are GLOBAL aggregates that drift with every
-    * appended chunk, so unlike the vector leg (per-row scoring of immutable
-    * chunks — `streamingTopK`'s bounded per-query state suffices) the
-    * lexical leg cannot be maintained incrementally in bounded state: one
-    * new document shifts every document's score. Each micro-batch therefore
-    * upserts into the persisted index table (replace-by-id via
-    * `Engine.writeIndex`, same contract as `streamingUpsertIngest`), then
-    * batch `hybridSearchMany` re-runs over the full table with freshly
-    * derived stats, and the refreshed fused top-k per query is emitted
-    * through `onResult`. Per-batch cost is one stats pass + two ranked legs
-    * over the index — the price of exact stats; an approximate
-    * incremental-df variant would change scores, not just staleness. */
-  def streamingHybridSearch(spark: SparkSession, landingDir: String,
-                            indexDir: String, checkpointDir: String,
-                            queries: Seq[String], k: Int = 5)
-                           (onResult: (DataFrame, Long) => Unit): StreamingQuery = {
-    val docs = spark.readStream.schema(documentsSchema).parquet(landingDir)
-    Engine.ingest(docs).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       epoch: Long) =>
-        if (!batch.isEmpty) {
-          Engine.writeIndex(batch.toDF(), indexDir)
-          val index = Engine.readIndex(spark, indexDir)
-          onResult(Engine.hybridSearchMany(index, queries, k), epoch)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
   // ------------------------------------------------------------------
   // Epoch-partition maintenance scaffold
   //
-  // Five maintainers (BPE vocab, CMS grid, DDSketch buckets, KMV sketch,
-  // and the compaction path they share) ride the same mergeable-partials
-  // contract: each micro-batch reduces to a BOUNDED partial (additive
-  // counts or a k-bounded sketch) written under `epoch=<n>` with dynamic
-  // partition overwrite — a RETRIED epoch rewrites exactly its own
-  // partition, so per-batch delivery is idempotent (replace-by-partition,
+  // Every maintainer below (CMS grid, DDSketch buckets, KMV sketch, the lex
+  // index, ... and the compaction path they share) rides the same
+  // mergeable-partials contract: each micro-batch reduces to a BOUNDED
+  // partial (additive counts or a k-bounded sketch) written under `epoch=<n>`
+  // with dynamic partition overwrite — a RETRIED epoch rewrites exactly its
+  // own partition, so per-batch delivery is idempotent (replace-by-partition,
   // the `Engine.writeIndex` contract), unlike a read-merge-rewrite of a
-  // running total, which double-counts on retry. The matching `...At`
-  // reader folds the partials (sum / one more GroupedTopK) without ever
-  // touching raw history. The scaffold lives in exactly one place so the
-  // sixth maintainer cannot diverge from the contract (the retry test in
-  // StreamingSpec pins it).
+  // running total, which double-counts on retry. The matching `...At` reader
+  // folds the partials (sum / one more GroupedTopK) without ever touching raw
+  // history. The scaffold lives in exactly one place so a new maintainer
+  // cannot diverge from the contract (the retry test in StreamingSpec pins
+  // it).
   // ------------------------------------------------------------------
 
   /** The scaffold: per-batch `partial` → idempotent `epoch=<n>` partition
@@ -1053,59 +584,14 @@ object Streams {
       kept.unionByName(lexStatsRows(kept))
     }
 
-  /** One SHARED state read for a batch of lexical legs — the serving
-    * composition (q292/q299/q303) runs one BM25 leg per query, and each
-    * [[bm25StreamedAt]] call re-scans the state parquet (postings +
-    * doc-lengths) per leg. This pre-filters the postings ONCE to the
-    * union of all legs' token buckets and memoizes both frames
-    * (PlanCache), so N legs cost one state materialization + N in-memory
-    * bucket cuts. Each leg's rows are byte-identical to
-    * [[bm25StreamedAt]]'s: the per-leg bucket filter over the memoized
-    * superset equals the direct term-pruned read, and the scorer is the
-    * same `bm25Indexed`. */
-  def bm25StreamedLegsAt(spark: SparkSession, indexPath: String,
-                         termsByQuery: Seq[(Long, Seq[String])],
-                         k1: Double = 1.2, b: Double = 0.75)
-      : Seq[String] => DataFrame = {
-    val ta = graft.operators.TextAnalysis
-    val allBuckets = termsByQuery.flatMap(_._2)
-      .map(ta.tokenBucket(_).toInt).distinct
-    val st = epochsAt(spark, indexPath)
-    // the `(epoch, pbk)` layout makes this bucket cut a PARTITION filter
-    // (file pruning at the source, PlanShapeSpec-pinned; INT literals so
-    // the partition filter stays cast-free) — the scan reads only the
-    // legs' buckets' files, never the whole postings state
-    val p = graft.operators.PlanCache.memo(
-      st.filter(col("pbk").isin(allBuckets: _*))
-        .select("token", "doc_id", "tf", "dl", "pbk"))
-    // corpus stats fold from the tiny additive `kind='s'` partials — one
-    // row per epoch, partition-pruned to the pbk=-2 dir; NO doc-length
-    // pass and NO corpus-sized join anywhere in the serving path
-    val stats = graft.operators.PlanCache.memo(lexStatsFold(st))
-    val allB = allBuckets.toSet
-    terms => {
-      val tb = terms.map(ta.tokenBucket(_).toInt).distinct
-      // a leg outside the memoized superset would silently score against
-      // MISSING postings (bm25 drops to zero, fusion degrades to
-      // vector-only) — refuse instead
-      require(tb.forall(allB),
-        s"lexical leg terms $terms fall outside the bucket superset this " +
-          "reader was built from — build bm25StreamedLegsAt with the same " +
-          "termsByQuery the serving call uses")
-      ta.bm25CarriedDl(
-        p.filter(col("pbk").isin(tb: _*))
-          .select("token", "doc_id", "tf", "dl"), stats, terms, k1, b)
-    }
-  }
-
-  /** The FUSED form of [[bm25StreamedLegsAt]]: one already-scored
-    * (query_id, doc_id, bm25) frame for the whole serving batch, through
-    * [[graft.operators.TextAnalysis.bm25CarriedDlBatch]] — one postings
-    * pass and one df/stats broadcast instead of a filter+2-aggregation
-    * subtree per query (the r19 serving-plan fusion; scores bit-identical
-    * to the per-leg reader by the batch scorer's padding argument). Reads
-    * the same memoized bucket-superset scan, so the `(epoch, pbk)`
-    * partition pruning is unchanged. */
+  /** The FUSED form of [[bm25StreamedAt]] for a serving batch: one
+    * already-scored (query_id, doc_id, bm25) frame for the whole batch,
+    * through [[graft.operators.TextAnalysis.bm25CarriedDlBatch]] — one
+    * postings pass and one df/stats broadcast instead of a
+    * filter+2-aggregation subtree per query (the r19 serving-plan fusion;
+    * scores bit-identical to the per-query reader by the batch scorer's
+    * padding argument). The scan reads the batch's bucket superset once
+    * (memoized), pruned by the `(epoch, pbk)` partition layout. */
   def bm25StreamedBatchAt(spark: SparkSession, indexPath: String,
                           termsByQuery: Seq[(Long, Seq[String])],
                           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -1120,29 +606,6 @@ object Streams {
     ta.bm25CarriedDlBatch(
       p.select("token", "doc_id", "tf", "dl"), stats, termsByQuery, k1, b)
   }
-
-  /** Streaming BPE-vocabulary maintenance — the incremental form of
-    * `Bpe.bpeMerges`' corpus scan. The expensive half of BPE training at
-    * scale is the single full-corpus pass that builds the (word, n)
-    * frequency table; the merge rounds after it are bounded by the vocab.
-    * Word counts are ADDITIVE across document batches, so the vocab is
-    * exactly maintainable from per-batch deltas without ever rescanning
-    * earlier documents ([[epochPartials]] scaffold). `bpeVocabAt` folds
-    * the partitions back into (word, n); `Bpe.bpeMergesFromVocab`
-    * re-derives the merge trajectory from it, matching from-scratch
-    * training on the full corpus bit-for-bit (the StreamingSpec parity
-    * test). Partition count grows with batches — run `compactBpeVocabAt`
-    * while the stream is stopped. */
-  def streamingBpeVocab(docs: DataFrame, vocabPath: String,
-                        checkpointDir: String): StreamingQuery =
-    epochPartials(docs, vocabPath, checkpointDir)(
-      b => graft.operators.Bpe.wordCounts(b))
-
-  /** The maintained vocabulary as one (word, n) table: fold the per-epoch
-    * partial counts. One vocab-sized aggregation — no corpus access. */
-  def bpeVocabAt(spark: SparkSession, vocabPath: String): DataFrame =
-    epochsAt(spark, vocabPath)
-      .groupBy("word").agg(sum("n").as("n"))
 
   /** Streaming CMS maintenance — `Sketches.cmsGrid`'s incremental form,
     * and the literal realization of that operator's 100 TB note: "the
@@ -1335,28 +798,6 @@ object Streams {
       graft.operators.Similarity.scoreCellsFromScored(
         scoredVectorsAt(spark, scoredPath)))
 
-  /** Decile lift/gains from the maintained scored frame — batch
-    * `liftTable` rows over the union corpus. */
-  def liftStreamedAt(spark: SparkSession, scoredPath: String,
-                     positiveLabel: Int = 0, buckets: Int = 10): DataFrame =
-    graft.operators.Similarity.liftTableFromScored(
-      scoredVectorsAt(spark, scoredPath), positiveLabel, buckets)
-
-  /** Calibration table from the maintained scored frame — batch
-    * `calibrationTable` rows over the union corpus. */
-  def calibrationStreamedAt(spark: SparkSession, scoredPath: String,
-                            positiveLabel: Int = 0,
-                            bins: Int = 10): DataFrame =
-    graft.operators.Similarity.calibrationTableFromCells(
-      graft.operators.Similarity.scoreCellsFromScored(
-        scoredVectorsAt(spark, scoredPath)), positiveLabel, bins)
-
-  /** Compaction for the scored-vector epochs — the rows are immutable
-    * per-vector facts (append-only corpus), so the fold is the identity
-    * projection; compaction only resets the partition count. */
-  def compactScoredVectorsAt(spark: SparkSession, scoredPath: String): Unit =
-    compactEpochs(spark, scoredPath)(_.select("vec_id", "label", "f"))
-
   /** Streaming RFM maintenance — `EventAnalytics.rfmSegments`' incremental
     * form (the CRM segmentation that should track the live purchase
     * stream): per-user last-purchase ts is max-mergeable and count/cents
@@ -1406,10 +847,9 @@ object Streams {
     *
     * Per-batch cost: one keyed join of the batch's shingles against the
     * maintained table (one state scan — the honest price of exact
-    * first-occurrence semantics, the `streamingHybridSearch` stats-refresh
-    * argument) plus the min-merge write. For doc_id-ordered arrival the
-    * union of per-epoch outputs equals batch `shingleNovelty` over the
-    * full corpus (StreamingSpec parity). */
+    * first-occurrence semantics) plus the min-merge write. For doc_id-ordered
+    * arrival the union of per-epoch outputs equals batch `shingleNovelty`
+    * over the full corpus (StreamingSpec parity). */
   def streamingNovelty(docs: DataFrame, statePath: String, outPath: String,
                        checkpointDir: String): StreamingQuery =
     docs.writeStream
@@ -1536,15 +976,14 @@ object Streams {
       .select("doc_id", "n_blocks", "n_kept", "clean_sha")
 
   /** Streaming DSIR raw-pool maintenance — `Sampling.dsirSelect`'s
-    * incremental form for the SELECTION family. The expensive half of
-    * DSIR at scale is tokenizing the raw pool into hashed-unigram
-    * features; those per-doc histograms are additive across appended
-    * batches, so each micro-batch writes its own (doc_id, feature, n)
-    * partial ([[epochPartials]] scaffold) and corpus refresh re-derives
-    * the selection from the maintained state without ever re-scanning
-    * earlier documents. `dsirSelectAt` anchors to the oracled batch
-    * operator exactly as streaming BPE anchors to q170: selection from
-    * the folded state is bit-identical to `Sampling.dsirSelect` over the
+    * incremental form for the SELECTION family. The expensive half of DSIR at
+    * scale is tokenizing the raw pool into hashed-unigram features; those
+    * per-doc histograms are additive across appended batches, so each
+    * micro-batch writes its own (doc_id, feature, n) partial
+    * ([[epochPartials]] scaffold) and corpus refresh re-derives the selection
+    * from the maintained state without ever re-scanning earlier documents.
+    * `dsirSelectAt` anchors to the oracled batch operator (q172): selection
+    * from the folded state is bit-identical to `Sampling.dsirSelect` over the
     * full pool (StreamingSpec parity). */
   def streamingDsirFeatures(docs: DataFrame, featPath: String,
                             checkpointDir: String,
@@ -1563,11 +1002,6 @@ object Streams {
                    k: Int, dims: Int = 256): DataFrame =
     graft.operators.Sampling.dsirSelectFromFeatures(
       dsirFeaturesAt(spark, featPath), target, k, dims)
-
-  /** Compaction for the DSIR feature epochs — same contract. */
-  def compactDsirFeaturesAt(spark: SparkSession, featPath: String): Unit =
-    compactEpochs(spark, featPath)(
-      _.groupBy("doc_id", "feature").agg(sum("n").as("n")))
 
   /** Streaming cohort-LTV maintenance — `EventAnalytics.cohortLtv`'s
     * incremental form. Two mergeable facts ride one kind-tagged state
@@ -1661,24 +1095,24 @@ object Streams {
       _.groupBy("event_type", "d").agg(sum("o").as("o")))
 
   /** Streaming inverted-index maintenance — the incremental form of
-    * `TextAnalysis.writeLexIndex`. At 100 TB the index artifacts (postings
-    * (token, doc_id, tf) + doc lengths) are exactly the corpus statistics
-    * you cannot afford to re-derive per refresh: both are DOC-KEYED — an
-    * appended document contributes only its own rows — so each micro-batch
-    * writes its own partial index on the [[epochPartials]] scaffold and
-    * the fold is a plain union, never a re-scan of earlier text.
+    * `TextAnalysis.postings` + `docLengths`. At 100 TB the index artifacts
+    * (postings (token, doc_id, tf) + doc lengths) are exactly the corpus
+    * statistics you cannot afford to re-derive per refresh: both are
+    * DOC-KEYED — an appended document contributes only its own rows — so each
+    * micro-batch writes its own partial index on the [[epochPartials]]
+    * scaffold and the fold is a plain union, never a re-scan of earlier text.
     *
     * All artifacts ride ONE maintained table (the scaffold maintains one
     * path per stream), partitioned `(epoch, pbk)` so a term read is
     * FILE-pruned to its buckets (see [[LexPartCols]]): postings rows
-    * (kind='p') carry the `writeLexIndex` sha-derived token bucket AND
+    * (kind='p') carry the sha-derived `TextAnalysis.tokenBucket` AND
     * their doc's length `dl` (the serving scorer never joins doc
     * lengths), doc-length rows (kind='d', pbk=-1) stay as explicit
     * doc-keyed ground truth (zero-token documents still count toward
     * N/avgdl, exactly as in the batch index), and one ADDITIVE
     * corpus-stat partial per epoch (kind='s', pbk=-2) folds to
     * n_docs/avgdl without a doc-length pass. Append-only corpus contract
-    * (the BPE/DSIR twins' rule): a re-delivered doc_id would duplicate
+    * (the DSIR twin's rule): a re-delivered doc_id would duplicate
     * rows — upsert semantics live in [[upsertDocsAt]].
     * `bm25StreamedAt` scores the maintained index through
     * `bm25CarriedDl`, which shares its scoring tail with the batch
@@ -1692,9 +1126,8 @@ object Streams {
     * replace-by-partition idempotence key) THEN `pbk` — the sha-derived
     * token bucket, so a query's term read is FILE-pruned to its buckets'
     * partitions (the IVFADC treatment applied to the lexical store:
-    * `writeLexIndex` proved the 64-bucket layout for the batch index;
-    * the maintained state now shares it). Doc-length rows live under
-    * `pbk=-1`, the additive corpus-stat partials under `pbk=-2` — each
+    * 64 buckets, `TextAnalysis.tokenBucket`). Doc-length rows live
+    * under `pbk=-1`, the additive corpus-stat partials under `pbk=-2` — each
     * reader touches only the partitions its quantities live in. */
   private[graft] val LexPartCols = Seq("epoch", "pbk")
 
@@ -1906,28 +1339,12 @@ object Streams {
     out
   }
 
-  /** Batch bootstrap of the maintained lex state: land the whole corpus
-    * as ONE epoch partial in the `(epoch, pbk)` layout — the from-scratch
-    * twin of [[streamingLexIndex]] for backfills and scale rehearsals (a
-    * migration writes exactly the rows the stream would have produced;
-    * every `...At` reader then serves it unchanged). */
-  def writeLexState(spark: SparkSession, docsDf: DataFrame,
-                    path: String): Unit =
-    lexPartial(docsDf).withColumn("epoch", lit(0L))
-      .write.mode("overwrite").partitionBy(LexPartCols: _*).parquet(path)
-
   /** The maintained postings table (token, doc_id, tf, pbk) — only the
     * pbk>=0 partitions hold postings rows, so the read never opens the
     * doc-length or stat partitions. */
   def lexPostingsAt(spark: SparkSession, indexPath: String): DataFrame =
     epochsAt(spark, indexPath).filter(col("pbk") >= 0)
       .select("token", "doc_id", "tf", "pbk")
-
-  /** The maintained doc-lengths table (doc_id, dl) — partition-pruned to
-    * the pbk=-1 dirs. */
-  def lexDocLensAt(spark: SparkSession, indexPath: String): DataFrame =
-    epochsAt(spark, indexPath).filter(col("pbk") === -1)
-      .select("doc_id", "dl")
 
   /** BM25 over the maintained index — same rows as batch `bm25Indexed`
     * over a from-scratch index of the union corpus, through the
@@ -2134,13 +1551,6 @@ object Streams {
     graft.operators.Sketches.merkleFromLeaves(
       spark.read.parquet(leavesPath).select("bucket", "doc_id", "leaf"))
 
-  /** Collapse the vocab's epoch partitions into one, totals identical.
-    * Only while the maintaining stream is STOPPED — see streamingBpeVocab.
-    * Crash-safe via [[compactEpochs]]'s staged swap + self-healing. */
-  def compactBpeVocabAt(spark: SparkSession, vocabPath: String): Unit =
-    compactEpochs(spark, vocabPath)(
-      _.groupBy("word").agg(sum("n").as("n")))
-
   /** Compaction for the CMS grid epochs — same contract. */
   def compactCmsGridAt(spark: SparkSession, gridPath: String): Unit =
     compactEpochs(spark, gridPath)(
@@ -2167,22 +1577,11 @@ object Streams {
       _.groupBy("event_type", "v")
         .agg(sum("c1").as("c1"), sum("c2").as("c2")))
 
-  def compactLangCountsAt(spark: SparkSession, countsPath: String): Unit =
-    compactEpochs(spark, countsPath)(
-      _.groupBy("lang")
-        .agg(sum("n_docs").as("n_docs"), sum("chars_l").as("chars_l")))
-
   def compactRfmStatsAt(spark: SparkSession, statsPath: String): Unit =
     compactEpochs(spark, statsPath)(
       _.groupBy("user_id")
         .agg(max("last_ts").as("last_ts"), sum("frequency").as("frequency"),
           sum("monetary_cents").as("monetary_cents")))
-
-  /** Landing-dir schema for labeled embedding batches (the kNN-audit
-    * maintainer's input) — the [[embeddingsSchema]] invariant plus the
-    * class label the audits vote on. */
-  val labeledEmbeddingsSchema: String =
-    "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
 
   /** Streaming kNN-audit maintenance — the incremental form of
     * `Similarity.knnConfusion` and `Similarity.knnLabelNoise` for a
@@ -2261,11 +1660,6 @@ object Streams {
     graft.operators.Similarity.centroidDriftFromPartials(
       epochsAt(spark, statePath).select("label", "grp", "i", "s"))
 
-  /** Compaction for the centroid-drift partial epochs — same contract. */
-  def compactCentroidDriftAt(spark: SparkSession, statePath: String): Unit =
-    compactEpochs(spark, statePath)(
-      _.groupBy("label", "grp", "i").agg(sum("s").as("s")))
-
   /** Compaction for the kNN-audit candidate epochs — same contract; the
     * fold is the per-probe top-k merge, so the single surviving
     * partition IS the exact maintained candidate set. */
@@ -2276,37 +1670,4 @@ object Streams {
           df.select("query_id", "query_label", "vec_id", "label", "fx"),
           Seq(col("query_id")), Seq(desc("fx"), asc("vec_id")), k)
         .select("query_id", "query_label", "vec_id", "label", "fx"))
-
-  /** Per-user session windows with a 30-minute gap. */
-  def sessionCounts(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events.withWatermark("ts", "30 minutes")
-      .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum("value").as("session_value"))
-      .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
-        col("user_id"), col("n_events"), col("session_value"))
-
-  /** Stream-stream interval join — the streaming form of
-    * `Joins.intervalSelfJoin`: pairs of same-user events within
-    * `[0, windowSec)` across two event streams. Structured Streaming's
-    * stream-stream inner join requires watermarks on BOTH sides plus a
-    * time-range join condition; from those it bounds each side's state-store
-    * retention at (watermark horizon + windowSec), so state never grows with
-    * stream length. Same output contract as the batch operator:
-    * (user_id, id_a, id_b, gap_us), `id_b > id_a` breaking equal-ts ties. */
-  def intervalJoin(a: DataFrame, b: DataFrame, windowSec: Int = 300,
-                   horizon: String = "30 minutes"): DataFrame = {
-    val l = a.select(col("user_id"), col("event_id").as("id_a"),
-        col("ts").as("ts_a"))
-      .withWatermark("ts_a", horizon)
-    val r = b.select(col("user_id").as("user_b"), col("event_id").as("id_b"),
-        col("ts").as("ts_b"))
-      .withWatermark("ts_b", horizon)
-    l.join(r,
-        col("user_id") === col("user_b") &&
-          col("ts_b") >= col("ts_a") &&
-          col("ts_b") < col("ts_a") + expr(s"interval $windowSec seconds") &&
-          (col("ts_b") > col("ts_a") || col("id_b") > col("id_a")))
-      .select(col("user_id"), col("id_a"), col("id_b"),
-        (unix_micros(col("ts_b")) - unix_micros(col("ts_a"))).as("gap_us"))
-  }
 }

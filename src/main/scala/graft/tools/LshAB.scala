@@ -27,7 +27,7 @@ object LshAB {
 
     val threshold = 0.3
     // Optional octave: replicate the corpus k-fold with shifted ids (the
-    // ScaleRehearsal convention) so the two formulations' SHUFFLE cost can
+    // REHEARSAL.json octave convention) so the two formulations' SHUFFLE cost can
     // be compared where it matters — both arms see the identical pair set,
     // so the delta isolates bytes-moved, not pair volume.
     val k = sys.env.getOrElse("SPARK_GRAFT_LSH_K", "1").toInt

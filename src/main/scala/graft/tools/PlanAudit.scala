@@ -114,12 +114,6 @@ object PlanAudit {
     * are dynamic — the inverted rule closes that hole. */
   val specConstantTables: Set[String] = Set("nation", "region")
 
-  /** Kept for spec/back-compat readability: the named tables the original
-    * pricer enumerated (the inverted rule above supersedes it). */
-  val sfProportionalTables: Set[String] =
-    Set("lineitem", "orders", "customer", "part", "supplier", "partsupp",
-        "documents", "embeddings", "events")
-
   /** Broadcasts over SF-proportional scans that are legitimately bounded
     * for reasons the structural rule cannot see, keyed by query name →
     * (max allowed count, the bound). Entries must name their bound like
@@ -229,8 +223,7 @@ object PlanAudit {
       "exact all-pairs baseline: BNLJ side of the theta self-join (scale path: q45 rp-LSH)"),
     "q182_label_noise" -> (1,
       "exact audit baseline: corpus as query side by contract (scale path: ANN candidates)"),
-    // upsert deltas: micro-batches under the streaming ingest contract
-    // (Streams.streamingIvfUpsert et al.) — operationally bounded, and
+    // upsert deltas: micro-batches by contract — operationally bounded, and
     // broadcasting the delta is exactly what keeps the standing index
     // from shuffling on every batch
     "q10_upsert" -> (1, "upsert delta ids, micro-batch contract"),

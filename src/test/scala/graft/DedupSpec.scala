@@ -131,10 +131,11 @@ class DedupSpec extends AnyFunSuite {
       (i.toLong, s"shared boiler plate prefix $tail")
     }.toDF("doc_id", "text")
     // Uncapped: the boilerplate buckets pair every doc with every other.
-    assert(Dedup.jaccardCandidates(docs, Int.MaxValue).count() == 60L * 59 / 2)
+    assert(Dedup.jaccardPairs(docs, 0.0, maxShingleDf = Int.MaxValue)
+      .count() == 60L * 59 / 2)
     // Capped: frequent buckets are dropped before pair generation; only the
     // docs sharing distinctive (low-df) shingles remain candidates.
-    assert(Dedup.jaccardCandidates(docs, 5).count() < 60)
+    assert(Dedup.jaccardPairs(docs, 0.0, maxShingleDf = 5).count() < 60)
     // The true near-dup still surfaces, verified on its FULL shingle sets.
     val pairs = Dedup.jaccardPairs(docs, 0.5, maxShingleDf = 5)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet

@@ -600,7 +600,7 @@ class EngineSpec extends AnyFunSuite {
     assert(plan.nonEmpty)
   }
 
-  test("hybridServing: RRF fusion of a persisted-IVF-PQ probe and an injected lex leg equals a hand fusion") {
+  test("hybridServingScored: RRF fusion of a persisted-IVF-PQ probe and a pre-scored lex frame equals a hand fusion") {
     import graft.operators.{Similarity, TextAnalysis}
     val emb = Tables.embeddings(spark, TestSpark.sf0001)
       .select("vec_id", "embedding")
@@ -612,8 +612,14 @@ class EngineSpec extends AnyFunSuite {
         col("embedding").as("query_embedding"))
     val termsBy = Seq(0L -> Seq("join", "hash"), 1L -> Seq("customer"))
     val (k, nLeg, kRrf) = (4, 5, 60)
-    val got = Engine.hybridServing(coarse, pq, queries, termsBy,
-        ts => TextAnalysis.bm25(docs, ts), k = k, nLeg = nLeg)
+    // the batch's lexical side as ONE scored (query_id, doc_id, bm25) frame
+    val lexScored = termsBy.map { case (qid, ts) =>
+      TextAnalysis.bm25(docs, ts)
+        .select(lit(qid).as("query_id"), col("doc_id"), col("bm25"))
+    }.reduce(_ unionByName _)
+    def serve(batchSize: Int) = Engine.hybridServingScored(coarse, pq,
+      queries, batchSize, lexScored, k = k, nLeg = nLeg)
+    val got = serve(termsBy.size)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
         Option(r.get(2)).map(_.asInstanceOf[Int]),
@@ -646,19 +652,15 @@ class EngineSpec extends AnyFunSuite {
     assert(got.exists(r => r._3.nonEmpty && r._4.nonEmpty) ||
       got.exists(_._3.nonEmpty))
     // ranking path is GroupedTopK, never a global window
-    val plan = Engine.hybridServing(coarse, pq, queries, termsBy,
-      ts => TextAnalysis.bm25(docs, ts), k = k, nLeg = nLeg)
-      .queryExecution.optimizedPlan
+    val plan = serve(termsBy.size).queryExecution.optimizedPlan
     assert(graft.tools.PlanAudit.globalWindowFindings(plan).isEmpty,
-      "hybridServing must not plan a SinglePartition window")
-    // plan size is linear in the batch (one lexical branch per query), so
-    // the bound is ENFORCED, not documented: an oversized batch is
-    // rejected before any plan is built
-    val oversized = (0 to Engine.MaxServingBatch)
-      .map(i => i.toLong -> Seq("join"))
-    val err = intercept[IllegalArgumentException](
-      Engine.hybridServing(coarse, pq, queries, oversized,
-        ts => TextAnalysis.bm25(docs, ts), k = k, nLeg = nLeg))
-    assert(err.getMessage.contains("MaxServingBatch"))
+      "hybridServingScored must not plan a SinglePartition window")
+    // the request size is outside input, so the bound is ENFORCED, not
+    // documented: an oversized or empty batch is rejected before any plan
+    // is built
+    for (n <- Seq(Engine.MaxServingBatch + 1, 0)) {
+      val err = intercept[IllegalArgumentException](serve(n))
+      assert(err.getMessage.contains("MaxServingBatch"))
+    }
   }
 }

@@ -60,7 +60,7 @@ class GraphSpec extends AnyFunSuite {
     assert(h2 == Map("c" -> 0L, "b" -> 1L, "d" -> 1L, "a" -> 2L, "e" -> 2L))
   }
 
-  test("maxBasketSize cap: mega-basket pairs bounded, truncation deterministic, drops reported") {
+  test("maxBasketSize cap: mega-basket pairs bounded, truncation deterministic") {
     // one mega-basket of 50 items plus two small ones; cap at 10
     val mega = (0 until 50).map(i => (1L, i.toLong))
     val small = Seq((2L, 0L), (2L, 1L), (3L, 0L), (3L, 1L))
@@ -76,10 +76,6 @@ class GraphSpec extends AnyFunSuite {
     val pairs2 = Graph.coOccurrence(baskets.repartition(7), "g", "item", 10000,
         maxBasketSize = 10).as[(Long, Long, Long)].collect().toSeq
     assert(pairs.sorted == pairs2.sorted)
-    // the reporting twin names the truncated basket and its dropped volume
-    val drops = Graph.basketCapDrops(baskets, "g", "item", 10)
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(drops == Seq((1L, 50L, 40L)))
     // association rules on the same capped frame: marginals exclude capped
     // items entirely (no rule touches item >= 10)
     val rules = Graph.associationRules(baskets, "g", "item", 1, maxBasketSize = 10)

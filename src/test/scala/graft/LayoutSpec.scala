@@ -28,21 +28,6 @@ class LayoutSpec extends AnyFunSuite {
     }
   }
 
-  test("clusterByZ: content-preserving relayout; partitions are z-contiguous") {
-    val li = Tables.lineitem(spark, TestSpark.sf0001)
-      .select("l_partkey", "l_suppkey")
-    val laid = Layout.clusterByZ(li, "l_partkey", "l_suppkey", 4)
-    assert(laid.count() == li.count())
-    // per-partition z ranges must not overlap (range partition + local sort)
-    val ranges = laid.select(col("zval"), spark_partition_id().as("p"))
-      .groupBy("p").agg(min("zval").as("lo"), max("zval").as("hi"))
-      .as[(Int, Long, Long)].collect().sortBy(_._2)
-    ranges.sliding(2).foreach {
-      case Array((_, _, hi1), (_, lo2, _)) => assert(hi1 <= lo2)
-      case _ =>
-    }
-  }
-
   test("withHilbert: bijective on the grid; consecutive values are Manhattan-adjacent") {
     val n = 8 // bits = 3
     val grid = (for (x <- 0 until n; y <- 0 until n) yield (x.toLong, y.toLong))

@@ -123,15 +123,6 @@ class MultimodalSpec extends AnyFunSuite {
       .as[(Long, Long, Long)].collect().exists(p => p._1 == 2L || p._2 == 2L))
   }
 
-  test("frame sampling emits strided fixed-size blocks") {
-    val media = Multimodal.asMedia(
-      Seq((1L, "a" * 1000)).toDF("doc_id", "text"), "doc_id", "encode(text, 'utf-8')")
-    val frames = Multimodal.sampleFrames(media, frameSize = 100, stride = 2)
-      .as[(Long, Int, Array[Byte])].collect().sortBy(_._2)
-    assert(frames.length == 5) // offsets 0,200,400,600,800
-    assert(frames.forall(_._3.length == 100))
-  }
-
   test("sceneCuts: identical frames no cut, a changed frame cuts; hashes match standalone phash") {
     // 3 frames of 48 bytes: two identical, one wildly different
     val a = "x" * 48

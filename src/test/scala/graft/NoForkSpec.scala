@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GenDir
@@ -56,12 +57,13 @@ class NoForkSpec extends AnyFunSuite {
     val landing = s"$tmp/landing"
     Seq((1L, "spark window agg join"), (2L, "customer order batch join"))
       .toDF("doc_id", "text").coalesce(1).write.parquet(landing)
-    val docs = spark.readStream.schema(Streams.documentsSchema).parquet(landing)
+    val docs = spark.readStream.schema(StreamingSpec.documentsSchema).parquet(landing)
     val wave = childFaultsDuring {
       val q = Streams.streamingLexIndex(docs, s"$tmp/lex", s"$tmp/ckpt")
       assert(q.awaitTermination(120000))
     }
-    assert(Streams.lexDocLensAt(spark, s"$tmp/lex").count() == 2)
+    assert(Streams.epochsAt(spark, s"$tmp/lex").filter(col("pbk") === -1)
+      .count() == 2)
 
     val faults = Seq("partitionBy parquet write" -> write,
       "GenDir.rewrite commit" -> commit, "streamed lex wave" -> wave)

@@ -183,22 +183,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(got == Map(1L -> "de", 2L -> "es", 3L -> "fr", 4L -> "zh"))
   }
 
-  test("corpusSketch: HLL distinct within 5% of exact; quantiles within rank error") {
-    val docs = Tables.documents(spark, TestSpark.sf0001)
-    val row = TextAnalysis.corpusSketch(docs).collect()(0)
-    val toks = docs.selectExpr(s"explode(${TextAnalysis.tokensExpr}) AS t")
-    val exactDistinct = toks.select("t").distinct().count()
-    val approx = row.getAs[Long]("approx_distinct_tokens")
-    assert(math.abs(approx - exactDistinct).toDouble / exactDistinct < 0.05,
-      s"approx=$approx exact=$exactDistinct")
-    // exact token-length quantiles from a full sort
-    val lens = toks.selectExpr("length(t) AS l").orderBy("l")
-      .as[Int].collect()
-    def exactQ(q: Double) = lens(((lens.length - 1) * q).toInt)
-    assert(math.abs(row.getAs[Int]("p50_token_len") - exactQ(0.5)) <= 1)
-    assert(math.abs(row.getAs[Int]("p99_token_len") - exactQ(0.99)) <= 1)
-  }
-
   test("normalizeText: lowercases, collapses whitespace runs, trims") {
     val crafted = Seq(
       (1L, "  Hello\t\tWorld \n NEXT  line  "),
@@ -381,21 +365,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     val overlap = TextAnalysis.phraseSearch(crafted, Seq("a", "a"))
       .as[(Long, Long)].collect().toMap
     assert(overlap == Map(4L -> 2L)) // positions 0-1 and 1-2
-  }
-
-  test("lex index lifecycle: persisted-index bm25 equals in-memory; scan is partition-pruned") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-lexidx").toString
-    TextAnalysis.writeLexIndex(docs, tmp)
-    val terms = Seq("join", "hash")
-    val fromDisk = TextAnalysis.bm25IndexedAt(spark, tmp, terms)
-    val inMem = TextAnalysis.bm25Indexed(
-      TextAnalysis.postings(docs), TextAnalysis.docLengths(docs), terms)
-    assert(fromDisk.as[(Long, Int, Long, Long, Double)].collect().toSet ==
-      inMem.as[(Long, Int, Long, Long, Double)].collect().toSet)
-    // the bucket filter must reach the source as a partition filter
-    val plan = fromDisk.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("pbk"),
-      s"expected pbk partition pruning in:\n$plan")
   }
 
   test("bm25Indexed: equals full-scan bm25 on its hit rows; miss terms contribute zero df") {

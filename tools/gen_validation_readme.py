@@ -69,8 +69,9 @@ for f, sf in (("planaudit_sf0001.txt", "sf0.001"),
 
 t = read("verify_dump.txt")
 if t:
-    item("`verify_dump.txt` — full COLD-cache Verify at sf0.01 (every "
-         "graft-* tmp cache deleted first, so the streamed states and "
+    item("`verify_dump.txt` — full COLD-cache Verify at sf0.01 (no "
+         "graft-* build cache present: deleted first, or the JVM given a "
+         "fresh empty java.io.tmpdir, so the streamed states and "
          "persisted indexes rebuilt inside the one Verify JVM — the "
          "driver's exact environment).")
 
@@ -95,6 +96,22 @@ if t:
     item(f"`gate_check.txt` — the no_oracle gate metrics recomputed "
          f"INDEPENDENTLY from the dumps (tools/gate_check.py): {npass} "
          f"PASS lines; `gates.json` copied alongside.")
+
+t = read("perfbench_tests.txt")
+if t:
+    ran = one(r"Ran (\d+) tests?", t, "perfbench test count")
+    m = re.search(r"^(OK.*|FAILED.*)$", t, re.M)
+    item(f"`perfbench_tests.txt` — `python3 -m unittest discover -s "
+         f"perfbench/tests`: {ran} tests, "
+         f"{m.group(1) if m else 'no status line'}.")
+
+t = read("public_callers.txt")
+if t:
+    keep = one(r"KEEP \((\d+) public members", t, "public_callers KEEP count")
+    uncalled = len(re.findall(r"^(UNCALLED|STALE KEEP) ", t, re.M))
+    item(f"`public_callers.txt` — `tools/public_callers.py`: {keep} KEEP "
+         f"entries with reasons, {uncalled} uncalled or stale public "
+         f"members.")
 
 out = os.path.join(d, "README.md")
 open(out, "w").write("\n".join(lines) + "\n")
