@@ -9,6 +9,18 @@ object Bench {
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split("\\s+")(0)
     catch { case _: Throwable => "-1" }
 
+  /** Class name and message of `e` as JSON-safe text: a quote, backslash
+    * or newline (or a null message) must not break a diag line. */
+  private def describe(e: Throwable): String =
+    (e.getClass.getName + ": " + String.valueOf(e.getMessage))
+      .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
+
+  /** Run an untimed warm-up of `name`; a throw is reported on stderr (the
+    * timed reps then record the query as failed), never swallowed. */
+  private def warm(name: String)(body: => Unit): Unit =
+    try body
+    catch { case e: Throwable => System.err.println(s"bench: warm-up of $name failed: ${describe(e)}") }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -22,11 +34,9 @@ object Bench {
     SparkEntry.tune(spark)
     // Untimed warmup: JIT + codegen + parquet reader paths, so the first
     // timed query doesn't absorb JVM startup cost.
-    try {
-      spark.range(100000).selectExpr("sum(id)").collect()
-      SparkEntry.queries("q01_chunk")(spark, sfDir).count()
-      SparkEntry.queries("q12_tpch_agg")(spark, sfDir).count()
-    } catch { case _: Throwable => }
+    warm("spark.range")(spark.range(100000).selectExpr("sum(id)").collect())
+    Seq("q01_chunk", "q12_tpch_agg").foreach(n =>
+      warm(n)(SparkEntry.queries(n)(spark, sfDir).count()))
     // Untimed state warmup: every state-backed query (streamed-state
     // readers, persisted indexes, the JSONL fixture) runs once BEFORE the
     // timed loop so its build-once ensure* work (stream runs, index fits,
@@ -42,10 +52,7 @@ object Bench {
         n.contains("_maintained") || n.contains("_takedown") ||
         n.contains("_retrained") || n.contains("_readmit") ||
         n.contains("_cell_stats") || n == "q256_jsonl_ingest")
-      .foreach { n =>
-        try SparkEntry.queries(n)(spark, sfDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => }
-      }
+      .foreach(n => warm(n)(SparkEntry.queries(n)(spark, sfDir).queryExecution.toRdd.count()))
     // Three timed reps per query, keep the min: single-JVM local[n] timings
     // carry heavy run-to-run noise (GC/JIT/page-cache/co-load — r7 vs r8 ran
     // identical code and differed 1.8x in total), and the per-query min is
@@ -62,6 +69,7 @@ object Bench {
     val sweepLoads = collection.mutable.Buffer.empty[String]
     val attemptsByQuery =
       collection.mutable.Map.empty[String, Vector[(Boolean, Double)]].withDefaultValue(Vector())
+    val lastError = collection.mutable.Map.empty[String, String]
     (1 to reps).foreach { _ =>
       sweepLoads += loadavg
       names.foreach { name =>
@@ -71,17 +79,18 @@ object Bench {
         // DataFrame.count() lets Catalyst prune computed columns away and
         // under-measures projection-heavy queries.
         val ok = try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-          catch { case _: Throwable => false }
+          catch { case e: Throwable => lastError(name) = describe(e); false }
         attemptsByQuery(name) = attemptsByQuery(name) :+ ((ok, (System.nanoTime() - t0) / 1e9))
       }
     }
-    val results = names.map { name =>
+    // a fast FAILED rep must not mask a slow successful one: min over
+    // successes; a query whose every rep failed has no time at all — it
+    // is listed on the "failed" diag line, left out of every time and of
+    // the total, and the run exits non-zero
+    val failed = names.filter(n => attemptsByQuery(n).forall(!_._1))
+    val results = names.filterNot(failed.contains).map { name =>
       val attempts = attemptsByQuery(name)
-      // a fast FAILED rep must not mask a slow successful one: min over
-      // successes; only if every rep failed, report the failures' min
-      val succeeded = attempts.filter(_._1).map(_._2)
-      val best = if (succeeded.nonEmpty) succeeded.min else attempts.map(_._2).min
-      name -> (best, attempts.map(_._2))
+      name -> (attempts.filter(_._1).map(_._2).min, attempts.map(_._2))
     }.toMap
     // The driver's artifact keeps only the final ~2000 output characters;
     // full query names over 90 queries are ~2300 chars of JSON on their own
@@ -136,12 +145,11 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         detail.getBytes("UTF-8"))
     } catch { case e: Throwable =>
-      // class name + sanitized message: a quote/backslash/newline (or a
-      // null message) must not produce an unparseable diag line
-      val msg = (e.getClass.getName + ": " + String.valueOf(e.getMessage))
-        .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
-      println(s"""{"diag":"bench_detail_write_failed","err":"$msg"}""")
+      println(s"""{"diag":"bench_detail_write_failed","err":"${describe(e)}"}""")
     }
+    if (failed.nonEmpty)
+      println(failed.map(n => s"\"$n\":\"${lastError.getOrElse(n, "")}\"")
+        .mkString("""{"diag":"failed","queries":{""", ",", "}}"))
     graft.operators.PlanCache.releaseAll(spark)
     spark.stop()
     // printed LAST, after spark.stop(), so nothing lands between this line
@@ -149,5 +157,6 @@ object Bench {
     // it must fit inside the driver's ~2000-char tail window together with
     // sbt's epilogue, with generous headroom even if the query count doubles.
     println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"sf":"$sfLabel","reps":$reps,"agg":"min","loadavg_start":$loadStart,"loadavg_end":$loadEnd}""")
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

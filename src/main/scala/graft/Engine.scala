@@ -770,16 +770,19 @@ object Engine {
     *     in as a frame so this serving façade does not depend on the
     *     streaming module): one postings pass for the batch, never a
     *     filter+2-aggregation subtree per query;
-    *   - fusion: the `hybridSearch` RRF tail — each leg ranks its top
-    *     `nLeg` independently (GroupedTopK shapes, so only
-    *     2 × nLeg × |queries| rows survive to the fusion), then
+    *   - fusion: ONE per-query step ([[fuseQuery]]) over the two legs
+    *     cogrouped by query_id — each leg ranked to its top `nLeg`, then
     *     `rrf = 1/(kRrf + rnk_vec) + 1/(kRrf + rnk_lex)` with a missing
-    *     leg contributing 0.
+    *     leg contributing 0, top `k` by (rrf desc, doc_id asc). Both legs
+    *     arrive hash-partitioned by query_id, so the fusion adds no
+    *     exchange; it is a grouped operator, never a global window.
     *
     * The two legs address one catalog: `vec_id` in the vector index and
     * `doc_id` in the lexical index name the same document. Per-query cost
     * is (corpus/nLists × nProbe) code rows + the query terms' postings —
-    * nothing is refit and the corpus never shuffles. Deterministic
+    * nothing is refit and the corpus never shuffles. Building the frame
+    * runs no Spark job when the query frame is a local relation, and a
+    * batch runs at most 6 jobs (EngineSpec pins both). Deterministic
     * end-to-end (detKMeans cells, fixed-order ADC folds, integer-exact
     * BM25 stats), so the whole serving path is hash-oracled.
     * `batchSize` is the request's query count, held to
@@ -794,31 +797,69 @@ object Engine {
     require(batchSize >= 1 && batchSize <= MaxServingBatch,
       s"serving batch of $batchSize outside [1, MaxServingBatch=" +
         s"$MaxServingBatch] — split the request into smaller batches")
+    val spark = queries.sparkSession
+    import spark.implicits._
     val vec = graft.operators.Similarity
       .ivfPqProbe(coarse, pq, queries, nLeg, nProbe, shortlist)
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        col("rnk").cast("int").as("rnk_vec"),
-        lit(null).cast("int").as("rnk_lex"))
-    // rank the scored lexical frame per query through ONE GroupedTopK
-    // (never a per-leg global window)
-    val lex = graft.plans.GroupedTopK(lexScored.filter(col("bm25") > 0),
-        Seq(col("query_id")), Seq(desc("bm25"), asc("doc_id")), nLeg)
-      .select(col("query_id"), col("doc_id"),
-        lit(null).cast("int").as("rnk_vec"),
-        col("rank").cast("int").as("rnk_lex"))
-    // fuse by union + tiny groupBy, the hybridSearch rule: the only
-    // full-outer physical strategy is a sort-merge join, and both legs
-    // are already <= nLeg x |queries| rows
-    val fused = vec.unionByName(lex)
-      .groupBy("query_id", "doc_id")
-      .agg(min("rnk_vec").as("rnk_vec"), min("rnk_lex").as("rnk_lex"))
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(kRrf) + col("rnk_vec")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(kRrf) + col("rnk_lex")), lit(0.0)))
-    graft.plans.GroupedTopK(fused,
-        Seq(col("query_id")), Seq(desc("rrf"), asc("doc_id")), k)
-      .select(col("query_id"), col("doc_id"), col("rnk_vec"),
-        col("rnk_lex"), round(col("rrf"), 6).as("rrf"))
+      .select(col("query_id").cast("long").as("query_id"),
+        col("vec_id").cast("long").as("doc_id"), col("rnk"))
+      .groupBy("query_id").as[Long, VecRank]
+    val lex = lexScored.filter(col("bm25") > 0)
+      .select(col("query_id").cast("long").as("query_id"),
+        col("doc_id").cast("long").as("doc_id"), col("bm25").cast("double").as("bm25"))
+      .groupBy("query_id").as[Long, LexScore]
+    vec.cogroup(lex)(fuseQuery(k, nLeg, kRrf)).toDF()
+      .select(col("query_id"), col("doc_id"), col("rnk_vec"), col("rnk_lex"),
+        round(col("rrf"), 6).as("rrf"))
+  }
+
+  /** One vector-leg row: a query's candidate and its 1-based rank. */
+  final case class VecRank(query_id: Long, doc_id: Long, rnk: Int)
+
+  /** One lexical-leg row: a query's matched document and its BM25 score. */
+  final case class LexScore(query_id: Long, doc_id: Long, bm25: Double)
+
+  /** One fused row, `rrf` unrounded. */
+  final case class Fused(query_id: Long, doc_id: Long, rnk_vec: Option[Int],
+                         rnk_lex: Option[Int], rrf: Double)
+
+  /** The per-query fusion of [[hybridServingScored]]: rank the lexical
+    * rows by (bm25 desc in Spark's double order, doc_id asc) and keep the
+    * top `nLeg`, take each document's best rank per leg, score
+    * `1.0 / (kRrf + rank)` per present leg (vector first, as the SQL
+    * `coalesce(...) + coalesce(...)` adds them), and keep the top `k` by
+    * (rrf desc, doc_id asc). */
+  private def fuseQuery(k: Int, nLeg: Int, kRrf: Int)
+                       (qid: Long, vec: Iterator[VecRank],
+                        lex: Iterator[LexScore]): Iterator[Fused] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    val lexTop = scala.collection.mutable.PriorityQueue.empty[LexScore](
+      Ordering.fromLessThan[LexScore] { (a, b) =>
+        val c = compareDoubles(a.bm25, b.bm25)
+        c > 0 || (c == 0 && a.doc_id < b.doc_id)
+      })
+    lex.foreach { l =>
+      lexTop.enqueue(l)
+      if (lexTop.size > nLeg) lexTop.dequeue()
+    }
+    val ranks = scala.collection.mutable.Map.empty[Long, (Option[Int], Option[Int])]
+    def best(r: Option[Int], n: Int) = Some(r.fold(n)(math.min(_, n)))
+    vec.foreach { v =>
+      val (rv, rl) = ranks.getOrElse(v.doc_id, (None, None))
+      ranks(v.doc_id) = (best(rv, v.rnk), rl)
+    }
+    lexTop.dequeueAll[LexScore].reverse.zipWithIndex.foreach { case (l, i) =>
+      val (rv, rl) = ranks.getOrElse(l.doc_id, (None, None))
+      ranks(l.doc_id) = (rv, best(rl, i + 1))
+    }
+    def rrf(r: Option[Int]) = r.fold(0.0)(n => 1.0 / (kRrf + n))
+    ranks.toSeq
+      .map { case (d, (rv, rl)) => Fused(qid, d, rv, rl, rrf(rv) + rrf(rl)) }
+      .sortWith { (a, b) =>
+        val c = compareDoubles(a.rrf, b.rrf)
+        c > 0 || (c == 0 && a.doc_id < b.doc_id)
+      }
+      .take(k).iterator
   }
 
   /** The hybrid-search keyword normalization, shared by every text-in

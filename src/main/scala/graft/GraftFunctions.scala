@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
-import graft.functions.{Adc, ByteDot, ChunkText, CosineSimilarity, DotTable, HashEmbed, HilbertIndex, JaroWinkler, L2Normalize, MinGramHash, MinHashSig, NearestCell, PqEncode, RandProjBuckets, Residual, SignSketch, SimHash, SqDist, TermCounts, VecTables, WordShingles}
+import graft.functions.{Adc, ByteDot, ChunkText, CosineSimilarity, DotTable, HashEmbed, HilbertIndex, JaroWinkler, L2Normalize, MinGramHash, MinHashSig, NearestCell, PqEncode, ProbeAdc, ProbeBatch, QueryCosine, QueryTerms, RandProjBuckets, Residual, SignSketch, SimHash, SqDist, TermBatch, TermCounts, VecTables, WordShingles}
 
 /** Column-API + SQL-registry surface for the custom Catalyst expressions.
   *
@@ -12,7 +12,8 @@ import graft.functions.{Adc, ByteDot, ChunkText, CosineSimilarity, DotTable, Has
   * (SURVEY §2.12, §7.3), each a codegen'd expression in `graft.functions`.
   * `GraftExtensions.functionSpecs` lists the ones also registered for
   * SQL; the vector-quantization kernels take a driver-side table
-  * ([[VecTables]]) and have a Column form only.
+  * ([[VecTables]]) and the serving kernels a per-batch one ([[ProbeBatch]],
+  * [[TermBatch]]), so those have a Column form only.
   */
 object GraftFunctions {
 
@@ -104,6 +105,18 @@ object GraftFunctions {
 
   /** The ADC score: `lt[s][codes[s]]` summed subspace-ascending. */
   def adc(lt: Column, codes: Column): Column = col(Adc(ex(lt), ex(codes)))
+
+  /** `(query_id, adc)` per batch query probing `cell` — `inline` it. */
+  def probe_adc(cell: Column, codes: Column, batch: ProbeBatch): Column =
+    col(ProbeAdc(ex(cell), ex(codes), batch))
+
+  /** Cosine of a vector with the batch query `query_id`'s embedding. */
+  def query_cosine(queryId: Column, embedding: Column, batch: ProbeBatch): Column =
+    col(QueryCosine(ex(queryId), ex(embedding), batch))
+
+  /** `(query_id, idx)` per batch query term equal to `token` — `inline` it. */
+  def query_terms(token: Column, terms: TermBatch): Column =
+    col(QueryTerms(ex(token), terms))
 
   /** Register every custom expression as a temp SQL function in an existing
     * session. Idempotent. (Sessions created from config should prefer

@@ -1,14 +1,11 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
 /** The vector-quantization kernels behind the IVF, PQ, IVF-PQ and residual
@@ -209,7 +206,41 @@ object VectorQuant {
     a
   }
 
-  private[functions] def isArrayOf(dt: DataType, et: DataType): Boolean = dt match {
+  /** Driver-side PQ lookup tables of a normalized vector `nv`: for subspace
+    * `s`, [[dotTable]] of `slice(nv, s * w + 1, w)` with codebook `s` — the
+    * in-plan `array(dot_table(slice(...)), ...)`, Spark's `slice` cut
+    * included (a window past the end is truncated; nulls are kept). */
+  def lookupTables(nv: ArrayData, books: Seq[VecTables]): ArrayData =
+    new GenericArrayData(books.indices.map { s =>
+      val w = books(s).width
+      val from = math.min(s * w, nv.numElements())
+      val cut = new GenericArrayData(
+        (from until math.min(from + w, nv.numElements())).map { i =>
+          if (nv.isNullAt(i)) null else nv.getDouble(i)
+        }.toArray[Any])
+      dotTable(cut, books(s), cosine = false): Any
+    }.toArray)
+
+  /** Driver-side probe set: the `nProbe` cells whose centroids have the
+    * highest cosine with `nv` rounded to f32 (the probe rule: normalized
+    * queries in f32 against the stored centroids), ordered by (score desc
+    * in Spark's double order, cell asc), so a tie goes to the lower cell. */
+  def probeCells(nv: ArrayData, cells: Array[Int], cents: Array[ArrayData],
+                 centFloat: Boolean, nProbe: Int): Array[Int] = {
+    val f = new Array[Float](nv.numElements())
+    var i = 0
+    while (i < f.length) { f(i) = nv.getDouble(i).toFloat; i += 1 }
+    val nvF = UnsafeArrayData.fromPrimitiveArray(f)
+    cells.indices
+      .map(r => (CosineSimilarity.cosine(nvF, cents(r), true, centFloat), cells(r)))
+      .sortWith { case ((sa, ca), (sb, cb)) =>
+        val c = SQLOrderingUtil.compareDoubles(sa, sb)
+        c > 0 || (c == 0 && ca < cb)
+      }
+      .take(nProbe).map(_._2).toArray
+  }
+
+  private[graft] def isArrayOf(dt: DataType, et: DataType): Boolean = dt match {
     case ArrayType(`et`, _) => true
     case _                  => false
   }
@@ -243,14 +274,10 @@ final class VecTables(val rows: Array[Array[Array[Double]]], val ids: Array[Int]
     math.sqrt(a)
   }
 
-  @transient lazy val digest: String = {
-    val md = MessageDigest.getInstance("SHA-256")
-    val buf = ByteBuffer.allocate(8)
-    def put(l: Long): Unit = { buf.clear(); buf.putLong(l); md.update(buf.array()) }
+  @transient lazy val digest: String = Digest.of { put =>
     put(m.toLong); put(ids.length.toLong); put(width.toLong)
     ids.foreach(i => put(i.toLong))
     rows.foreach(_.foreach(_.foreach(x => put(java.lang.Double.doubleToRawLongBits(x)))))
-    md.digest().map("%02x".format(_)).mkString
   }
 
   override def equals(o: Any): Boolean = o match {

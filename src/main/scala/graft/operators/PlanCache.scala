@@ -28,7 +28,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object PlanCache {
 
-  private val tracked =
+  private[graft] val tracked =
     mutable.Map.empty[SparkSession, mutable.ArrayBuffer[DataFrame]]
 
   /** Persist MEMORY_AND_DISK unless this exact (canonicalized) plan is

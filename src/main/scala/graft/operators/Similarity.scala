@@ -4,11 +4,14 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, Normalizer}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{FloatType, LongType}
 
-import graft.GraftFunctions.{adc, cosine_similarity, dot_table, l2_normalize, nearest_cell, pq_encode, residual}
-import graft.functions.VecTables
+import graft.GraftFunctions.{adc, cosine_similarity, dot_table, l2_normalize, nearest_cell, pq_encode, probe_adc, query_cosine, residual}
+import graft.functions.{ProbeBatch, VecTables, VectorQuant}
 
 /** Similarity-search operators over an embedding column (`array<float>`):
   *
@@ -469,13 +472,17 @@ object Similarity {
     * index dir reads directly. */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
     val dir = resolveIndexDir(spark, path)
+    // centroid tables only change by a rewrite of their dir (retrain /
+    // split land as new generations; upserts freeze centroids) — collect
+    // the nLists rows once per dir content stamp and serve them as a local
+    // relation, so a probe ranks its cells on the driver without a job
+    val (schema, rows) = Memo.loads(spark,
+        s"cents|$dir|${Memo.dirStamp(spark, s"$dir/centroids")}") {
+      val df = spark.read.parquet(s"$dir/centroids")
+      (df.schema, df.collect())
+    }
     IvfIndex(CellStore.read(spark, s"$dir/assignments"),
-      // centroid tables only change by a rewrite of their dir (retrain /
-      // split land as new generations; upserts freeze centroids) — memo
-      // the frame's listing/schema work keyed on the dir's content stamp
-      Memo.loads(spark,
-          s"cents|$dir|${Memo.dirStamp(spark, s"$dir/centroids")}")(
-        spark.read.parquet(s"$dir/centroids")))
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
   }
 
   /** One-off IVF index build: KMeans-partition the corpus into `nLists`
@@ -2004,84 +2011,81 @@ object Similarity {
     * (the `ivfProbe` probe rule: f32-rounded normalized queries against
     * f32 stored centroids, cosine, top-`nProbe` cells), ADC over the
     * loaded codes of candidate cells only (lookup tables from the loaded
-    * f64 codebooks ride the query broadcast), exact-cosine re-rank of the
-    * `shortlist` using the embeddings STORED IN the coarse assignments —
-    * so the whole probe touches nothing but the saved files.
+    * f64 codebooks), exact-cosine re-rank of the `shortlist` using the
+    * embeddings STORED IN the coarse assignments — so the whole probe
+    * touches nothing but the saved files.
     *
-    * When the codes table is CELL-PARTITIONED (the
-    * [[savePqCellPartitioned]] IVFADC layout — `codes.cell` equals the
-    * coarse assignment by construction), the probed cells are collected
-    * driver-side (a bounded |queries| × nProbe list, the `deleteIvfAt`
-    * bounded-collect convention) and pushed as a STATIC partition filter
-    * on BOTH big-table scans: the codes scan reads only the probed
-    * cells' code files (the candidates ARE the codes rows of those
-    * cells — no assignments-side join needed before ADC), and the
-    * re-rank reads only the probed cells' assignment partitions. Nothing
-    * corpus-sized shuffles: the ADC stage is a pruned scan × broadcast
-    * probe join, per-batch cost ~ (corpus/nLists × nProbe) m-byte code
-    * rows + shortlist f32 rows — the billion-scale IVFADC serving shape.
-    * A FLAT codes table (in-memory `pqIndex` output) takes the legacy
-    * shape: candidates from the assignments, SHUFFLE_HASH join against
-    * the full codes table. */
+    * The coordinator decides which cells a batch touches before any
+    * distributed work starts (REPOSE's pruning-metadata rule): the query
+    * vectors, their probe cells and their ADC lookup tables are computed
+    * on the driver ([[probeBatch]]), and ride into the plan inside the
+    * ADC and re-rank expressions ([[ProbeBatch]]), never
+    * as broadcast joins. The probed cells are a STATIC partition filter
+    * on both big-table scans of a cell-partitioned index
+    * ([[savePqCellPartitioned]]): the codes scan reads only the probed
+    * cells' code files, and the re-rank reads only their assignment
+    * partitions. Per batch the plan runs three stages and the result: the
+    * ADC shortlist (one exchange), its broadcast, and the re-rank.
+    * A FLAT codes table (in-memory `pqIndex` output) takes its candidates
+    * from the assignments through a SHUFFLE_HASH join on vec_id. */
   def ivfPqProbe(coarse: IvfIndex, pq: PqIndex, queries: DataFrame, k: Int,
                  nProbe: Int = 3, shortlist: Int = 64): DataFrame = {
-    val nq = normalized(queries, "query_embedding")
-      .select(col("query_id"),
-        vector_to_array(col("nvec")).cast("array<float>").as("nvec_arr"))
-    val probes = graft.plans.GroupedTopK(
-        nq.crossJoin(broadcast(coarse.centroids))
-          .withColumn("cscore", cosine_similarity(col("nvec_arr"), col("centroid")))
-          .select(col("query_id"), col("cell"), col("cscore")),
-        Seq(col("query_id")), Seq(desc("cscore"), asc("cell")), nProbe)
-      .select(col("query_id"), col("cell"))
-    val qlt = pqLookupTables(pq, queries)
-    val (short, rerankStore) =
-      if (pq.codes.columns.contains("cell")) {
-        // bounded collect: |queries| x nProbe (query_id, cell) rows, the
-        // serving batch's probe set. ONE evaluation of the probe-ranking
-        // subtree now serves both consumers: the collected cells make the
-        // partition filter STATIC (visible as PartitionFilters on the
-        // scan, no runtime pruning needed), and the collected rows re-enter
-        // the plan as a LocalRelation broadcast — previously the
-        // crossJoin+GroupedTopK ranking ran a second time inside the main
-        // plan as the broadcast build side, one full extra job per probe
-        // batch (r19 plan diff: the codes join's build side is a
-        // LocalTableScan instead of the 8-operator probe subtree).
-        val spark = queries.sparkSession
-        val probeRows = probes.collect()
-        val cells = probeRows.map(_.getInt(1)).distinct.toSeq
-        val probesLocal = spark.createDataFrame(
-          java.util.Arrays.asList(probeRows: _*), probes.schema)
-        val s = graft.plans.GroupedTopK(
-            pq.codes.filter(col("cell").isin(cells: _*))
-              .join(broadcast(probesLocal), Seq("cell"))
-              .join(broadcast(qlt), Seq("query_id"))
-              .select(col("query_id"), col("vec_id"), adc(col("lt"), col("codes")).as("adc")),
-            Seq(col("query_id")), Seq(desc("adc"), asc("vec_id")), shortlist)
-          .select("query_id", "vec_id")
-        // shortlisted ids live in probed cells by construction, so the
-        // same static filter prunes the re-rank's assignments scan too
-        (s, coarse.assignments.filter(col("cell").isin(cells: _*))
-          .select("vec_id", "embedding"))
-      } else {
-        val cand = coarse.assignments.select("vec_id", "cell")
-          .join(broadcast(probes), Seq("cell"))
-          .select("query_id", "vec_id")
-        val s = graft.plans.GroupedTopK(
-            cand.hint("SHUFFLE_HASH").join(pq.codes, Seq("vec_id"))
-              .join(broadcast(qlt), Seq("query_id"))
-              .select(col("query_id"), col("vec_id"), adc(col("lt"), col("codes")).as("adc")),
-            Seq(col("query_id")), Seq(desc("adc"), asc("vec_id")), shortlist)
-          .select("query_id", "vec_id")
-        (s, coarse.assignments.select("vec_id", "embedding"))
-      }
-    topKPerQuery(
+    val batch = probeBatch(coarse, pq, queries, nProbe)
+    val cellIn = col("cell").isin(batch.cells.flatten.distinct.sorted.toSeq: _*)
+    val cand =
+      if (pq.codes.columns.contains("cell")) pq.codes.filter(cellIn)
+      else coarse.assignments.filter(cellIn).select("vec_id", "cell")
+        .hint("SHUFFLE_HASH").join(pq.codes, Seq("vec_id"))
+    val short = graft.plans.GroupedTopK(
+        cand.select(col("vec_id"),
+          inline(probe_adc(col("cell"), col("codes"), batch))),
+        Seq(col("query_id")), Seq(desc("adc"), asc("vec_id")), shortlist)
+      .select("query_id", "vec_id")
+    // shortlisted ids live in probed cells by construction, so the same
+    // static filter prunes the re-rank's assignments scan too
+    val ranked = topKPerQuery(
       broadcast(short)
-        .join(rerankStore, Seq("vec_id"))
-        .join(broadcast(queries), Seq("query_id"))
+        .join(coarse.assignments.filter(cellIn).select("vec_id", "embedding"),
+          Seq("vec_id"))
         .withColumn("score",
-          cosine_similarity(col("embedding"), col("query_embedding"))),
+          query_cosine(col("query_id"), col("embedding"), batch)),
       k)
+    val qidType = queries.schema("query_id").dataType
+    if (qidType == LongType) ranked
+    else ranked.withColumn("query_id", col("query_id").cast(qidType))
+  }
+
+  /** The driver-side tables of one probe batch: the query frame collected
+    * (a local relation, such as a literal text batch, collects without a
+    * job; any other frame costs one bounded collect), each query
+    * normalized, its `nProbe` cells ranked against the centroid table
+    * (collected once per loaded snapshot, see [[loadIvfIndex]]) and its
+    * ADC lookup tables taken from the codebooks — the static kernels of
+    * [[VectorQuant]] the in-plan forms call. */
+  private def probeBatch(coarse: IvfIndex, pq: PqIndex, queries: DataFrame,
+                         nProbe: Int): ProbeBatch = {
+    val (qids, embs, embFloat) = vectorRows(
+      queries.select(col("query_id").cast("long"), col("query_embedding")))
+    val (cells, cents, centFloat) = vectorRows(
+      coarse.centroids.select(col("cell").cast("long"), col("centroid")))
+    val books = { val vt = VecTables.books(pq.codebooks); (0 until vt.m).map(vt.table) }
+    val nvs = embs.map { e =>
+      require(e != null, "every query needs an embedding")
+      VectorQuant.l2normalize(e, embFloat)
+    }
+    new ProbeBatch(qids,
+      nvs.map(VectorQuant.probeCells(_, cells.map(_.toInt), cents, centFloat, nProbe)),
+      nvs.map(VectorQuant.lookupTables(_, books)), embs, embFloat)
+  }
+
+  /** A collected (bigint key, vector) frame: keys, vectors in their
+    * catalyst form, and whether the vectors are f32. */
+  private def vectorRows(df: DataFrame): (Array[Long], Array[ArrayData], Boolean) = {
+    val t = df.schema(1).dataType
+    val conv = CatalystTypeConverters.createToCatalystConverter(t)
+    val rows = df.collect()
+    (rows.map(_.getLong(0)), rows.map(r => conv(r.get(1)).asInstanceOf[ArrayData]),
+      VectorQuant.isArrayOf(t, FloatType))
   }
 
   /** Build-once cache for the DECLARED persisted IVF-PQ query (q282) —

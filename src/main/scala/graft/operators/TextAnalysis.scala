@@ -663,7 +663,8 @@ object TextAnalysis {
     val dfs = hits.groupBy("token").agg(count(lit(1)).cast("double").as("df"))
     val dfRow = dfs.groupBy().pivot("token", terms).agg(first("df")).na.fill(0.0)
       .toDF(terms.indices.map(i => s"df_$i"): _*)
-    val score = terms.indices.map(bm25TermExpr(_, k1, b)).mkString(" + ")
+    val score = terms.indices.map(i => bm25TermExpr(s"tf_$i", s"df_$i", k1, b))
+      .mkString(" + ")
     perDoc
       .crossJoin(broadcast(stats)).crossJoin(broadcast(dfRow))
       .selectExpr(
@@ -672,33 +673,38 @@ object TextAnalysis {
           s"round($score, 6) AS bm25": _*)
   }
 
-  /** The term-i BM25 contribution as SQL text — ONE definition feeding
-    * [[bm25ScoreTail]] and [[bm25CarriedDlBatch]], so the per-leg and
-    * batched scorers evaluate the byte-identical f64 expression. */
-  private def bm25TermExpr(i: Int, k1: Double, b: Double): String =
-    s"""(ln((n_docs - df_$i + 0.5) / (df_$i + 0.5) + 1.0)
-        * (tf_$i * ${k1 + 1.0}) / (tf_$i + $k1 * (${1.0 - b} + $b * dl / avgdl)))"""
+  /** One term's BM25 contribution as SQL text over the double columns
+    * `tf` and `df` — ONE definition feeding [[bm25ScoreTail]] and
+    * [[bm25CarriedDlBatch]], so the per-leg and batched scorers evaluate
+    * the byte-identical f64 expression. */
+  private def bm25TermExpr(tf: String, df: String, k1: Double, b: Double): String =
+    s"""(ln((n_docs - $df + 0.5) / ($df + 0.5) + 1.0)
+        * ($tf * ${k1 + 1.0}) / ($tf + $k1 * (${1.0 - b} + $b * dl / avgdl)))"""
 
   /** [[bm25CarriedDl]] for a WHOLE serving batch in one plan — the fused
-    * lexical leg. The per-leg reader built one filter+2-aggregation
-    * subtree per query (86 Exchanges in q292's captured plan at batch 5);
-    * this scores every (query, doc) pair through ONE postings pass: hits
-    * join a broadcast (query_id, token, idx) relation, tf/df pivot by the
-    * term's index WITHIN ITS OWN query, and each query's score evaluates
-    * its own terms in their declared order.
+    * lexical leg: every (query, doc) pair scores through ONE postings pass
+    * and ONE exchange. The batch's terms ride into the scan inside a
+    * `query_terms` expression ([[graft.functions.TermBatch]]), which turns
+    * each postings row into one hit per (query, term) it matches — no
+    * broadcast join, and no literal term list in the generated code. The
+    * hits hash-partition by query_id, so every later step (df per query
+    * term, the per-doc sum, the serving fusion downstream) runs inside the
+    * partition; the corpus statistics `nDocs`/`avgdl` are the snapshot's
+    * driver-side values.
     *
     * Bit-exactness vs the per-leg scorer (what keeps the hybrid oracle
-    * hashes unchanged): queries are padded to the batch's max term count,
-    * and a padded slot contributes tf_i = 0, df_i = 0, whose term value is
+    * hashes unchanged): the per-leg score is the fixed-order sum over the
+    * query's terms, where an absent term contributes tf = 0 and so
     * `idf * 0.0 / positive = +0.0`; every real contribution is >= 0 (the
     * +1.0 inside ln keeps idf non-negative), and IEEE-754 `x + 0.0 = x`
-    * for x >= 0 — so the padded fixed-order sum is bit-identical to the
-    * leg's shorter one. tf/df/dl inputs are integer-exact either way, and
-    * the per-term expression text is shared ([[bm25TermExpr]]).
-    * `postings`: (token, doc_id, tf, dl); `stats`: one (n_docs, avgdl)
-    * row. Output: (query_id, doc_id, bm25) for docs matching >= 1 of the
-    * query's terms. */
-  def bm25CarriedDlBatch(postings: DataFrame, stats: DataFrame,
+    * for x >= 0 — so summing only the present terms, from 0.0, in term
+    * order (`aggregate` over the idx-sorted list) is bit-identical to the
+    * leg's sum. tf/df/dl inputs are integer-exact either way (one
+    * postings row per (token, doc)), and the per-term expression text is
+    * shared ([[bm25TermExpr]]).
+    * `postings`: (token, doc_id, tf, dl). Output: (query_id, doc_id,
+    * bm25) for docs matching >= 1 of the query's terms. */
+  def bm25CarriedDlBatch(postings: DataFrame, nDocs: Double, avgdl: Double,
                          termsByQuery: Seq[(Long, Seq[String])],
                          k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(termsByQuery.nonEmpty, "need at least one (query_id, terms) set")
@@ -708,31 +714,20 @@ object TextAnalysis {
       require(ts.distinct.size == ts.size,
         "terms within one query must be distinct (tf would double-count)")
     }
-    val spark = postings.sparkSession
-    import spark.implicits._
-    val maxN = termsByQuery.map(_._2.size).max
-    val termsRel = termsByQuery.flatMap { case (qid, ts) =>
-      ts.zipWithIndex.map { case (t, i) => (qid, t, i) }
-    }.toDF("query_id", "token", "idx")
-    val allTerms = termsByQuery.flatMap(_._2).distinct
-    val hits = postings.filter(col("token").isin(allTerms: _*))
-      .join(broadcast(termsRel), Seq("token"))
-    val tfAggs = (0 until maxN).map(i =>
-      sum(when(col("idx") === i, col("tf")).otherwise(0L))
-        .cast("double").as(s"tf_$i"))
-    val perDoc = hits.groupBy("query_id", "doc_id")
-      .agg(tfAggs.head, tfAggs.tail :+ max(col("dl")).as("dl"): _*)
-    // df_i = postings rows carrying query i's term, counted once per
-    // (query, token) — identical to the per-leg groupBy(token) count
-    val dfAggs = (0 until maxN).map(i =>
-      sum(when(col("idx") === i, 1L).otherwise(0L))
-        .cast("double").as(s"df_$i"))
-    val dfs = hits.groupBy("query_id").agg(dfAggs.head, dfAggs.tail: _*)
-    val score = (0 until maxN).map(bm25TermExpr(_, k1, b)).mkString(" + ")
-    perDoc
-      .join(broadcast(dfs), Seq("query_id"))
-      .crossJoin(broadcast(stats))
-      .selectExpr("query_id", "doc_id", s"round($score, 6) AS bm25")
+    postings
+      .select(col("doc_id"), col("tf").cast("double").as("tf"), col("dl"),
+        inline(graft.GraftFunctions.query_terms(col("token"),
+          new graft.functions.TermBatch(termsByQuery))))
+      .repartition(col("query_id"))
+      .withColumn("df", count(lit(1))
+        .over(Window.partitionBy("query_id", "idx")).cast("double"))
+      .withColumn("n_docs", lit(nDocs))
+      .withColumn("avgdl", lit(avgdl))
+      .selectExpr("query_id", "doc_id",
+        s"struct(idx, ${bm25TermExpr("tf", "df", k1, b)} AS c) AS t")
+      .groupBy("query_id", "doc_id").agg(collect_list("t").as("ts"))
+      .selectExpr("query_id", "doc_id",
+        "round(aggregate(array_sort(ts), 0.0D, (a, t) -> a + t.c), 6) AS bm25")
   }
 
   /** TF-IDF over the inverted index: returns exactly `tfidf(docs, terms)`'s

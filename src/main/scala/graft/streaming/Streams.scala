@@ -243,7 +243,7 @@ object Streams {
     * a stale-semantics parity failure at worst. */
   private val StateFormatVersion = "v4"
 
-  private def streamedStateBase(spark: SparkSession, sfDir: String,
+  private[graft] def streamedStateBase(spark: SparkSession, sfDir: String,
                                 tag: String, srcFile: String): String = {
     // stat failure is LOUD by design: a silent "nostamp" fallback would
     // let a `_STATE_READY` marker keep serving state built from a
@@ -267,20 +267,6 @@ object Streams {
     s"${System.getProperty("java.io.tmpdir")}/graft-docstream-$tag-" +
       graft.TmpCache.dirKey(
         sfDir + "|" + srcStamp + "|" + tag + "|" + StateFormatVersion)
-  }
-
-  /** Delete a cached two-wave state (marker, checkpoint, landing, state) —
-    * for specs that MUTATE their state (compaction) and must rebuild
-    * fresh on every run rather than inherit a prior run's mutation. */
-  private[graft] def dropStreamedTableState(spark: SparkSession,
-                                            sfDir: String, tag: String,
-                                            srcFile: String, waves: Int = 2,
-                                            compactAfterWave: Int = 0): Unit = {
-    val base = new org.apache.hadoop.fs.Path(
-      streamedStateBase(spark, sfDir,
-        s"$tag-w$waves-c$compactAfterWave", srcFile))
-    base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(base, true)
   }
 
   /** `waves` splits the table by `pmod(idCol, waves)` into that many
@@ -457,20 +443,24 @@ object Streams {
   private[graft] def epochsAt(spark: SparkSession, path: String): DataFrame =
     readStateDir(spark, path, resolveStateDir(spark, path))
 
+  /** [[readStateDir]] under the dir's current listing stamp. */
+  private def readStateDir(spark: SparkSession, path: String,
+                           dir: String): DataFrame =
+    readStateDir(spark, path, dir, graft.operators.Memo.dirStamp(spark, dir))
+
   /** The read half of [[epochsAt]] against an ALREADY-RESOLVED dir — so a
     * reader that needs several frames of one state (postings + stats)
     * resolves ONCE and can never mix two generations across its own
     * subreads. */
-  private def readStateDir(spark: SparkSession, path: String,
-                           dir: String): DataFrame =
+  private def readStateDir(spark: SparkSession, path: String, dir: String,
+                           stamp: String): DataFrame =
     // listing/footer-inference work memoized per state snapshot
     // (Memo.loads): the stamp covers the epoch dirs and their mtimes, so a
     // new wave, a compaction or a generation rewrite reads fresh, while
     // the 50+ maintained-state readers stop re-listing and re-inferring
     // an unchanged state on every invocation. The frame stays a lazy
     // plan — every execution re-reads the parquet files.
-    graft.operators.Memo.loads(spark,
-        s"state|$path|$dir|${graft.operators.Memo.dirStamp(spark, dir)}") {
+    graft.operators.Memo.loads(spark, s"state|$path|$dir|$stamp") {
       if (dir != path) spark.read.parquet(dir)
       else {
         val rootP = new org.apache.hadoop.fs.Path(path)
@@ -587,25 +577,43 @@ object Streams {
   /** The FUSED form of [[bm25StreamedAt]] for a serving batch: one
     * already-scored (query_id, doc_id, bm25) frame for the whole batch,
     * through [[graft.operators.TextAnalysis.bm25CarriedDlBatch]] — one
-    * postings pass and one df/stats broadcast instead of a
-    * filter+2-aggregation subtree per query (the r19 serving-plan fusion;
-    * scores bit-identical to the per-query reader by the batch scorer's
-    * padding argument). The scan reads the batch's bucket superset once
-    * (memoized), pruned by the `(epoch, pbk)` partition layout. */
+    * postings pass and one exchange instead of a filter+2-aggregation
+    * subtree per query (scores bit-identical to the per-query reader).
+    * The scan reads the batch's buckets straight from the `(epoch, pbk)`
+    * partition layout (no cached frame per batch: a serving loop of
+    * distinct term sets leaves the session's cache as it found it), and
+    * the corpus statistics come from [[lexStatsOf]], collected once per
+    * state snapshot. */
   def bm25StreamedBatchAt(spark: SparkSession, indexPath: String,
                           termsByQuery: Seq[(Long, Seq[String])],
                           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val ta = graft.operators.TextAnalysis
     val allBuckets = termsByQuery.flatMap(_._2)
       .map(ta.tokenBucket(_).toInt).distinct
-    val st = epochsAt(spark, indexPath)
-    val p = graft.operators.PlanCache.memo(
-      st.filter(col("pbk").isin(allBuckets: _*))
-        .select("token", "doc_id", "tf", "dl", "pbk"))
-    val stats = graft.operators.PlanCache.memo(lexStatsFold(st))
+    // ONE resolve and ONE listing stamp for postings AND stats, so the two
+    // can never come from different snapshots
+    val dir = resolveStateDir(spark, indexPath)
+    val stamp = graft.operators.Memo.dirStamp(spark, dir)
+    val st = readStateDir(spark, indexPath, dir, stamp)
+    val (nDocs, avgdl) = lexStatsOf(spark, st, s"$indexPath|$dir|$stamp")
     ta.bm25CarriedDlBatch(
-      p.select("token", "doc_id", "tf", "dl"), stats, termsByQuery, k1, b)
+      st.filter(col("pbk").isin(allBuckets: _*))
+        .select("token", "doc_id", "tf", "dl"),
+      nDocs, avgdl, termsByQuery, k1, b)
   }
+
+  /** The (n_docs, avgdl) of a state snapshot `st`, memoized under `key`
+    * (its dir and listing stamp): the `kind='s'` partials (|epochs| rows)
+    * collected once and summed on the driver — the same long sums and the
+    * same double division as [[lexStatsFold]]. */
+  private def lexStatsOf(spark: SparkSession, st: DataFrame,
+                         key: String): (Double, Double) =
+    graft.operators.Memo.loads(spark, s"lexstats|$key") {
+      val rows = st.filter(col("pbk") === -2).select("tf", "dl").collect()
+      require(rows.nonEmpty, s"lex state $key has no corpus-stat partials")
+      val n = rows.map(_.getLong(0)).sum.toDouble
+      (n, rows.map(_.getLong(1)).sum.toDouble / n)
+    }
 
   /** Streaming CMS maintenance — `Sketches.cmsGrid`'s incremental form,
     * and the literal realization of that operator's 100 TB note: "the

@@ -150,63 +150,26 @@ object PlanAudit {
     "q133_hard_negatives" -> (1, "labeled query batch"),
     "q143_triplets" -> (2, "query batch, one per (pos, neg) leg"),
     "q161_ann_recall" -> (1, "query batch (both audit arms are GroupedTopK-bounded)"),
-    // persisted-index probe: the loaded centroid table is nLists rows by
-    // index construction (detIvfIndex packages the driver-side centroid
-    // array — 8 rows here, never corpus-proportional); the probes frame
-    // is GroupedTopK-bounded at |queries| x nProbe and needs no entry
+    // persisted-IVF probe: the collected (query_id, cell) probe pairs
+    // re-joined to the query batch's embeddings — |queries| x nProbe rows
+    // over the literal-id-filtered query batch (the centroid table is a
+    // local relation collected once per snapshot, so it never scans). The
+    // persisted IVF-PQ probes need no entry: their per-query tables ride
+    // inside expressions and their one broadcast is the GroupedTopK-
+    // bounded shortlist
     "q261_ann_ivf_persisted" -> (1,
-      "persisted centroid table, nLists rows by index construction"),
-    // same centroid-table bound plus the q80 query-side pair (ADC lookup
-    // tables + re-rank query batch), all riding the |queries|/nLists
-    // bounds — the corpus side (assignments, codes) stays SHUFFLE_HASH/
-    // GroupedTopK-bounded
-    "q282_ann_ivfpq_persisted" -> (3,
-      "persisted centroid table (nLists rows) + query ADC lookup tables + query batch (re-rank)"),
-    // the serving composition's vector leg is exactly q282's probe (same
-    // three bounded frames); the lexical leg's stats/df rows are global
-    // aggregates (structurally bounded) over the term-pruned state read
-    "q292_hybrid_serving" -> (3,
-      "q282's probe frames: persisted centroid table (nLists rows) + query ADC lookup tables + query batch (re-rank)"),
-    // the erasure-leg probe reads the same saved centroid table as q261
+      "probe pairs + query embeddings, |queries| x nProbe rows (literal id filter)"),
     "q287_ann_ivf_deleted" -> (1,
-      "persisted centroid table, nLists rows by index construction"),
-    // the maintained-lifecycle probe reads the same saved centroid table
+      "probe pairs + query embeddings, |queries| x nProbe rows (literal id filter)"),
     "q297_ann_ivf_maintained" -> (1,
-      "persisted centroid table, nLists rows by index construction"),
-    // the post-retrain probe reads the swapped-in centroid table — still
-    // nLists rows by construction, whatever generation produced it
+      "probe pairs + query embeddings, |queries| x nProbe rows (literal id filter)"),
     "q301_ann_ivf_retrained" -> (1,
-      "persisted centroid table, nLists rows by index construction"),
-    // the retrained IVF-PQ probes exactly like q282 over the swapped-in
-    // generation — same three bounded frames
-    "q304_ann_ivfpq_retrained" -> (3,
-      "q282's probe frames over the retrained saved artifacts"),
+      "probe pairs + query embeddings, |queries| x nProbe rows (literal id filter)"),
     // the quantized erasure legs probe exactly like their persisted twins
     "q293_ann_sq8_deleted" -> (1,
       "quantized query batch (q290's frame; corpus side reads saved survivors)"),
     "q294_ann_bq_deleted" -> (2,
       "query sign-sketches + query batch (q291's frames; code scan reads saved survivors)"),
-    "q295_ann_ivfpq_deleted" -> (3,
-      "q282's probe frames over the post-delete saved artifacts"),
-    // the takedown composition probes exactly like q292 — q282's three
-    // bounded frames on the vector leg (read from the post-delete saved
-    // artifacts), lexical-leg stats structurally bounded as in q292
-    "q299_hybrid_takedown" -> (3,
-      "q292's probe frames over the post-takedown saved artifacts + deleted lex state"),
-    // the readmit composition probes exactly like q292 over the healed
-    // artifacts — same three bounded frames
-    "q303_hybrid_readmit" -> (3,
-      "q292's probe frames over the readmitted saved artifacts + healed lex state"),
-    // the TEXT-IN serving composition probes exactly like q292; its query
-    // batch is a literal 5-string local relation (hash-embedded in-plan),
-    // so at most the same three bounded frames reach a broadcast
-    "q306_hybrid_serving_text" -> (3,
-      "q292's probe frames; query batch is a literal 5-string local relation"),
-    // the maintained (>=3-wave + compacted) IVF-PQ probes exactly like
-    // its two-wave twin — same three bounded frames, whatever the upsert
-    // history or file layout of the coarse cells
-    "q300_ann_ivfpq_maintained" -> (3,
-      "q282's probe frames over the compacted multi-wave saved artifacts"),
     // the maintained CMS grid is the q222 frame read from state parquet:
     // d*w <= 256k cells by require(), parameter-bounded at any SF
     "q285_cms_topk_stream" -> (1,

@@ -663,4 +663,33 @@ class EngineSpec extends AnyFunSuite {
       assert(err.getMessage.contains("MaxServingBatch"))
     }
   }
+
+  test("hybridServingScored: q306's serving frame builds with 0 Spark jobs and collects in at most 6") {
+    // a session of its own: the declared queries tune their session's
+    // optimizer settings, which must not leak into later suites
+    val session = spark.newSession()
+    val q306 = SparkEntry.queries("q306_hybrid_serving_text")
+    // the first call builds both stores and fills the per-snapshot memos
+    // (centroid rows, codebooks, lex corpus stats); a served batch starts
+    // from there
+    val want = q306(session, TestSpark.sf0001).collect().map(_.toSeq).toSet
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val df = q306(session, TestSpark.sf0001)
+      org.apache.spark.SparkTestHooks.drainListeners(sc)
+      val built = jobs.get()
+      val got = df.collect().map(_.toSeq).toSet
+      org.apache.spark.SparkTestHooks.drainListeners(sc)
+      val ran = jobs.get() - built
+      assert(built == 0, s"building q306's frame ran $built Spark jobs")
+      assert(ran <= 6, s"collecting q306's frame ran $ran Spark jobs, budget 6")
+      assert(got == want && got.nonEmpty)
+    } finally sc.removeSparkListener(listener)
+  }
 }

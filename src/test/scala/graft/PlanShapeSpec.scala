@@ -175,7 +175,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("q292 hybrid serving: the lexical legs' shared postings scan is partition-pruned to the term buckets") {
     // the serving composition's lexical side reads the maintained state
-    // through ONE memoized bucket-superset scan — that scan must be
+    // through ONE bucket-superset scan — that scan must be
     // file-pruned to the legs' pbk buckets, the growth term the 32x
     // octave measured before the re-layout (hybridServing32 2.58x vs the
     // vector leg's 1.17x)

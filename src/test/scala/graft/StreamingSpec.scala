@@ -174,6 +174,26 @@ class StreamingSpec extends AnyFunSuite {
       s"fused batch scorer diverges: fused=${fused.take(5)} perLeg=${perLeg.take(5)}")
   }
 
+  test("bm25StreamedBatchAt: 200 served batches of distinct term sets leave the session's cached frames as after the first") {
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    val state = Streams.ensureStreamedDocState(
+      spark, docs, TestSpark.sf0001, "lex", waves = 4, compactAfterWave = 2,
+      compactor = Streams.compactLexIndexAt)(
+      (sd, out, ckpt) => Streams.streamingLexIndex(sd, out, ckpt))
+    // every batch adds a term of its own, so the bucket sets differ
+    def serve(i: Int): Unit = Streams.bm25StreamedBatchAt(spark, state,
+      Seq(0L -> Seq("join", s"w$i"), 1L -> Seq(s"v$i", "hash"))).collect()
+    def planCacheEntries =
+      graft.operators.PlanCache.tracked.get(spark).fold(0)(_.size)
+    serve(0)
+    val (cached, tracked) =
+      (org.apache.spark.SparkTestHooks.cachedRelations(spark), planCacheEntries)
+    (1 until 200).foreach(serve)
+    assert(org.apache.spark.SparkTestHooks.cachedRelations(spark) == cached,
+      "serving batches grew the session's cached relations")
+    assert(planCacheEntries == tracked, "serving batches grew PlanCache's entries")
+  }
+
   test("streamedStateBase stamps loudly; a regenerated source gets a fresh state dir, never the stale cache") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     // un-stattable source: the ensure* call must FAIL, not fall back to a
@@ -205,8 +225,7 @@ class StreamingSpec extends AnyFunSuite {
     // a SPEC-private state, dropped first: this test DELETES from its
     // state, and mutating the shared q259 cache would leave it behind for
     // the next run's assertions
-    Streams.dropStreamedTableState(
-      spark, TestSpark.sf0001, "mhband-spec", "documents.parquet")
+    StreamingSpec.dropDocState(spark, "mhband-spec")
     val state = Streams.ensureStreamedDocState(
       spark, docs, TestSpark.sf0001, "mhband-spec")(
       (sd, out, ckpt) => Streams.streamingMinhashBands(sd, out, ckpt))
@@ -227,8 +246,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet == survivorBatch)
     // the state is spec-private and now deleted-from: drop it so the next
     // run's >=2-epoch assertion rebuilds from scratch
-    Streams.dropStreamedTableState(
-      spark, TestSpark.sf0001, "mhband-spec", "documents.parquet")
+    StreamingSpec.dropDocState(spark, "mhband-spec")
   }
 
   test("streamingScoredVectors via two waves (q260): AUC from the maintained state equals batch separabilityAuc") {
@@ -1024,6 +1042,15 @@ class StreamingSpec extends AnyFunSuite {
 }
 
 object StreamingSpec {
+  /** Delete a spec-private two-wave doc state (marker, checkpoint, landing,
+    * state) — for specs that MUTATE their state and must rebuild fresh on
+    * every run rather than inherit a prior run's mutation. */
+  def dropDocState(spark: org.apache.spark.sql.SparkSession, tag: String): Unit = {
+    val base = new org.apache.hadoop.fs.Path(Streams.streamedStateBase(
+      spark, TestSpark.sf0001, s"$tag-w2-c0", "documents.parquet"))
+    base.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(base, true)
+  }
+
   // the landing-dir formats these specs write and stream back: the
   // fixture tables' shapes, forced so a stream needs no inference pass
   val eventsSchema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +

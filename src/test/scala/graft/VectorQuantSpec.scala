@@ -328,4 +328,92 @@ class VectorQuantSpec extends AnyFunSuite {
     assert(VecTables.books(cbs).hashCode == VecTables.books(cbs.map(_.map(_.clone()))).hashCode)
     assert(VecTables.books(moved) != VecTables.books(cbs))
   }
+
+  test("driver-side probe cells and lookup tables are bit-identical to the in-plan kernels (ties to the lower cell, parquet-sourced queries)") {
+    import org.apache.spark.ml.feature.Normalizer
+    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import graft.GraftFunctions.cosine_similarity
+    import graft.functions.{CosineSimilarity, VectorQuant}
+    val emb = Tables.embeddings(spark, TestSpark.sf0001)
+    // parquet-sourced queries, as q282 reads them: not a local relation
+    val dir = java.nio.file.Files.createTempDirectory("graft-vq-queries").toString
+    emb.filter($"vec_id" < 8)
+      .select($"vec_id".as("query_id"), $"embedding".as("query_embedding"))
+      .write.mode("overwrite").parquet(dir)
+    val queries = spark.read.parquet(dir)
+    assert(!queries.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    // f32 centroids: eight corpus vectors, plus cell 8 a copy of cell 3, so
+    // every query ties cells 3 and 8
+    val rows8 = emb.filter($"vec_id" >= 100 && $"vec_id" < 108).orderBy("vec_id")
+      .select("embedding").collect().map(_.getSeq[Float](0))
+    val cents = (rows8 :+ rows8(3)).toSeq.zipWithIndex.map { case (c, i) => (i, c) }
+    val nProbe = cents.size
+    // the in-plan probe ranking the serving plan ran before: Normalizer,
+    // f32 cast, cosine against the centroid table, GroupedTopK by
+    // (cscore desc, cell asc)
+    val nq = new Normalizer().setInputCol("vec").setOutputCol("nvec").setP(2.0)
+      .transform(queries.withColumn("vec",
+        array_to_vector($"query_embedding".cast("array<double>"))))
+      .select($"query_id", vector_to_array($"nvec").cast("array<float>").as("nvec_arr"))
+    val ref = graft.plans.GroupedTopK(
+        nq.crossJoin(cents.toDF("cell", "centroid"))
+          .withColumn("cscore", cosine_similarity($"nvec_arr", $"centroid")),
+        Seq($"query_id"), Seq(desc("cscore"), asc("cell")), nProbe)
+      .select("query_id", "cell", "rank", "cscore").collect().toSeq
+      .groupBy(_.getLong(0)).map { case (q, rs) =>
+        q -> rs.sortBy(_.getInt(2)).map(r => (r.getInt(1), r.getDouble(3)))
+      }
+    // the in-plan lookup tables over seeded codebooks (16 x 16 x 4)
+    val rnd = new Random(7)
+    val vt = VecTables.books(Seq.fill(16)(Seq.fill(16)(gaussian(rnd, 4))))
+    val tables = (0 until vt.m).map(vt.table)
+    val ltRef = queries.select($"query_id", array(tables.indices.map(s =>
+        dot_table(slice(l2_normalize($"query_embedding"), s * 4 + 1, 4), tables(s))): _*))
+      .collect().map(r => r.getLong(0) -> r.getSeq[scala.collection.Seq[Double]](1)).toMap
+    val f32 = createToCatalystConverter(ArrayType(FloatType))
+    val centData = cents.map(c => f32(c._2).asInstanceOf[ArrayData]).toArray
+    def bits(x: Double) = java.lang.Double.doubleToRawLongBits(x)
+    val qRows = queries.collect()
+    assert(qRows.length == 8 && ref.size == 8)
+    qRows.foreach { r =>
+      val q = r.getLong(0)
+      val nv = VectorQuant.l2normalize(f32(r.get(1)).asInstanceOf[ArrayData], isFloat = true)
+      val cells = VectorQuant.probeCells(nv, cents.map(_._1).toArray, centData,
+        centFloat = true, nProbe)
+      assert(cells.toSeq == ref(q).map(_._1), s"query $q: probe order diverges")
+      // the scores behind that order, bit for bit, and the planted tie
+      val nvF = UnsafeArrayData.fromPrimitiveArray(
+        Array.tabulate(nv.numElements())(i => nv.getDouble(i).toFloat))
+      ref(q).foreach { case (c, score) =>
+        assert(bits(CosineSimilarity.cosine(nvF, centData(c), true, true)) == bits(score))
+      }
+      val byCell = ref(q).toMap
+      assert(bits(byCell(3)) == bits(byCell(8)) && cells.indexOf(3) < cells.indexOf(8),
+        s"query $q: the tie must go to the lower cell")
+      val lt = VectorQuant.lookupTables(nv, tables)
+      assert(lt.numElements() == tables.size)
+      tables.indices.foreach { s =>
+        val got = lt.getArray(s)
+        val want = ltRef(q)(s)
+        assert(got.numElements() == want.size)
+        want.indices.foreach(i => assert(bits(got.getDouble(i)) == bits(want(i)),
+          s"query $q: lt[$s][$i] differs"))
+      }
+    }
+    // the serving probe takes the parquet frame through its one bounded
+    // collect and answers exactly as for the same rows held locally
+    val (coarse, pq) = Similarity.loadIvfPqAt(spark,
+      Similarity.ensurePersistedIvfPq(spark, emb.select("vec_id", "embedding"),
+        TestSpark.sf0001))
+    val local = spark.createDataFrame(java.util.Arrays.asList(qRows: _*), queries.schema)
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    def probe(qs: DataFrame) =
+      Similarity.ivfPqProbe(coarse, pq, qs, 3).collect().map(_.toSeq).toSet
+    val fromParquet = probe(queries)
+    assert(fromParquet.size == 24 && fromParquet == probe(local))
+  }
 }

@@ -107,11 +107,12 @@ if t:
 
 t = read("public_callers.txt")
 if t:
-    keep = one(r"KEEP \((\d+) public members", t, "public_callers KEEP count")
-    uncalled = len(re.findall(r"^(UNCALLED|STALE KEEP) ", t, re.M))
+    keep = one(r"KEEP \((\d+) (?:public )?members", t,
+               "public_callers KEEP count")
+    uncalled = len(re.findall(r"^(UNCALLED|SPEC-ONLY|STALE KEEP) ", t, re.M))
     item(f"`public_callers.txt` — `tools/public_callers.py`: {keep} KEEP "
-         f"entries with reasons, {uncalled} uncalled or stale public "
-         f"members.")
+         f"entries with reasons, {uncalled} uncalled, spec-only or stale "
+         f"public and `private[graft]` members.")
 
 out = os.path.join(d, "README.md")
 open(out, "w").write("\n".join(lines) + "\n")

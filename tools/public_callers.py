@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""List the public members of src/main that nothing outside the specs calls.
+"""List the members of src/main that nothing outside the specs calls.
 
 Usage: python3 tools/public_callers.py
 
@@ -16,8 +16,12 @@ is matched by its bare name, since its receiver's type is not known here. Commen
 `${...}` and `$name` interpolations (`Memo.dirStamp` is called only inside
 interpolations).
 
-Skipped without a listing: `override` members, members declared private or
-protected, `main` (its caller is the JVM), `apply`/`unapply`, and members
+Package-qualified private members (`private[graft]`) are listed the same
+way: widening a member to the package is how test-only code hides in
+src/main, so one whose only callers are specs is flagged SPEC-ONLY (move it
+into the spec). Skipped without a listing: `override` members, members
+declared `private`/`protected` without a package qualifier (or
+`private[this]`), `main` (its caller is the JVM), `apply`/`unapply`, and members
 that implement an abstract member of a known library supertype without the
 `override` keyword (an `Aggregator`'s `zero`/`reduce`/...).
 
@@ -47,6 +51,9 @@ KEEP = {
     "ChunkText.scala:chunk":
         "reference chunker (main.py) the chunk_text expression is "
         "compared against",
+    "HashEmbed.scala:embedText":
+        "reference embedding (main.py) as a driver-side function the "
+        "hash_embed expression is compared against",
     "Dedup.scala:minhashSig":
         "signature table the oracle's MinHash CTE mirrors; pins the "
         "MinHashSig kernel bit-identical to the groupBy/min formulation",
@@ -169,6 +176,12 @@ def members(path, text):
     for m in re.finditer(r"[{}]", text):
         pos = m.start()
         if text[pos] == "}":
+            # declarations after the last nested block still belong to
+            # the closing template
+            if stack and stack[-1][0]:
+                for line, name in public(text, list(DECL.finditer(
+                        text, last, pos)), stack[-1][1]):
+                    yield line, name, stack[-1][2]
             if stack:
                 stack.pop()
             last = pos + 1
@@ -202,7 +215,8 @@ def public(text, decls, header):
         mods, kind, name = d.group(2) or "", d.group(3), d.group(4)
         if kind not in ("def", "val", "object"):
             continue
-        if re.search(r"\b(private|protected|override)\b", mods):
+        if re.search(r"\boverride\b", mods) or re.search(
+                r"\b(private|protected)\b(?!\[(?!this\])\w+\])", mods):
             continue
         if name in ALWAYS_SKIP or name in implemented:
             continue
@@ -237,6 +251,8 @@ def refers(text, idents, owner, name):
 
 def main():
     main_files = {p: strip(open(p).read()) for p in scala_files("src/main")}
+    specs = {p: strip(open(p).read()) for p in scala_files("src/test")}
+    spec_idents = {p: set(IDENT.findall(t)) for p, t in specs.items()}
     callers = dict(main_files)
     callers.update({p: strip(open(p).read())
                     for p in scala_files("perfbench/src")})
@@ -258,17 +274,22 @@ def main():
                              for q, t in callers.items() if q != path))
             if not called:
                 key = f"{os.path.basename(path)}:{name}"
-                uncalled[key] = os.path.relpath(path, REPO) + f":{line}"
+                where = os.path.relpath(path, REPO) + f":{line}"
+                spec_only = any(refers(t, spec_idents[q], owner, name)
+                                for q, t in specs.items())
+                uncalled[key] = ("SPEC-ONLY" if spec_only else "UNCALLED",
+                                 where)
 
     missing = sorted(k for k in uncalled if k not in KEEP)
     stale = sorted(k for k in KEEP if k not in uncalled)
-    print(f"KEEP ({len(KEEP)} public members with no caller outside "
+    print(f"KEEP ({len(KEEP)} members with no caller outside "
           f"the specs, each with its reason):")
     for k in sorted(KEEP):
         print(f"  {k:<48} {KEEP[k]}")
     if missing or stale:
         for k in missing:
-            print(f"UNCALLED {uncalled[k]} {k.split(':')[1]}")
+            tag, where = uncalled[k]
+            print(f"{tag} {where} {k.split(':')[1]}")
         for k in stale:
             print(f"STALE KEEP {k} (gone, or called now)")
         sys.exit(1)
