@@ -116,18 +116,8 @@ object SparkEntry {
     // the memo — the dominant per-round exchange at scale.
     s.conf.set(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    // AQE post-shuffle coalescing: A/B'd both settings over the full board
-    // (r19 optimization round). parallelismFirst=false (coalesce to the
-    // advisory byte size, guide §2.2) won on stage-latency-bound queries
-    // but lost MORE on compute-dense small shuffles — the pair-explosion
-    // family (rp/minhash/salted joins) runs heavy per-row work downstream
-    // of a tiny exchange, and collapsing it to one partition serializes
-    // that work (net +4.7 s over 310 queries at sf0.1). parallelismFirst
-    // only matters when partitions are SMALLER than the advisory size, so
-    // at 100 TB the stock setting is equally right; keep stock, knob kept
-    // for future A/B.
-    s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+    // r19 A/B: parallelismFirst=false lost net +4.7 s over the sf0.1 board
+    s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     s
   }
 
@@ -1655,7 +1645,7 @@ object SparkEntry {
     // so the whole lifecycle is hash-oracled, not rows-gated
     "q261_ann_ivf_persisted" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedDetIvf(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q261)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -1782,7 +1772,7 @@ object SparkEntry {
     // embeddings). Deterministic end-to-end, so hash-oracled
     "q282_ann_ivfpq_persisted" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedIvfPq(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q282)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -1877,7 +1867,7 @@ object SparkEntry {
     // integer-dot cosine over the stored codes, no f32 access at all
     "q290_ann_sq8_persisted" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedSq(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q290)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -1890,7 +1880,7 @@ object SparkEntry {
     // rows by id (BQ stores no vectors — that is its memory story)
     "q291_ann_bq_persisted" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedBq(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q291)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -1902,7 +1892,7 @@ object SparkEntry {
     // the saved files; deleted ids must be unretrievable
     "q287_ann_ivf_deleted" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedDetIvfDeleted(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q287)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -1915,7 +1905,7 @@ object SparkEntry {
     // SQ8: codes purged, probe is pure integer math over the survivors
     "q293_ann_sq8_deleted" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedSqDeleted(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q293)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -1925,7 +1915,7 @@ object SparkEntry {
     // codes, so a deleted id never reaches the corpus-side re-rank
     "q294_ann_bq_deleted" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedBqDeleted(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q294)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -1936,7 +1926,7 @@ object SparkEntry {
     // centroids/codebooks stay frozen (no per-vector data, no refit)
     "q295_ann_ivfpq_deleted" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedIvfPqDeleted(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q295)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -1954,7 +1944,7 @@ object SparkEntry {
     // composition is hash-oracled stage for stage
     "q292_hybrid_serving" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedIvfPq(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q282)
       val lex = lexStateOf(s, dir)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
@@ -1998,7 +1988,7 @@ object SparkEntry {
     // surviving corpus — deleted ids unreachable through EITHER leg
     "q299_hybrid_takedown" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedIvfPqDeleted(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q295)
       val lex = lexDeletedStateOf(s, dir)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
@@ -2020,13 +2010,16 @@ object SparkEntry {
         s, lexReadmittedStateOf(s, dir), Seq("join", "hash", "customer"))),
     // extension: the END-TO-END READMIT serving query — q299's takedown
     // healed in EVERY maintained store: the purged ids re-ingested through
-    // upsertIvfAt + upsertPqAt (frozen trained artifacts) and
+    // upsertIvfAt + upsertCellPqAt (frozen trained artifacts) and
     // upsertDocsAt (lex state). One reingest request, three stores, and
     // the fused serving answer must equal q292's never-deleted
-    // composition exactly — the takedown round-trips to identity
+    // composition exactly — the takedown round-trips to identity. The
+    // identity holds unless a readmitted even-wave vector sits on a
+    // near-tie that flips between its f64 Lloyd cell and the f32-rounded
+    // saved centroids it is re-assigned against (the oracle gates it)
     "q303_hybrid_readmit" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedIvfPqReadmitted(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q303)
       val lex = lexReadmittedStateOf(s, dir)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
@@ -2044,7 +2037,7 @@ object SparkEntry {
     // must hash-match q282's two-wave oracle verbatim
     "q300_ann_ivfpq_maintained" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedIvfPqMaintained(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q300)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -2060,7 +2053,7 @@ object SparkEntry {
     // both artifacts: only a genuinely retrained pair matches
     "q304_ann_ivfpq_retrained" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedIvfPqRetrained(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q304)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -2076,7 +2069,7 @@ object SparkEntry {
     // SimilaritySpec instead)
     "q296_ivf_cell_stats" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedDetIvfMaintained(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q296)
       Similarity.ivfCellStats(s, path).select("cell", "n_vectors", "share")
     }),
     // q297: the probe over that same ≥3-wave + compacted index must
@@ -2086,7 +2079,7 @@ object SparkEntry {
     // operator can observe
     "q297_ann_ivf_maintained" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedDetIvfMaintained(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q296)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -2103,7 +2096,7 @@ object SparkEntry {
     // proves the swap landed the new geometry, not a stale generation
     "q301_ann_ivf_retrained" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedDetIvfRetrained(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q301)
       val q = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_embedding"))
@@ -2123,7 +2116,7 @@ object SparkEntry {
     "q306_hybrid_serving_text" -> ((s, dir) => {
       import graft.GraftFunctions.hash_embed
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedIvfPq(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q282)
       val lex = lexStateOf(s, dir)
       val (coarse, pq) = Similarity.loadIvfPqAt(s, path)
       import s.implicits._
@@ -2150,7 +2143,7 @@ object SparkEntry {
     // were non-empty and complete, not vacuously clean
     "q307_takedown_audit" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val path = Similarity.ensurePersistedIvfPqDeleted(s, e, dir)
+      val path = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q295)
       val g = Similarity.resolveIndexDir(s, path)
       val lex = lexDeletedStateOf(s, dir)
       val band = graft.streaming.Streams.ensureDeletedDocState(
@@ -2198,13 +2191,20 @@ object SparkEntry {
     // clean (the q307 convention)
     "q308_ivf_split_audit" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
-      val (root, parent, child) =
-        Similarity.ensurePersistedDetIvfSplit(s, e, dir)
+      val root = Similarity.ensurePersisted(s, e, dir, Similarity.Lifecycle.q308)
       val cs = graft.operators.CellStore
       val cur = Similarity.resolveIndexDir(s, root)
       val prev = s"$root/gen=${Similarity.currentGen(s, root).get - 1}"
       val after = cs.read(s, s"$cur/assignments")
       val before = cs.read(s, s"$prev/assignments")
+      // the (parent, child) pair from the two retained generations (bounded
+      // collects: nLists rows): the parent is the pre-split generation's
+      // hottest cell, the child the one cell id the split added
+      def cellIds(g: String) = s.read.parquet(s"$g/centroids")
+        .select("cell").collect().map(_.getInt(0)).toSet
+      val child = (cellIds(cur) -- cellIds(prev)).head
+      val parent = before.groupBy("cell").agg(count(lit(1)).as("n"))
+        .orderBy(desc("n"), asc("cell")).select("cell").head().getInt(0)
       val nIds = broadcast(e.agg(count(lit(1)).as("n_ids")))
       def row(store: String, leaked: DataFrame) =
         leaked.crossJoin(nIds)

@@ -1,40 +1,97 @@
 package graft
 
-/** Naming + mutual exclusion for the tmp-dir caches (JSONL fixtures,
-  * two-wave streamed states, persisted index builds) that the declared
-  * queries build once per (source stamp, variant) and then only read.
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+
+/** The one build-once protocol for the tmp-dir stores (JSONL fixtures,
+  * streamed states, persisted ANN indexes) that the declared queries build
+  * once per source stamp and then only read: [[ensure]].
   *
-  * Two hazards these helpers close:
+  * Three hazards it closes:
   *
-  *  1. KEY COLLISION — the cache dirs used to be keyed by 32-bit
-  *     `String.hashCode`, which collides at birthday rates (~77k distinct
-  *     keys for a 50% collision); a collision would make a `_READY` marker
-  *     silently serve the WRONG maintained state, with no error anywhere.
-  *     [[dirKey]] keys by the first 16 hex chars of SHA-256 (64 bits,
-  *     preimage-resistant) instead.
+  *  1. STALE SOURCE — a store is keyed by the (length, mtime) stamp of
+  *     every source file it is built from, so a regenerated testdata dir
+  *     gets a fresh store. A stat failure is LOUD ([[stamp]]): a silent
+  *     fallback stamp would let the ready marker keep serving a store
+  *     built from since-regenerated bytes.
   *
-  *  2. CONCURRENT BUILD — two JVMs that both miss the marker (Smoke and
-  *     Verify deliberately SHARE several cache keys) would run the
-  *     copy→stream chain concurrently against the same checkpoint and
-  *     state dirs, corrupting the state. [[withBuildLock]] serializes
-  *     builders per cache dir with an OS-level `FileLock` on a SIBLING
-  *     lock file (sibling, not in-dir: some builders delete and recreate
-  *     the dir itself mid-build). A file lock — unlike an exclusive-create
-  *     sentinel — is released by the OS when the holder dies, so a crashed
-  *     builder never wedges the next one; the crash-convergence of the
-  *     build body itself is each caller's contract (deterministic landing
-  *     names + checkpointed AvailableNow replays).
+  *  2. KEY COLLISION — [[dirKey]] keys by the first 16 hex chars of
+  *     SHA-256 (64 bits), not a 32-bit `String.hashCode`, whose
+  *     birthday-rate collisions would let a marker serve the WRONG store
+  *     with no error anywhere.
   *
-  * All these caches live under `java.io.tmpdir` (local filesystem) by
+  *  3. CONCURRENT BUILD — two JVMs that both miss the marker (Smoke and
+  *     Verify share several stores) would build into the same dir at once.
+  *     [[withBuildLock]] serializes builders per store with an OS-level
+  *     `FileLock` on a SIBLING lock file; a file lock is released by the
+  *     OS when its holder dies, so a crashed builder never wedges the next
+  *     one, and the next build starts from a wiped dir, so nothing a
+  *     crashed attempt left can leak into it.
+  *
+  * All these stores live under `java.io.tmpdir` (local filesystem) by
   * construction — `FileLock` semantics are only assumed there.
   */
 object TmpCache {
 
+  /** The marker a completed build leaves in its store's base dir. */
+  val ReadyMarker = "_READY"
+
+  /** Bump whenever a store's layout or a builder's semantics change (an
+    * epoch-partials maintainer's partial schema, an index codec's files):
+    * every dir key carries it, so a bump invalidates every cached store
+    * instead of a ready marker serving what the OLD code wrote. */
+  private val FormatVersion = "v5"
+
   /** 64-bit collision-resistant directory-name key for a cache-key string. */
-  def dirKey(key: String): String = {
+  private def dirKey(key: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     md.digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .take(8).map(b => f"$b%02x").mkString
+  }
+
+  /** (length, mtime) of a source file; a failed stat throws. The read path
+    * needs the file anyway, so failing here loses nothing and can never
+    * serve a stale store. */
+  private def stamp(spark: SparkSession, source: String): String = {
+    val sp = new Path(source)
+    val st = try {
+      sp.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(sp)
+    } catch {
+      case e: Exception => throw new IllegalStateException(
+        s"cannot stat $sp to stamp a cached store — " +
+          "refusing to risk serving a stale cache", e)
+    }
+    s"${st.getLen}-${st.getModificationTime}"
+  }
+
+  /** The base dir of store `name`: `name` keeps it readable, uniqueness
+    * comes from the digest of the sources, their stamps, `key` (every
+    * parameter that changes the store's content) and the format version. */
+  def dir(spark: SparkSession, name: String, key: String,
+          sources: Seq[String]): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft-$name-" + dirKey(
+      (sources.map(p => s"$p|${stamp(spark, p)}") :+ key :+ FormatVersion)
+        .mkString("|"))
+
+  /** Build store `name` once and return its base dir. `build` gets the base
+    * dir, wiped first, and lays the store out inside it; the marker is
+    * written beside what it built only once `build` returns. Double-checked
+    * under [[withBuildLock]]: the winner builds, waiters see the marker. */
+  def ensure(spark: SparkSession, name: String, key: String,
+             sources: Seq[String])(build: String => Unit): String = {
+    val base = dir(spark, name, key, sources)
+    val basePath = new Path(base)
+    val fs: FileSystem =
+      basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new Path(basePath, ReadyMarker)
+    if (!fs.exists(marker)) withBuildLock(base) {
+      if (!fs.exists(marker)) {
+        fs.delete(basePath, true)
+        build(base)
+        fs.create(marker, true).close()
+      }
+    }
+    base
   }
 
   // FileLock is per-JVM-per-file: a second lock attempt from the SAME JVM
@@ -43,10 +100,9 @@ object TmpCache {
   private val jvmLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Run `body` holding an exclusive cross-process lock for `baseDir`.
-    * Callers re-check their ready marker INSIDE the lock (the standard
-    * double-checked build: the winner builds, waiters see the marker). */
-  def withBuildLock[A](baseDir: String)(body: => A): A = {
+  /** Run `body` holding an exclusive cross-process lock for `baseDir`, on
+    * a lock file beside it (the build wipes the dir itself). */
+  private def withBuildLock[A](baseDir: String)(body: => A): A = {
     val monitor = jvmLocks.computeIfAbsent(baseDir, _ => new Object)
     monitor.synchronized {
       val lockPath = java.nio.file.Paths.get(baseDir + ".lock")

@@ -678,33 +678,156 @@ object Similarity {
     CellStore.rewriteCells(spark, tableDir, touched, kept)
   }
 
-  /** The build-once scaffold shared by every persisted-index ensure*
-    * wrapper: key a tmp dir by the SEMANTIC parameters (the `$nLists|$iters`
-    * convention — every parameter that changes the index content must be in
-    * `key`), guard the build with the `_INDEX_READY` marker + build lock
-    * (double-checked, no non-local return inside the lock), and hand
-    * `build` the index dir — wiped first, so no generation or pointer a
-    * crashed earlier attempt left can leak into the rebuilt index and
-    * every retried build is identical. One definition so a
-    * marker-protocol fix lands everywhere at once. */
-  private def ensureIndexDir(spark: org.apache.spark.sql.SparkSession,
-                             prefix: String, key: String)
-                            (build: String => Unit): String = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-$prefix-" +
-      graft.TmpCache.dirKey(key)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val index = s"$base/index"
-    val marker = new org.apache.hadoop.fs.Path(base, "_INDEX_READY")
-    if (fs.exists(marker)) return index
-    graft.TmpCache.withBuildLock(base) {
-      if (!fs.exists(marker)) {
-        fs.delete(new org.apache.hadoop.fs.Path(index), true)
-        build(index)
-        fs.create(marker, true).close()
+  // ------------------------------------------ persisted store lifecycles —
+
+  /** How a persisted ANN store encodes its vectors. Every field changes
+    * the store's content, so the rendering is part of its cache key. */
+  sealed trait Codec extends Product
+  /** Deterministic IVF with f32 cells: [[detIvfIndex]]. */
+  final case class DetIvf(nLists: Int, iters: Int) extends Codec
+  /** IVF-PQ: [[detIvfIndex]] coarse cells beside cell-partitioned
+    * [[pqIndex]] codes ([[savePqCellPartitioned]], the IVFADC layout). */
+  final case class IvfPq(nLists: Int, kmIters: Int, m: Int, ksub: Int,
+                         pqIters: Int) extends Codec
+  /** Flat int8 scalar codes: [[sqIndex]]. */
+  case object Sq extends Codec
+  /** Flat sign-sketch codes: [[bqIndex]]. */
+  final case class Bq(numBits: Int) extends Codec
+
+  /** One maintenance step on a saved store. A step's wave is the vectors
+    * with `vec_id % mod == res`. */
+  sealed trait Step
+  /** Upsert the wave against the frozen trained state. */
+  final case class Upsert(mod: Int, res: Int) extends Step
+  /** Delete the wave's ids (trained state stays frozen). */
+  final case class Delete(mod: Int, res: Int) extends Step
+  /** Refit the trained state over the stored vectors as a new generation. */
+  case object Retrain extends Step
+  /** Rewrite the cell-partitioned tables to one file per cell. */
+  case object Compact extends Step
+  /** Split the most loaded coarse cell in two ([[splitHottestIvfCellAt]]). */
+  case object SplitHottest extends Step
+
+  /** A persisted store's whole build, as data: fit `codec` on the even
+    * wave (`vec_id % 2 == 0`), save it as generation 1 behind the `_GEN`
+    * pointer, then apply `steps` in order through the per-codec mutators.
+    * [[ensurePersisted]] runs it once per source stamp and readers answer
+    * from the saved files only, so nothing is refit at query time. Every
+    * stage is deterministic, so each store's probe is hash-oracled. The
+    * rendering is the cache key: no semantic parameter can be left out. */
+  final case class Lifecycle(codec: Codec, steps: Step*) {
+    override def toString: String =
+      (codec +: steps).mkString("Lifecycle(", ", ", ")")
+  }
+
+  /** The declared persisted stores, one value per store. Each store has
+    * its own dir: a delete or retrain on a shared store would corrupt
+    * its other readers. */
+  object Lifecycle {
+    private val ivf = DetIvf(nLists = 8, iters = 3)
+    private val ivfPq = IvfPq(nLists = 8, kmIters = 3, m = 16, ksub = 16,
+      pqIters = 2)
+    private val bq = Bq(numBits = 63)
+    private val odd = Upsert(2, 1)
+    private val erase = Delete(5, 3)
+
+    /** q261: IVF fit on the even wave, odd wave upserted. */
+    val q261 = Lifecycle(ivf, odd)
+    /** q287: q261, then every `vec_id % 5 == 3` deleted. */
+    val q287 = Lifecycle(ivf, odd, erase)
+    /** q296/q297: IVF under two upsert waves, then compacted to one file per cell. */
+    val q296 = Lifecycle(ivf, Upsert(4, 1), Upsert(4, 3), Compact)
+    /** q301: q261, then the coarse quantizer retrained on the whole stored corpus. */
+    val q301 = Lifecycle(ivf, odd, Retrain)
+    /** q308: a 4-cell q261, then its hottest cell split in two. */
+    val q308 = Lifecycle(DetIvf(nLists = 4, iters = 3), odd, SplitHottest)
+    /** q282 (q292, q306, the serve benchmark): IVF-PQ, odd wave upserted. */
+    val q282 = Lifecycle(ivfPq, odd)
+    /** q295 (q299, q307): q282, then every `vec_id % 5 == 3` deleted from both artifacts. */
+    val q295 = Lifecycle(ivfPq, odd, erase)
+    /** q300: IVF-PQ under two upsert waves, then both cell tables compacted. */
+    val q300 = Lifecycle(ivfPq, Upsert(4, 1), Upsert(4, 3), Compact)
+    /** q303: q295, then the deleted ids re-ingested (an identity on q282's content). */
+    val q303 = Lifecycle(ivfPq, odd, erase, Upsert(5, 3))
+    /** q304: q282, then both trained artifacts retrained on the stored corpus. */
+    val q304 = Lifecycle(ivfPq, odd, Retrain)
+    /** q290: int8 SQ codes, odd wave upserted. */
+    val q290 = Lifecycle(Sq, odd)
+    /** q293: q290, then every `vec_id % 5 == 3` deleted. */
+    val q293 = Lifecycle(Sq, odd, erase)
+    /** q291: 63-bit BQ sign codes, odd wave upserted. */
+    val q291 = Lifecycle(bq, odd)
+    /** q294: q291, then every `vec_id % 5 == 3` deleted. */
+    val q294 = Lifecycle(bq, odd, erase)
+  }
+
+  /** Build the store `lc` describes once per stamp of `sfDir`'s embeddings
+    * ([[graft.TmpCache.ensure]]) and return its index root. */
+  def ensurePersisted(spark: org.apache.spark.sql.SparkSession,
+                      embeddings: DataFrame, sfDir: String,
+                      lc: Lifecycle): String =
+    graft.TmpCache.ensure(spark, lc.codec.productPrefix.toLowerCase,
+        lc.toString, Seq(s"$sfDir/embeddings.parquet")) { base =>
+      runLifecycle(spark, embeddings, s"$base/index", lc)
+    } + "/index"
+
+  /** The q282 store, which the serve benchmark builds. */
+  def ensurePersistedIvfPq(spark: org.apache.spark.sql.SparkSession,
+                           embeddings: DataFrame, sfDir: String): String =
+    ensurePersisted(spark, embeddings, sfDir, Lifecycle.q282)
+
+  private def wave(embeddings: DataFrame, mod: Int, res: Int): DataFrame =
+    embeddings.filter(pmod(col("vec_id"), lit(mod)) === res)
+
+  /** The interpreter behind [[ensurePersisted]]. An IVF-PQ upsert runs
+    * coarse first: the assignments are the source of truth the code rows
+    * take their cell from. */
+  private def runLifecycle(spark: org.apache.spark.sql.SparkSession,
+                           embeddings: DataFrame, index: String,
+                           lc: Lifecycle): Unit = {
+    val w0 = wave(embeddings, 2, 0)
+    GenDir.rewrite(spark, index) { g =>
+      lc.codec match {
+        case DetIvf(nLists, iters) => detIvfIndex(w0, nLists, iters).save(g)
+        case IvfPq(nLists, kmIters, m, ksub, pqIters) =>
+          detIvfIndex(w0, nLists, kmIters).save(s"$g/coarse")
+          savePqCellPartitioned(pqIndex(w0, m, ksub, pqIters),
+            CellStore.read(spark, s"$g/coarse/assignments"), s"$g/pq")
+        case Sq => saveSqIndex(sqIndex(w0), g)
+        case Bq(numBits) => saveBqIndex(bqIndex(w0, numBits), g)
       }
     }
-    index
+    lc.steps.foreach { step =>
+      lazy val g = resolveIndexDir(spark, index)
+      (lc.codec, step) match {
+        case (_: DetIvf, Upsert(m, r)) => upsertIvfAt(spark, index, wave(embeddings, m, r))
+        case (_: DetIvf, Delete(m, r)) =>
+          deleteIvfAt(spark, index, wave(embeddings, m, r).select("vec_id"))
+        case (DetIvf(nLists, iters), Retrain) => retrainIvfAt(spark, index, nLists, iters)
+        case (_: DetIvf, Compact) => compactIvfAt(spark, index)
+        case (DetIvf(_, iters), SplitHottest) => splitHottestIvfCellAt(spark, index, iters)
+        case (_: IvfPq, Upsert(m, r)) =>
+          val w = wave(embeddings, m, r)
+          upsertIvfAt(spark, s"$g/coarse", w)
+          upsertCellPqAt(spark, s"$g/pq",
+            CellStore.read(spark, s"$g/coarse/assignments"), w)
+        case (_: IvfPq, Delete(m, r)) =>
+          val ids = wave(embeddings, m, r).select("vec_id")
+          deleteIvfAt(spark, s"$g/coarse", ids)
+          deletePqAt(spark, s"$g/pq", ids)
+        case (IvfPq(nLists, kmIters, m, ksub, pqIters), Retrain) =>
+          retrainIvfPqAt(spark, index, nLists, kmIters, m, ksub, pqIters)
+        case (_: IvfPq, Compact) => compactIvfPqAt(spark, index)
+        case (Sq, Upsert(m, r)) => upsertSqAt(spark, index, wave(embeddings, m, r))
+        case (Sq, Delete(m, r)) =>
+          deleteSqAt(spark, index, wave(embeddings, m, r).select("vec_id"))
+        case (Bq(numBits), Upsert(m, r)) =>
+          upsertBqAt(spark, index, wave(embeddings, m, r), numBits)
+        case (_: Bq, Delete(m, r)) =>
+          deleteBqAt(spark, index, wave(embeddings, m, r).select("vec_id"))
+        case (codec, _) => require(false, s"$codec does not support $step")
+      }
+    }
   }
 
   // ------------------------------------- generation-pointer serving —
@@ -769,34 +892,6 @@ object Similarity {
                   root: String): (IvfIndex, PqIndex) = {
     val g = resolveIndexDir(spark, root)
     (loadIvfIndex(spark, s"$g/coarse"), loadPqIndex(spark, s"$g/pq"))
-  }
-
-  /** Build-once cache for the DECLARED deleted-index query (q287): the
-    * q261 two-wave lifecycle EXTENDED by the erasure leg — fit+save on
-    * the even wave, upsert the odd wave, then [[deleteIvfAt]] every
-    * `vec_id % 5 == 3` (a deterministic fifth of the corpus, both waves),
-    * probe from the saved files. Separate cache dir from the q261 index
-    * ON PURPOSE: deleting from the shared index would corrupt q261; the
-    * coarse fit is detKMeans-memoized, so the rebuild costs one
-    * assignment pass, not a second Lloyd run. */
-  def ensurePersistedDetIvfDeleted(spark: org.apache.spark.sql.SparkSession,
-                                   embeddings: DataFrame, sfDir: String,
-                                   nLists: Int = 8, iters: Int = 3,
-                                   delMod: Int = 5, delRes: Int = 3): String = {
-    // every semantic parameter lives in the key material (the
-    // $nLists|$iters convention) — including the delete predicate, so a
-    // predicate change can never serve a stale deleted-set from cache
-    ensureIndexDir(spark, "detivfdel", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$nLists|$iters|" +
-          s"del=mod${delMod}eq$delRes|v3") { index =>
-      val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
-      val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      val (_, g1) = GenDir.rewrite(spark, index)(
-        detIvfIndex(w0, nLists, iters).save(_))
-      upsertIvfAt(spark, g1, w1)
-      deleteIvfAt(spark, g1,
-        embeddings.filter(pmod(col("vec_id"), lit(delMod)) === delRes)
-          .select("vec_id"))
-    }
   }
 
   /** Retrain the coarse quantizer of a SAVED IVF index — the maintenance
@@ -888,69 +983,6 @@ object Similarity {
     (hottest, newId)
   }
 
-  /** Build-once cache for the DECLARED retrained-index query (q301): the
-    * full monitor→act maintenance loop on one index — fit + save on the
-    * even wave (q261's lifecycle), upsert the odd wave against the frozen
-    * centroids, then [[retrainIvfAt]] refits the coarse quantizer over
-    * the complete stored corpus and flips to the new generation. Because
-    * the refit is deterministic Lloyd over ALL vec_ids, the post-retrain
-    * index equals a fresh [[detIvfIndex]] on the full corpus — which is
-    * what makes the probe hash-oracled (detKmeansOracle with
-    * fitSrc = nv), unlike the frozen-centroid lifecycles whose fit wave
-    * is the even half. [[ensureIndexDir]] wipes any partial state a
-    * crashed earlier build left (including a half-built next
-    * generation), so the retry is from-scratch clean. */
-  def ensurePersistedDetIvfRetrained(spark: org.apache.spark.sql.SparkSession,
-                                     embeddings: DataFrame, sfDir: String,
-                                     nLists: Int = 8, iters: Int = 3): String = {
-    ensureIndexDir(spark, "detivfrtr", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$nLists|$iters|" +
-          "retrain|v3") { index =>
-      val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
-      val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      val (_, g1) = GenDir.rewrite(spark, index)(
-        detIvfIndex(w0, nLists, iters).save(_))
-      upsertIvfAt(spark, g1, w1)
-      retrainIvfAt(spark, index, nLists, iters)
-    }
-  }
-
-  /** Build-once cache for the DECLARED hot-cell-split query (q308): the
-    * q261 lifecycle (fit + save the even wave, upsert the odd wave
-    * against the frozen centroids) followed by the monitor→SPLIT loop —
-    * [[splitHottestIvfCellAt]] divides the most loaded coarse cell into
-    * two children as a new generation, no full refit. Deterministic end
-    * to end (detKMeans parent fit, detKMeans 2-means sub-fit over the
-    * deterministic hot cell), so the audit over the split store is
-    * hash-oracled. Returns (root, parentCell, childCell). */
-  def ensurePersistedDetIvfSplit(spark: org.apache.spark.sql.SparkSession,
-                                 embeddings: DataFrame, sfDir: String,
-                                 nLists: Int = 4, iters: Int = 3)
-      : (String, Int, Int) = {
-    val root = ensureIndexDir(spark, "detivfsplit",
-      s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$nLists|$iters|split|v3") { index =>
-      val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
-      val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      GenDir.rewrite(spark, index)(detIvfIndex(w0, nLists, iters).save(_))
-      upsertIvfAt(spark, index, w1)
-      splitHottestIvfCellAt(spark, index)
-    }
-    // re-derive the (parent, child) pair from the stored generations —
-    // deterministic, and correct on a cache hit where the build lambda
-    // never ran: the parent is gen=1+upsert's hottest cell, the child is
-    // the one id present after the split and absent before it
-    val cur = resolveIndexDir(spark, root)
-    val cellsAfter = spark.read.parquet(s"$cur/centroids")
-      .select("cell").collect().map(_.getInt(0)).toSet
-    val prev = s"$root/gen=${currentGen(spark, root).get - 1}"
-    val cellsBefore = spark.read.parquet(s"$prev/centroids")
-      .select("cell").collect().map(_.getInt(0)).toSet
-    val child = (cellsAfter -- cellsBefore).head
-    val parent = CellStore.read(spark, s"$prev/assignments")
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("cell")).select("cell").head().getInt(0)
-    (root, parent, child)
-  }
-
   /** Per-cell health stats for a SAVED IVF index — the monitor an operator
     * reads to decide WHEN to act: `n_vectors`/`share` expose cell skew
     * (a hot cell makes every probe that touches it scan its share of the
@@ -1022,33 +1054,6 @@ object Similarity {
       copyTinyParquet(spark, s"$cur/pq/codebooks", s"$next/pq/codebooks")
     }
     pruneGens(spark, root)
-  }
-
-  /** Build-once cache for the DECLARED maintained-IVF queries (q296/q297):
-    * q261's lifecycle under a LONGER maintenance history — fit + save on
-    * the even-id wave, then TWO separate upsert waves (vec_id % 4 == 1,
-    * then % 4 == 3) so the touched cell partitions genuinely hold
-    * multiple file generations, then [[compactIvfAt]] rewrites them to
-    * one file per cell. Because assignment is per-vector against the
-    * FROZEN saved centroids, the post-compaction content equals q261's
-    * two-wave index exactly — which is what lets q297 reuse q261's hash
-    * oracle verbatim, proving compaction (and the split upsert history)
-    * changed nothing an operator can observe except the file layout
-    * [[ivfCellStats]] reports. */
-  def ensurePersistedDetIvfMaintained(spark: org.apache.spark.sql.SparkSession,
-                                      embeddings: DataFrame, sfDir: String,
-                                      nLists: Int = 8, iters: Int = 3): String = {
-    ensureIndexDir(spark, "detivfmnt", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$nLists|$iters|" +
-          "waves=4|compact|v3") { index =>
-      val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
-      val w1 = embeddings.filter(pmod(col("vec_id"), lit(4)) === 1)
-      val w3 = embeddings.filter(pmod(col("vec_id"), lit(4)) === 3)
-      val (_, g1) = GenDir.rewrite(spark, index)(
-        detIvfIndex(w0, nLists, iters).save(_))
-      upsertIvfAt(spark, g1, w1)
-      upsertIvfAt(spark, g1, w3)
-      compactIvfAt(spark, index)
-    }
   }
 
   /** Incremental int8-SQ maintenance: per-vector quantization means a delta
@@ -1149,48 +1154,6 @@ object Similarity {
   def deletePqAt(spark: org.apache.spark.sql.SparkSession, path: String,
                  ids: DataFrame): Unit =
     deleteFromCellTable(spark, s"$path/codes", ids, Seq("vec_id", "codes"))
-
-  /** Build-once cache for the DECLARED persisted-SQ8 query (q290) — the
-    * persisted lifecycle applied to the scalar-quantized index, completing
-    * the family (IVF q261, IVF-PQ q282, SQ8 here): encode + save the even
-    * wave, [[upsertSqAt]] the odd wave, probe via [[loadSqIndex]] +
-    * [[sqProbe]] ONLY — and the SQ probe is pure integer math over the
-    * 4x-smaller codes, so the serving path touches nothing but the saved
-    * files (no f32 re-rank arm to feed). Per-vector quantization means no
-    * trained artifact to freeze; what the persisted form proves is the
-    * maintenance contract — an upsert equals a fresh encode of the merged
-    * corpus — through storage. */
-  def ensurePersistedSq(spark: org.apache.spark.sql.SparkSession,
-                        embeddings: DataFrame, sfDir: String): String = {
-    ensureIndexDir(spark, "sqidx", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|v3") { index =>
-      val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
-      val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      GenDir.rewrite(spark, index)(saveSqIndex(sqIndex(w0), _))
-      upsertSqAt(spark, index, w1)
-    }
-  }
-
-  /** Build-once cache for the DECLARED deleted-SQ8 query (q293): the q290
-    * lifecycle EXTENDED by the erasure leg — encode + save the even wave,
-    * [[upsertSqAt]] the odd wave, [[deleteSqAt]] every
-    * `vec_id % delMod == delRes`, probe via [[loadSqIndex]] + [[sqProbe]]
-    * only. Separate cache dir from q290's index (deleting from the shared
-    * one would corrupt it); the delete predicate lives in the key
-    * material like every other semantic parameter. */
-  def ensurePersistedSqDeleted(spark: org.apache.spark.sql.SparkSession,
-                               embeddings: DataFrame, sfDir: String,
-                               delMod: Int = 5, delRes: Int = 3): String = {
-    ensureIndexDir(spark, "sqidxdel", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|" +
-        s"del=mod${delMod}eq$delRes|v3") { index =>
-      val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
-      val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      GenDir.rewrite(spark, index)(saveSqIndex(sqIndex(w0), _))
-      upsertSqAt(spark, index, w1)
-      deleteSqAt(spark, index,
-        embeddings.filter(pmod(col("vec_id"), lit(delMod)) === delRes)
-          .select("vec_id"))
-    }
-  }
 
   /** Incremental binary-quantization maintenance: sign sketches are
     * per-vector too — same replace-by-id contract, exactly equal to a full
@@ -1300,56 +1263,6 @@ object Similarity {
       assigned.join(items.select("vec_id", "embedding"), Seq("vec_id"))
         .select("vec_id", "embedding", "cell"),
       centroids)
-  }
-
-  /** Build-once cache for the DECLARED persisted-ANN query (q261): the
-    * production index lifecycle, executed once per (sfDir, source stamp)
-    * and answered from the SAVED files forever after —
-    *
-    *   1. fit + [[IvfIndex.save]] on the FIRST wave (even vec_ids) via
-    *      [[detIvfIndex]] (deterministic Lloyd, so the whole chain is
-    *      hash-oracled, not just rows-gated);
-    *   2. [[upsertIvfAt]] the SECOND wave (odd vec_ids) against the frozen
-    *      persisted centroids — delta-cost maintenance, no refit;
-    *   3. readers answer via [[loadIvfIndex]] + [[ivfProbe]] only.
-    *
-    * Nothing is refit at query time — at 100 TB nobody re-clusters the
-    * corpus per query; the index is built as the corpus lands (wave 1),
-    * maintained incrementally (wave 2), and probed from storage (the q259
-    * two-wave-state convention applied to the ANN pillar). Same marker
-    * idempotence + build lock as the streamed-state caches; the cached
-    * index is keyed to the source parquet's (length, mtime) stamp so a
-    * regenerated testdata dir invalidates it. */
-  /** (length, mtime) stamp of the source embeddings parquet that keys every
-    * persisted-index cache dir. Stat failure is LOUD by design: a silent
-    * "nostamp" fallback would let an `_INDEX_READY` marker keep serving an
-    * index built from a since-regenerated dataset — the stamp is the only
-    * thing tying the cache to the source bytes, and the read path needs
-    * this file anyway, so failing here loses nothing. */
-  private def persistedIndexStamp(spark: org.apache.spark.sql.SparkSession,
-                                  sfDir: String): String = {
-    val sp = new org.apache.hadoop.fs.Path(s"$sfDir/embeddings.parquet")
-    val st = try {
-      sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(sp)
-    } catch {
-      case e: Exception => throw new IllegalStateException(
-        s"cannot stat $sp to stamp the persisted index cache — " +
-          "refusing to risk serving a stale index", e)
-    }
-    s"${st.getLen}-${st.getModificationTime}"
-  }
-
-  def ensurePersistedDetIvf(spark: org.apache.spark.sql.SparkSession,
-                            embeddings: DataFrame, sfDir: String,
-                            nLists: Int = 8, iters: Int = 3): String = {
-    ensureIndexDir(spark, "detivf", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$nLists|$iters|v3") { index =>
-      val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
-      val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      val (_, g1) = GenDir.rewrite(spark, index)(
-        detIvfIndex(w0, nLists, iters).save(_))
-      upsertIvfAt(spark, g1, w1)
-    }
   }
 
   /** Fully-deterministic IVF top-k: `detKMeans` cells + the standard
@@ -1641,6 +1554,17 @@ object Similarity {
     dot_table(col("__nv"), cells, cosine)
   }
 
+  /** Training-sample bound for the PQ codebook fit: Lloyd iterates over the
+    * sample, NOT the corpus — at 100 TB `iters` extra full-corpus passes
+    * would dominate the build, while codebook quality saturates far below
+    * full corpus size (the `buildIvfIndex` sample-fit argument; FAISS
+    * trains the same way). The sample is the `PqFitRows` first vectors in
+    * SHA-256-of-vec_id order — deterministic, id-bias-free, and a
+    * TakeOrderedAndProject at scale (k rows per partition, no global sort
+    * materialization) — so the q76/q80 oracles reproduce it in SQL. Below
+    * the bound the sample is the whole corpus and the fit is exact. */
+  val PqFitRows = 4096
+
   /** Product quantization — the classic memory-bound ANN index (Jégou et
     * al., "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
     * split the normalized vector into `m` subspaces of `dsub = inDim / m`
@@ -1657,17 +1581,6 @@ object Similarity {
     * (sub, cell, dim)-keyed aggregation whose shuffle is
     * partitions x m x ksub x dsub partial rows — corpus-size-independent,
     * same shape as one full-dim detKMeans iteration. */
-  /** Training-sample bound for the PQ codebook fit: Lloyd iterates over the
-    * sample, NOT the corpus — at 100 TB `iters` extra full-corpus passes
-    * would dominate the build, while codebook quality saturates far below
-    * full corpus size (the `buildIvfIndex` sample-fit argument; FAISS
-    * trains the same way). The sample is the `PqFitRows` first vectors in
-    * SHA-256-of-vec_id order — deterministic, id-bias-free, and a
-    * TakeOrderedAndProject at scale (k rows per partition, no global sort
-    * materialization) — so the q76/q80 oracles reproduce it in SQL. Below
-    * the bound the sample is the whole corpus and the fit is exact. */
-  val PqFitRows = 4096
-
   def pqIndex(items: DataFrame, m: Int = 16, ksub: Int = 16, iters: Int = 2,
               inDim: Int = 64, embCol: String = "embedding"): PqIndex = {
     require(m >= 1 && inDim % m == 0, s"inDim=$inDim must split into m=$m subspaces")
@@ -1730,19 +1643,6 @@ object Similarity {
     PqIndex(codes, cbs, dsub)
   }
 
-  /** Top-k probe over a PQ index via ADC (asymmetric distance computation):
-    * each query precomputes ONE lookup table — `lt(sub)(cell)` = dot of its
-    * normalized subvector with that cell's centroid, m x ksub doubles,
-    * map-only over the tiny query set — and scoring a corpus vector is then
-    * `m` table lookups (sum over subs of `lt(sub)(codes(sub))`), never
-    * touching the f32 embedding: the full-corpus scan reads 16-byte code
-    * rows, ~16x less than f32 brute force. The `shortlist` ADC-closest
-    * vectors per query (GroupedTopK caps that shuffle) are then re-ranked
-    * with exact cosine, so returned scores are true cosines. Every stage is
-    * a pure function of the input — deterministic codebooks, sequential f64
-    * ADC sums, (adc desc, vec_id) / (score desc, vec_id) tie orders — so
-    * the whole path is hash-checked by the q76 oracle; recall-gated
-    * (>= 0.9) in SimilaritySpec beside rp/SQ8/BQ. */
   /** Per-query ADC lookup tables for a PQ index: `lt(sub)(cell)` = dot of
     * the normalized query subvector with that cell's centroid. Map-only
     * over the (tiny, broadcastable) query set. */
@@ -1759,6 +1659,19 @@ object Similarity {
     }: _*)
   }
 
+  /** Top-k probe over a PQ index via ADC (asymmetric distance computation):
+    * each query precomputes ONE lookup table — `lt(sub)(cell)` = dot of its
+    * normalized subvector with that cell's centroid, m x ksub doubles,
+    * map-only over the tiny query set — and scoring a corpus vector is then
+    * `m` table lookups (sum over subs of `lt(sub)(codes(sub))`), never
+    * touching the f32 embedding: the full-corpus scan reads 16-byte code
+    * rows, ~16x less than f32 brute force. The `shortlist` ADC-closest
+    * vectors per query (GroupedTopK caps that shuffle) are then re-ranked
+    * with exact cosine, so returned scores are true cosines. Every stage is
+    * a pure function of the input — deterministic codebooks, sequential f64
+    * ADC sums, (adc desc, vec_id) / (score desc, vec_id) tie orders — so
+    * the whole path is hash-checked by the q76 oracle; recall-gated
+    * (>= 0.9) in SimilaritySpec beside rp/SQ8/BQ. */
   def pqProbe(index: PqIndex, items: DataFrame, queries: DataFrame, k: Int,
               shortlist: Int = 64): DataFrame = {
     val qlt = pqLookupTables(index, queries)
@@ -1963,49 +1876,6 @@ object Similarity {
       upsertBq(loadBqIndex(spark, resolveIndexDir(spark, root)), delta, numBits),
       refuseEmpty = false)
 
-  /** Build-once cache for the DECLARED persisted-BQ query (q291) — the
-    * last index type to get the persisted lifecycle (IVF q261, IVF-PQ
-    * q282, SQ8 q290, BQ here): sketch + save the even wave, [[upsertBqAt]]
-    * the odd wave, probe via [[loadBqIndex]] + [[bqProbe]]. The Hamming
-    * shortlist scan touches ONLY the stored 8-byte codes (32x less than
-    * f32); the exact re-rank then reads the shortlist's embeddings from
-    * the corpus table by id — shortlist x queries point-lookups, the one
-    * arm of this index that is corpus-resident by design (BQ stores no
-    * vectors; that is its entire memory story). */
-  def ensurePersistedBq(spark: org.apache.spark.sql.SparkSession,
-                        embeddings: DataFrame, sfDir: String,
-                        numBits: Int = 63): String = {
-    ensureIndexDir(spark, "bqidx", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|$numBits|v3") { index =>
-      val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
-      val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      GenDir.rewrite(spark, index)(saveBqIndex(bqIndex(w0, numBits), _))
-      upsertBqAt(spark, index, w1, numBits)
-    }
-  }
-
-  /** Build-once cache for the DECLARED deleted-BQ query (q294): the q291
-    * lifecycle EXTENDED by the erasure leg — sketch + save the even wave,
-    * [[upsertBqAt]] the odd wave, [[deleteBqAt]] every
-    * `vec_id % delMod == delRes`, probe via [[loadBqIndex]] +
-    * [[bqProbe]]. The Hamming shortlist scans only the surviving stored
-    * codes, so a deleted id can never reach the re-rank (which is the arm
-    * that touches the corpus table — BQ stores no vectors). */
-  def ensurePersistedBqDeleted(spark: org.apache.spark.sql.SparkSession,
-                               embeddings: DataFrame, sfDir: String,
-                               numBits: Int = 63, delMod: Int = 5,
-                               delRes: Int = 3): String = {
-    ensureIndexDir(spark, "bqidxdel", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|" +
-        s"$numBits|del=mod${delMod}eq$delRes|v3") { index =>
-      val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
-      val w1 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)
-      GenDir.rewrite(spark, index)(saveBqIndex(bqIndex(w0, numBits), _))
-      upsertBqAt(spark, index, w1, numBits)
-      deleteBqAt(spark, index,
-        embeddings.filter(pmod(col("vec_id"), lit(delMod)) === delRes)
-          .select("vec_id"))
-    }
-  }
-
   /** Probe a SAVED IVF-PQ pair — the serving path of the persisted
     * lifecycle (q282): coarse cells from the loaded f32 centroid table
     * (the `ivfProbe` probe rule: f32-rounded normalized queries against
@@ -2088,93 +1958,6 @@ object Similarity {
       VectorQuant.isArrayOf(t, FloatType))
   }
 
-  /** Build-once cache for the DECLARED persisted IVF-PQ query (q282) —
-    * [[ensurePersistedDetIvf]]'s pattern applied to the QUANTIZED index,
-    * which is what actually serves at 100 TB (IVF prunes which vectors a
-    * query touches; PQ bounds the bytes per touched vector):
-    *
-    *   1. fit the coarse quantizer ([[detIvfIndex]]) AND the PQ codebooks
-    *      ([[pqIndex]]) on the FIRST wave (even vec_ids), save both;
-    *   2. maintain the SECOND wave (odd vec_ids) against the FROZEN saved
-    *      artifacts — [[upsertIvfAt]] assigns against the persisted f32
-    *      centroids, [[upsertPqAt]] encodes against the persisted
-    *      codebooks (no codebook drift: the real production constraint —
-    *      codes stay mutually comparable between periodic retrains);
-    *   3. readers answer via [[loadIvfIndex]] + [[loadPqIndex]] +
-    *      [[ivfPqProbe]] only — nothing refit at query time.
-    *
-    * Every stage is deterministic (detKMeans coarse cells, the
-    * hash-ordered PQ fit sample, fixed-point Lloyd means, sequential ADC
-    * folds), so the whole lifecycle is hash-oracled like q261, including
-    * the f32 rounding of the saved coarse centroids. The codes land
-    * CELL-PARTITIONED ([[savePqCellPartitioned]] — the IVFADC layout that
-    * makes the serving scan partition-pruned) in a `gen=1` dir behind the
-    * `_GEN` pointer; crash-convergent via [[ensureIndexDir]]'s wipe;
-    * same marker + build lock + loud source stamp as the det-IVF cache. */
-  def ensurePersistedIvfPq(spark: org.apache.spark.sql.SparkSession,
-                           embeddings: DataFrame, sfDir: String,
-                           nLists: Int = 8, kmIters: Int = 3, m: Int = 16,
-                           ksub: Int = 16, pqIters: Int = 2): String = {
-    ensureIndexDir(spark, "ivfpq", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|" +
-        s"$nLists|$kmIters|$m|$ksub|$pqIters|v3") { index =>
-      buildIvfPqGen1(spark, index, embeddings,
-        Seq(embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)),
-        nLists, kmIters, m, ksub, pqIters)
-    }
-  }
-
-  /** The shared gen=1 build for the persisted IVF-PQ lifecycles: fit
-    * BOTH trained artifacts on the even wave, save them
-    * cell-partitioned under `gen=1`, flip the pointer, then upsert each
-    * given wave against the frozen artifacts IN ORDER (coarse first —
-    * the assignments are the source of truth the code rows take their
-    * cell from). Returns the gen=1 dir for follow-on maintenance legs. */
-  private def buildIvfPqGen1(spark: org.apache.spark.sql.SparkSession,
-                             index: String, embeddings: DataFrame,
-                             upsertWaves: Seq[DataFrame],
-                             nLists: Int, kmIters: Int, m: Int,
-                             ksub: Int, pqIters: Int): String = {
-    val w0 = embeddings.filter(pmod(col("vec_id"), lit(2)) === 0)
-    val (_, g1) = GenDir.rewrite(spark, index) { g =>
-      detIvfIndex(w0, nLists, kmIters).save(s"$g/coarse")
-      savePqCellPartitioned(pqIndex(w0, m, ksub, pqIters),
-        CellStore.read(spark, s"$g/coarse/assignments"), s"$g/pq")
-    }
-    upsertWaves.foreach { w =>
-      upsertIvfAt(spark, s"$g1/coarse", w)
-      upsertCellPqAt(spark, s"$g1/pq",
-        CellStore.read(spark, s"$g1/coarse/assignments"), w)
-    }
-    g1
-  }
-
-  /** Build-once cache for the DECLARED deleted-IVF-PQ query (q295): the
-    * q282 lifecycle EXTENDED by the erasure leg on BOTH saved artifacts —
-    * [[deleteIvfAt]] purges the ids from the coarse assignments
-    * (partition-pruned rewrite; makes them unreachable as probe
-    * candidates AND erases their stored f32 embeddings — the re-rank
-    * store), [[deletePqAt]] purges their quantized codes. Centroids and
-    * codebooks stay frozen: trained per-cell/per-subspace statistics
-    * carry no per-vector data, so a takedown never forces a refit. */
-  def ensurePersistedIvfPqDeleted(spark: org.apache.spark.sql.SparkSession,
-                                  embeddings: DataFrame, sfDir: String,
-                                  nLists: Int = 8, kmIters: Int = 3,
-                                  m: Int = 16, ksub: Int = 16,
-                                  pqIters: Int = 2, delMod: Int = 5,
-                                  delRes: Int = 3): String = {
-    ensureIndexDir(spark, "ivfpqdel", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|" +
-        s"$nLists|$kmIters|$m|$ksub|$pqIters|del=mod${delMod}eq$delRes|v3") { index =>
-      val g1 = buildIvfPqGen1(spark, index, embeddings,
-        Seq(embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)),
-        nLists, kmIters, m, ksub, pqIters)
-      val del = embeddings
-        .filter(pmod(col("vec_id"), lit(delMod)) === delRes)
-        .select("vec_id")
-      deleteIvfAt(spark, s"$g1/coarse", del)
-      deletePqAt(spark, s"$g1/pq", del)
-    }
-  }
-
   /** Retrain BOTH trained artifacts of a SAVED IVF-PQ index —
     * [[retrainIvfAt]]'s twin for the quantized serving index: coarse
     * centroids AND codebooks refit over the CURRENT stored vectors (the
@@ -2200,92 +1983,6 @@ object Similarity {
         CellStore.read(spark, s"$next/coarse/assignments"), s"$next/pq")
     }
     pruneGens(spark, root)
-  }
-
-  /** Build-once cache for the DECLARED retrained-IVF-PQ query (q304):
-    * q282's lifecycle (fit both artifacts on the even wave, upsert the
-    * odd wave against them frozen) followed by [[retrainIvfPqAt]] — the
-    * scheduled refit the quantized serving index runs when
-    * [[ivfCellStats]] reports drift. Both refits are deterministic over
-    * the full stored corpus, so the post-retrain probe is hash-oracled
-    * against a from-scratch full-corpus fit of BOTH artifacts. */
-  def ensurePersistedIvfPqRetrained(spark: org.apache.spark.sql.SparkSession,
-                                    embeddings: DataFrame, sfDir: String,
-                                    nLists: Int = 8, kmIters: Int = 3,
-                                    m: Int = 16, ksub: Int = 16,
-                                    pqIters: Int = 2): String = {
-    ensureIndexDir(spark, "ivfpqrtr", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|" +
-        s"$nLists|$kmIters|$m|$ksub|$pqIters|retrain|v3") { index =>
-      buildIvfPqGen1(spark, index, embeddings,
-        Seq(embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)),
-        nLists, kmIters, m, ksub, pqIters)
-      retrainIvfPqAt(spark, index, nLists, kmIters, m, ksub, pqIters)
-    }
-  }
-
-  /** Build-once cache for the DECLARED readmit query (q303's vector leg):
-    * the q295 takedown lifecycle followed by RE-INGEST of the purged ids
-    * through the standard upsert path ([[upsertIvfAt]] + [[upsertPqAt]]
-    * against the SAME frozen trained artifacts). Because assignment and
-    * encoding are per-vector against frozen state, delete + readmit is an
-    * IDENTITY on the index content — the probe hash-matches q282's
-    * never-deleted oracle verbatim, proving the takedown-then-reingest
-    * flow heals both saved artifacts exactly.
-    *
-    * Precision caveat to that identity: readmitted EVEN-wave ids are
-    * re-assigned by [[assignCells]] against the f32-ROUNDED saved
-    * centroids, while their original rows came from the f64 Lloyd
-    * assignment — the two agree unless a vector sits on a near-tie that
-    * flips under f32 rounding. The q303 oracle gates this empirically at
-    * every tested SF; a corpus engineered onto such a tie would break
-    * the byte-identity (not correctness — both assignments are valid
-    * nearest-centroid choices). */
-  def ensurePersistedIvfPqReadmitted(spark: org.apache.spark.sql.SparkSession,
-                                     embeddings: DataFrame, sfDir: String,
-                                     nLists: Int = 8, kmIters: Int = 3,
-                                     m: Int = 16, ksub: Int = 16,
-                                     pqIters: Int = 2, delMod: Int = 5,
-                                     delRes: Int = 3): String = {
-    ensureIndexDir(spark, "ivfpqradm", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|" +
-        s"$nLists|$kmIters|$m|$ksub|$pqIters|readmit=mod${delMod}eq$delRes|v3") { index =>
-      val g1 = buildIvfPqGen1(spark, index, embeddings,
-        Seq(embeddings.filter(pmod(col("vec_id"), lit(2)) === 1)),
-        nLists, kmIters, m, ksub, pqIters)
-      val del = embeddings
-        .filter(pmod(col("vec_id"), lit(delMod)) === delRes)
-      deleteIvfAt(spark, s"$g1/coarse", del.select("vec_id"))
-      deletePqAt(spark, s"$g1/pq", del.select("vec_id"))
-      upsertIvfAt(spark, s"$g1/coarse", del)
-      upsertCellPqAt(spark, s"$g1/pq",
-        CellStore.read(spark, s"$g1/coarse/assignments"), del)
-    }
-  }
-
-  /** Build-once cache for the DECLARED maintained-IVF-PQ query (q300):
-    * q282's lifecycle under the LONGER maintenance history q296/q297 gave
-    * the plain IVF — fit + save BOTH trained artifacts on the even wave
-    * (coarse centroids AND codebooks frozen there), then TWO separate
-    * upsert waves (vec_id % 4 == 1, then % 4 == 3) against the frozen
-    * artifacts, then [[compactIvfPqAt]] rewrites BOTH fragmented
-    * cell-partitioned tables — the coarse assignments AND the PQ codes
-    * (each upsert wave appends a file set into the cell partitions it
-    * touches on both stores) — to one file per cell, as one new
-    * generation. Because assignment and encoding are per-vector against
-    * frozen artifacts, the post-maintenance probe equals q282's two-wave
-    * index exactly — q300 reuses q282's hash oracle verbatim. */
-  def ensurePersistedIvfPqMaintained(spark: org.apache.spark.sql.SparkSession,
-                                     embeddings: DataFrame, sfDir: String,
-                                     nLists: Int = 8, kmIters: Int = 3,
-                                     m: Int = 16, ksub: Int = 16,
-                                     pqIters: Int = 2): String = {
-    ensureIndexDir(spark, "ivfpqmnt", s"$sfDir|${persistedIndexStamp(spark, sfDir)}|" +
-        s"$nLists|$kmIters|$m|$ksub|$pqIters|waves=4|compact|v3") { index =>
-      buildIvfPqGen1(spark, index, embeddings,
-        Seq(embeddings.filter(pmod(col("vec_id"), lit(4)) === 1),
-          embeddings.filter(pmod(col("vec_id"), lit(4)) === 3)),
-        nLists, kmIters, m, ksub, pqIters)
-      compactIvfPqAt(spark, index)
-    }
   }
 
   /** Deterministic random-projection dimensionality reduction (the

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -99,53 +100,28 @@ object JsonlCorpusSource {
     * (exercising the `*.jsonl` glob path). */
   def ensureFixture(spark: SparkSession, documents: DataFrame,
                     sfDir: String, tag: String = ""): String = {
-    // key the cached fixture by the SOURCE parquet's (length, mtime), not
-    // just the path: a regenerated testdata dir must invalidate the cache,
-    // or a stale fixture would silently diverge from the oracle's rebuild
-    // stat failure is LOUD (the streamedStateBase rule): a silent fallback
-    // stamp would let the `_FIXTURE_READY` marker keep serving a fixture
-    // built from a since-regenerated documents table
-    val srcStamp = {
-      val sp = new org.apache.hadoop.fs.Path(s"$sfDir/documents.parquet")
-      val st = try {
-        sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(sp)
-      } catch {
-        case e: Exception => throw new IllegalStateException(
-          s"cannot stat $sp to stamp the cached JSONL fixture — " +
-            "refusing to risk serving a stale fixture", e)
-      }
-      s"${st.getLen}-${st.getModificationTime}"
+    // keyed by the SOURCE parquet's stamp, not just the path: a
+    // regenerated testdata dir must not serve a fixture that silently
+    // diverges from the oracle's rebuild
+    val base = graft.TmpCache.ensure(spark,
+        "jsonl-fixture" + (if (tag.nonEmpty) "-" + tag else ""), tag,
+        Seq(s"$sfDir/documents.parquet")) { base =>
+      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val staging = new Path(base, "staging")
+      documents.selectExpr(
+          s"""CASE WHEN doc_id % 97 = 0 THEN concat('CORRUPT ', $lineExpr)
+              ELSE $lineExpr END AS value""")
+        .write.mode("overwrite").text(staging.toString)
+      val dst = new Path(base, "fixture")
+      fs.mkdirs(dst)
+      Option(fs.globStatus(new Path(staging, "part-*")))
+        .toSeq.flatten.zipWithIndex.foreach { case (st, i) =>
+          require(fs.rename(st.getPath, new Path(dst, s"part-$i.jsonl")),
+            s"fixture rename failed: ${st.getPath}")
+        }
+      fs.delete(staging, true)
     }
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft-jsonl-fixture-" +
-      (if (tag.nonEmpty) tag + "-" else "") +
-      graft.TmpCache.dirKey(sfDir + "|" + srcStamp + "|" + tag)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
-    val marker = new org.apache.hadoop.fs.Path(dir, "_FIXTURE_READY")
-    if (fs.exists(marker)) return dir
-    graft.TmpCache.withBuildLock(dir) {
-      if (!fs.exists(marker)) {
-        val staging = new org.apache.hadoop.fs.Path(dir + "__staging")
-        fs.delete(staging, true)
-        documents.selectExpr(
-            s"""CASE WHEN doc_id % 97 = 0 THEN concat('CORRUPT ', $lineExpr)
-                ELSE $lineExpr END AS value""")
-          .write.mode("overwrite").text(staging.toString)
-        val dst = new org.apache.hadoop.fs.Path(dir)
-        fs.delete(dst, true)
-        fs.mkdirs(dst)
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(staging, "part-*")))
-          .toSeq.flatten.zipWithIndex.foreach { case (st, i) =>
-            require(fs.rename(st.getPath,
-              new org.apache.hadoop.fs.Path(dst, s"part-$i.jsonl")),
-              s"fixture rename failed: ${st.getPath}")
-          }
-        fs.delete(staging, true)
-        fs.create(marker, true).close()
-      }
-    }
-    dir
+    s"$base/fixture"
   }
 
   /** The JSON-line serialization both engines build character-for-

@@ -77,13 +77,9 @@ object Streams {
     * exercise. Returns the state dir; [[jsonlIngestReportAt]] /
     * [[jsonlValidAt]] over it must answer exactly the full-fixture report
     * (waves partition the corpus), which the DuckDB oracle rebuilds from
-    * `documents` alone.
-    *
-    * Idempotent and crash-convergent per (sfDir, fixture stamp): a marker
-    * short-circuits repeat calls (bench reps measure the READ, not the
-    * stream); any interrupted prefix of the copy→stream→copy→stream chain
-    * re-runs safely because landing copies overwrite deterministic names
-    * and a checkpointed AvailableNow run re-processes nothing. */
+    * `documents` alone. Built once per source stamp by
+    * [[graft.TmpCache.ensure]], so bench reps measure the READ, not the
+    * stream. */
   def ensureStreamedJsonlState(spark: SparkSession, documents: DataFrame,
                                sfDir: String): String = {
     import graft.sources.JsonlCorpusSource
@@ -92,41 +88,33 @@ object Streams {
       spark, documents.filter(pmod(col("doc_id"), lit(2)) === 0), sfDir, "w0")
     val w1 = JsonlCorpusSource.ensureFixture(
       spark, documents.filter(pmod(col("doc_id"), lit(2)) === 1), sfDir, "w1")
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-jsonl-stream-" +
-      graft.TmpCache.dirKey(w0 + "|" + w1 + "|" + StateFormatVersion)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(hconf)
-    val out = s"$base/state"
-    val marker = new org.apache.hadoop.fs.Path(base, "_STATE_READY")
-    if (fs.exists(marker)) return out
-    graft.TmpCache.withBuildLock(base) {
-      if (!fs.exists(marker)) {
-        val landing = new org.apache.hadoop.fs.Path(base, "landing")
-        fs.mkdirs(landing)
-        def landWave(waveDir: String, prefix: String): Unit =
-          Option(fs.globStatus(new org.apache.hadoop.fs.Path(waveDir, "*.jsonl")))
-            .toSeq.flatten.foreach { st =>
-              org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-                new org.apache.hadoop.fs.Path(landing, s"$prefix-${st.getPath.getName}"),
-                false, true, hconf)
-            }
-        landWave(w0, "w0")
-        awaitBounded(streamingJsonlIngest(
-          spark, landing.toString, out, s"$base/ckpt", schema))
-        // mid-lifecycle compaction between the waves (the
-        // ensureStreamedTableState convention): the q256/q257 readers then
-        // answer from a state whose dir holds the compacted epoch=-1
-        // partition next to wave 1's epoch — the JSONL family's
-        // compactor driver-checked, not just spec-asserted. Identity
-        // fold, so a crash-rerun re-compacting is a no-op.
-        compactJsonlIngestAt(spark, out)
-        landWave(w1, "w1")
-        awaitBounded(streamingJsonlIngest(
-          spark, landing.toString, out, s"$base/ckpt", schema))
-        fs.create(marker, true).close()
-      }
+    val base = graft.TmpCache.ensure(spark, "jsonl-stream", "w0|w1",
+        Seq(s"$sfDir/documents.parquet")) { base =>
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(hconf)
+      val landing = new org.apache.hadoop.fs.Path(base, "landing")
+      fs.mkdirs(landing)
+      def landWave(waveDir: String, prefix: String): Unit =
+        Option(fs.globStatus(new org.apache.hadoop.fs.Path(waveDir, "*.jsonl")))
+          .toSeq.flatten.foreach { st =>
+            org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
+              new org.apache.hadoop.fs.Path(landing, s"$prefix-${st.getPath.getName}"),
+              false, true, hconf)
+          }
+      landWave(w0, "w0")
+      awaitBounded(streamingJsonlIngest(
+        spark, landing.toString, s"$base/state", s"$base/ckpt", schema))
+      // mid-lifecycle compaction between the waves (the
+      // ensureStreamedTableState convention): the q256/q257 readers then
+      // answer from a state whose dir holds the compacted epoch=-1
+      // partition next to wave 1's epoch — the JSONL family's
+      // compactor driver-checked, not just spec-asserted
+      compactJsonlIngestAt(spark, s"$base/state")
+      landWave(w1, "w1")
+      awaitBounded(streamingJsonlIngest(
+        spark, landing.toString, s"$base/state", s"$base/ckpt", schema))
     }
-    out
+    s"$base/state"
   }
 
   /** Await an AvailableNow stream with a hard deadline: a hung stream
@@ -142,16 +130,6 @@ object Streams {
         s"streaming query ${q.name} did not finish within ${timeoutMs}ms")
     }
 
-  /** [[ensureStreamedJsonlState]]'s sibling for PARQUET-fed maintainers:
-    * the documents table split by doc_id parity into two waves, each
-    * landed under one directory and streamed in its OWN run against one
-    * checkpoint via `start(streamingDocs, statePath, ckptPath)` — so any
-    * epoch-partials maintainer can be driven into a genuinely multi-epoch
-    * maintained state and then declared as a driver-checked query (its
-    * `...At` reader must answer the batch operator over the FULL table,
-    * which the DuckDB oracle rebuilds directly). Same marker idempotence
-    * and crash-convergence argument as the JSONL twin. `tag` keys the
-    * cached state per maintainer. */
   /** The canonical lex-index state build shared by the declared queries
     * (q258/q268/q269/q270), Smoke, and StreamingSpec — ONE definition so
     * every caller lands on the same cache dir: four doc_id-mod-4 waves
@@ -167,13 +145,9 @@ object Streams {
   /** The lex state's ERASURE lifecycle (q298/q299): its own three-wave +
     * mid-lifecycle-compaction build (a separate cache dir ON PURPOSE —
     * deleting from the shared q258 state would corrupt its six readers),
-    * then [[deleteDocsAt]] purges every `doc_id % delMod == delRes`
+    * then [[deleteLexDocsAt]] purges every `doc_id % delMod == delRes`
     * document's rows AFTER all waves landed — the takedown arriving on a
-    * long-lived maintained index, not folded into its build. The delete
-    * predicate lives in the cache tag (the `del=modNeqR` key-material
-    * convention) and the delete leg is marker-guarded separately from the
-    * wave build: a crash between them re-applies an idempotent filter on
-    * the next ensure. */
+    * long-lived maintained index, not folded into its build. */
   def ensureLexDeletedState(spark: SparkSession, documents: DataFrame,
                             sfDir: String, delMod: Int = 5,
                             delRes: Int = 3): String =
@@ -185,12 +159,9 @@ object Streams {
   /** The generic takedown wrapper behind [[ensureLexDeletedState]] and the
     * band-state erasure (q305): build ANY doc-keyed streamed state under
     * its own cache tag (a separate dir ON PURPOSE — deleting from a shared
-    * state would corrupt its other readers), then [[deleteDocsAt]] purges
-    * every `doc_id % delMod == delRes` document's rows AFTER all waves
-    * landed. The delete leg is marker-guarded separately from the wave
-    * build: a crash between them re-applies an idempotent filter on the
-    * next ensure. The caller's `tag` must carry the delete parameters
-    * (the `del=modNeqR` key-material convention). */
+    * state would corrupt its other readers), then `deleter` purges every
+    * `doc_id % delMod == delRes` document's rows AFTER all waves landed,
+    * inside the same build: a crash anywhere rebuilds from a wiped dir. */
   def ensureDeletedDocState(spark: SparkSession, documents: DataFrame,
                             sfDir: String, tag: String, delMod: Int,
                             delRes: Int, waves: Int = 2,
@@ -200,25 +171,14 @@ object Streams {
                             deleter: (SparkSession, String,
                               org.apache.spark.sql.Column) => Unit =
                               deleteDocsAt)(
-      start: (DataFrame, String, String) => StreamingQuery): String = {
-    val out = ensureStreamedDocState(spark, documents, sfDir, tag,
-      waves = waves, compactAfterWave = compactAfterWave,
-      compactor = compactor)(start)
-    val base = streamedStateBase(spark, sfDir,
-      s"$tag-w$waves-c$compactAfterWave", "documents.parquet")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(base, "_DOCS_DELETED")
-    if (!fs.exists(marker)) graft.TmpCache.withBuildLock(base) {
-      if (!fs.exists(marker)) {
-        deleter(spark, out,
-          pmod(col("doc_id"), lit(delMod)) === delRes)
-        fs.create(marker, true).close()
-      }
-    }
-    out
-  }
+      start: (DataFrame, String, String) => StreamingQuery): String =
+    streamedState(spark, documents, sfDir, tag, "doc_id", "documents.parquet",
+      waves, compactAfterWave, compactor, s"del=mod${delMod}eq$delRes")(
+      start)((sp, out) =>
+      deleter(sp, out, pmod(col("doc_id"), lit(delMod)) === delRes))
 
+  /** [[ensureStreamedTableState]] over the documents table, split by
+    * doc_id. */
   def ensureStreamedDocState(spark: SparkSession, documents: DataFrame,
                              sfDir: String, tag: String, waves: Int = 2,
                              compactAfterWave: Int = 0,
@@ -229,48 +189,16 @@ object Streams {
       idCol = "doc_id", srcFile = "documents.parquet", waves = waves,
       compactAfterWave = compactAfterWave, compactor = compactor)(start)
 
-  /** The table-generic form of [[ensureStreamedDocState]]: split ANY
-    * fixture table by `idCol` parity into two waves and stream each
-    * through `start` against one checkpoint (q260 drives `embeddings`
-    * through `streamingScoredVectors` this way). `srcFile` keys the
-    * cached state to the source parquet's (length, mtime) stamp so a
-    * regenerated testdata dir invalidates it. */
-  /** Bump whenever ANY epoch-partials maintainer changes its partial
-    * schema or semantics: the persisted tmp states are keyed by (source
-    * stamp, tag, THIS version), so a bump invalidates every cached state
-    * instead of the `_STATE_READY` marker silently serving state written
-    * by the OLD code — an AnalysisException on a missing column at best,
-    * a stale-semantics parity failure at worst. */
-  private val StateFormatVersion = "v4"
-
-  private[graft] def streamedStateBase(spark: SparkSession, sfDir: String,
-                                tag: String, srcFile: String): String = {
-    // stat failure is LOUD by design: a silent "nostamp" fallback would
-    // let a `_STATE_READY` marker keep serving state built from a
-    // since-REGENERATED dataset (the stamp is the only thing tying the
-    // cache to the source bytes). The read path needs this file anyway,
-    // so failing here loses nothing and can never serve stale state.
-    val srcStamp = {
-      val sp = new org.apache.hadoop.fs.Path(s"$sfDir/$srcFile")
-      val st = try {
-        sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(sp)
-      } catch {
-        case e: Exception => throw new IllegalStateException(
-          s"cannot stat $sp to stamp the cached streamed state '$tag' — " +
-            "refusing to risk serving a stale cache", e)
-      }
-      s"${st.getLen}-${st.getModificationTime}"
-    }
-    // tag segment kept in the name for human readability; uniqueness comes
-    // from the digest alone
-    s"${System.getProperty("java.io.tmpdir")}/graft-docstream-$tag-" +
-      graft.TmpCache.dirKey(
-        sfDir + "|" + srcStamp + "|" + tag + "|" + StateFormatVersion)
-  }
-
-  /** `waves` splits the table by `pmod(idCol, waves)` into that many
-    * landing waves (one stream run each against one checkpoint).
+  /** The multi-wave streamed state behind any epoch-partials maintainer:
+    * split `table` by `pmod(idCol, waves)` into that many landing waves
+    * and stream each in its OWN run against one checkpoint via
+    * `start(streamingTable, statePath, ckptPath)` — so the maintainer is
+    * driven into a genuinely multi-epoch state and declared as a
+    * driver-checked query (its `...At` reader must answer the batch
+    * operator over the FULL table, which the DuckDB oracle rebuilds
+    * directly). Built once per (source stamp of `srcFile`, tag, waves,
+    * compaction) by [[graft.TmpCache.ensure]].
+    *
     * `compactAfterWave = n` (1-based, 0 = never) runs `compactor` on the
     * state BETWEEN waves n and n+1 — the production maintenance shape: a
     * long-lived state is compacted mid-lifecycle while ingestion is
@@ -284,70 +212,62 @@ object Streams {
                                compactAfterWave: Int = 0,
                                compactor: (SparkSession, String) => Unit =
                                  (_, _) => ())(
-      start: (DataFrame, String, String) => StreamingQuery): String = {
+      start: (DataFrame, String, String) => StreamingQuery): String =
+    streamedState(spark, table, sfDir, tag, idCol, srcFile, waves,
+      compactAfterWave, compactor, "")(start)((_, _) => ())
+
+  /** The one streamed-state build: the waves, the mid-lifecycle
+    * compaction, then `finish` (a takedown or readmit leg) on the
+    * complete state. `finishKey` names `finish` in the cache key. */
+  private def streamedState(spark: SparkSession, table: DataFrame,
+                            sfDir: String, tag: String, idCol: String,
+                            srcFile: String, waves: Int,
+                            compactAfterWave: Int,
+                            compactor: (SparkSession, String) => Unit,
+                            finishKey: String)(
+      start: (DataFrame, String, String) => StreamingQuery)(
+      finish: (SparkSession, String) => Unit): String = {
     require(waves >= 2, s"need >= 2 waves for a multi-epoch state; got $waves")
     require(compactAfterWave >= 0 && compactAfterWave < waves,
       s"compactAfterWave must be 0 (never) or in [1, waves-1]; got $compactAfterWave/$waves")
-    val base = streamedStateBase(spark, sfDir,
-      s"$tag-w$waves-c$compactAfterWave", srcFile)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(hconf)
-    val out = s"$base/state"
-    val marker = new org.apache.hadoop.fs.Path(base, "_STATE_READY")
-    if (fs.exists(marker)) return out
-    graft.TmpCache.withBuildLock(base) {
-      // double-checked build guard (the ensureFixture/ensurePersistedDetIvf
-      // shape) — no non-local return, which would rely on
-      // NonLocalReturnControl unwinding through the lock's finally blocks
-      if (!fs.exists(marker)) {
-        val landing = new org.apache.hadoop.fs.Path(base, "landing")
-        fs.mkdirs(landing)
-        val schema = table.schema
-        def landWave(parity: Int): Unit = {
-          val staging = new org.apache.hadoop.fs.Path(base, s"__w$parity")
-          fs.delete(staging, true)
-          // ONE file per wave (coalesce(1)): the landing layout must be
-          // DETERMINISTIC across reruns for crash-convergence — the file
-          // source's checkpoint skips already-committed paths, so a rerun
-          // whose wave write produced a different part layout (e.g. after a
-          // shuffle-partitions change) would ingest a mix of old-committed
-          // and re-landed subsets. One deterministic path per wave means a
-          // committed path == a complete wave (partials are order-insensitive
-          // per-row projections/aggregates, so row order inside the file
-          // doesn't matter). Stale w<parity>-* from a prior layout are
-          // glob-deleted before landing.
-          table.filter(pmod(col(idCol), lit(waves)) === parity)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(staging.toString)
-          Option(fs.globStatus(
-              new org.apache.hadoop.fs.Path(landing, s"w$parity-*")))
-            .toSeq.flatten.foreach(st => fs.delete(st.getPath, false))
-          Option(fs.globStatus(new org.apache.hadoop.fs.Path(staging, "part-*")))
-            .toSeq.flatten.zipWithIndex.foreach { case (st, i) =>
-              val dst = new org.apache.hadoop.fs.Path(landing, s"w$parity-$i.parquet")
-              require(fs.rename(st.getPath, dst), s"wave rename failed: $dst")
-            }
-          fs.delete(staging, true)
-        }
-        def wave(parity: Int): Unit = {
-          landWave(parity)
-          awaitBounded(start(
-            spark.readStream.schema(schema).parquet(landing.toString),
-            out, s"$base/ckpt"))
-        }
-        (0 until waves).foreach { w =>
-          wave(w)
-          // mid-lifecycle compaction: the maintaining stream is STOPPED
-          // between waves (each wave is its own terminated AvailableNow
-          // run), which is exactly compactEpochs' contract. A rerun after
-          // a crash re-compacts the already-compacted state — the folds
-          // are idempotent — and the checkpoint skips committed waves.
-          if (w + 1 == compactAfterWave) compactor(spark, out)
-        }
-        fs.create(marker, true).close()
+    val key = s"$tag-w$waves-c$compactAfterWave" +
+      (if (finishKey.nonEmpty) s"|$finishKey" else "")
+    val base = graft.TmpCache.ensure(spark, s"docstream-$tag", key,
+        Seq(s"$sfDir/$srcFile")) { base =>
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val out = s"$base/state"
+      val landing = new org.apache.hadoop.fs.Path(base, "landing")
+      fs.mkdirs(landing)
+      val schema = table.schema
+      (0 until waves).foreach { w =>
+        // ONE file per wave (coalesce(1)), staged and renamed to a
+        // deterministic landing name: the file source's checkpoint
+        // tracks committed paths, so one path per wave means a committed
+        // path == a complete wave (partials are order-insensitive per-row
+        // projections/aggregates, so row order inside the file does not
+        // matter)
+        val staging = new org.apache.hadoop.fs.Path(base, s"__w$w")
+        table.filter(pmod(col(idCol), lit(waves)) === w)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(staging.toString)
+        Option(fs.globStatus(new org.apache.hadoop.fs.Path(staging, "part-*")))
+          .toSeq.flatten.zipWithIndex.foreach { case (st, i) =>
+            val dst = new org.apache.hadoop.fs.Path(landing, s"w$w-$i.parquet")
+            require(fs.rename(st.getPath, dst), s"wave rename failed: $dst")
+          }
+        fs.delete(staging, true)
+        awaitBounded(start(
+          spark.readStream.schema(schema).parquet(landing.toString),
+          out, s"$base/ckpt"))
+        // mid-lifecycle compaction: the maintaining stream is STOPPED
+        // between waves (each wave is its own terminated AvailableNow
+        // run), which is exactly compactEpochs' contract
+        if (w + 1 == compactAfterWave) compactor(spark, out)
       }
+      finish(spark, out)
     }
-    out
+    s"$base/state"
   }
 
   /** Streaming MinHash band-index maintenance — the incremental form of
@@ -1315,7 +1235,7 @@ object Streams {
 
   /** The lex state's READMIT lifecycle (q302/q303's lexical leg): the
     * ensureLexDeletedState build (3 waves + mid-lifecycle compaction +
-    * [[deleteDocsAt]] of every doc_id % delMod == delRes), then the purged
+    * [[deleteLexDocsAt]] of every doc_id % delMod == delRes), then the purged
     * docs RE-INGESTED through [[upsertDocsAt]] — the takedown-then-
     * reingest flow. The readmitted rows are batch-identical to the rows
     * the stream originally produced (shared [[lexPartial]]), so every
@@ -1324,27 +1244,14 @@ object Streams {
   def ensureLexReadmittedState(spark: SparkSession, documents: DataFrame,
                                sfDir: String, delMod: Int = 5,
                                delRes: Int = 3): String = {
-    val tag = s"lexreadmit-m${delMod}r$delRes"
-    val out = ensureStreamedDocState(spark, documents, sfDir, tag,
-      waves = 3, compactAfterWave = 2, compactor = compactLexIndexAt)(
-      (sd, o, ckpt) => streamingLexIndex(sd, o, ckpt))
-    val base = streamedStateBase(spark, sfDir, s"$tag-w3-c2",
-      "documents.parquet")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // one marker guards the delete+readmit PAIR: a crash between the two
-    // re-runs both on the next ensure (the delete is an idempotent filter
-    // and the readmit's purge-first makes the pair idempotent too)
-    val marker = new org.apache.hadoop.fs.Path(base, "_DOCS_READMITTED")
-    if (!fs.exists(marker)) graft.TmpCache.withBuildLock(base) {
-      if (!fs.exists(marker)) {
-        val pred = pmod(col("doc_id"), lit(delMod)) === delRes
-        deleteLexDocsAt(spark, out, pred)
-        upsertDocsAt(spark, out, documents.filter(pred))
-        fs.create(marker, true).close()
-      }
+    val pred = pmod(col("doc_id"), lit(delMod)) === delRes
+    streamedState(spark, documents, sfDir, s"lexreadmit-m${delMod}r$delRes",
+      "doc_id", "documents.parquet", waves = 3, compactAfterWave = 2,
+      compactLexIndexAt, s"readmit=mod${delMod}eq$delRes")(
+      (sd, o, ckpt) => streamingLexIndex(sd, o, ckpt)) { (sp, out) =>
+      deleteLexDocsAt(sp, out, pred)
+      upsertDocsAt(sp, out, documents.filter(pred))
     }
-    out
   }
 
   /** The maintained postings table (token, doc_id, tf, pbk) — only the

@@ -600,7 +600,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ensurePersistedDetIvf: two-wave persisted lifecycle equals the in-memory twin; build-once") {
-    val dir = Similarity.ensurePersistedDetIvf(spark, emb, TestSpark.sf0001)
+    val dir = Similarity.ensurePersisted(spark, emb, TestSpark.sf0001, Similarity.Lifecycle.q261)
     val g = Similarity.resolveIndexDir(spark, dir)
     val loaded = Similarity.loadIvfAt(spark, dir)
     // the saved index carries BOTH waves (fit wave + upserted wave)
@@ -622,14 +622,58 @@ class SimilaritySpec extends AnyFunSuite {
     // stored assignment files untouched (marker short-circuit)
     val files = new java.io.File(s"$g/assignments").listFiles()
       .map(f => (f.getName, f.lastModified)).toSet
-    assert(Similarity.ensurePersistedDetIvf(spark, emb, TestSpark.sf0001) == dir)
+    assert(Similarity.ensurePersisted(spark, emb, TestSpark.sf0001, Similarity.Lifecycle.q261) == dir)
     val after = new java.io.File(s"$g/assignments").listFiles()
       .map(f => (f.getName, f.lastModified)).toSet
     assert(after == files)
   }
 
+  test("lifecycle table: every declared store has its own cache dir, and a copy differing in any one field maps elsewhere") {
+    import Similarity._
+    // every declared value, found by reflection so a new one is covered
+    val declared = Lifecycle.getClass.getMethods.toSeq
+      .filter(m => m.getReturnType == classOf[Lifecycle] &&
+        m.getParameterCount == 0 && m.getName.matches("q\\d+"))
+      .map(m => m.getName -> m.invoke(Lifecycle).asInstanceOf[Lifecycle])
+    assert(declared.size == 14, declared.map(_._1).sorted)
+    val src = Seq(s"${TestSpark.sf0001}/embeddings.parquet")
+    def dirOf(lc: Lifecycle) = TmpCache.dir(spark,
+      lc.codec.productPrefix.toLowerCase, lc.toString, src)
+    // the scaffold keys ensurePersisted's store by exactly this rendering
+    assert(ensurePersisted(spark, emb, TestSpark.sf0001, Lifecycle.q261) ==
+      dirOf(Lifecycle.q261) + "/index")
+    val dirs = declared.map { case (_, lc) => dirOf(lc) }
+    assert(dirs.distinct.size == dirs.size, declared)
+    def codecEdits(c: Codec): Seq[Codec] = c match {
+      case DetIvf(n, i) => Seq(DetIvf(n + 1, i), DetIvf(n, i + 1), Sq)
+      case IvfPq(n, k, m, q, p) => Seq(IvfPq(n + 1, k, m, q, p),
+        IvfPq(n, k + 1, m, q, p), IvfPq(n, k, m + 1, q, p),
+        IvfPq(n, k, m, q + 1, p), IvfPq(n, k, m, q, p + 1), DetIvf(n, k))
+      case Sq => Seq(Bq(63))
+      case Bq(b) => Seq(Bq(b + 1), Sq)
+    }
+    def stepEdits(st: Step): Seq[Step] = st match {
+      case Upsert(m, r) => Seq(Upsert(m + 1, r), Upsert(m, r + 1), Delete(m, r))
+      case Delete(m, r) => Seq(Delete(m + 1, r), Delete(m, r + 1), Upsert(m, r))
+      case Retrain => Seq(Compact)
+      case Compact => Seq(Retrain)
+      case SplitHottest => Seq(Retrain)
+    }
+    declared.foreach { case (name, lc) =>
+      val copies = codecEdits(lc.codec).map(c => Lifecycle(c, lc.steps: _*)) ++
+        lc.steps.indices.flatMap { i =>
+          stepEdits(lc.steps(i)).map(v => Lifecycle(lc.codec, lc.steps.updated(i, v): _*)) :+
+            Lifecycle(lc.codec, lc.steps.patch(i, Nil, 1): _*)
+        }
+      copies.foreach(c => assert(dirOf(c) != dirOf(lc), s"$name vs $c"))
+    }
+    // equal values render (and so key) equally however their steps were built
+    assert(dirOf(Lifecycle(DetIvf(8, 3), List(Upsert(2, 1)): _*)) ==
+      dirOf(Lifecycle.q261))
+  }
+
   test("ensurePersistedSq (q290): two-wave persisted codes equal a one-shot full-corpus encode; build-once") {
-    val dir = Similarity.ensurePersistedSq(spark, emb, TestSpark.sf0001)
+    val dir = Similarity.ensurePersisted(spark, emb, TestSpark.sf0001, Similarity.Lifecycle.q290)
     val g = Similarity.resolveIndexDir(spark, dir)
     val loaded = Similarity.loadSqIndex(spark, g)
     // the upsert contract THROUGH storage: wave-0-save + wave-1-upsert
@@ -646,13 +690,13 @@ class SimilaritySpec extends AnyFunSuite {
     // build-once: marker short-circuit leaves the stored files untouched
     val files = new java.io.File(g).listFiles()
       .map(f => (f.getName, f.lastModified)).toSet
-    assert(Similarity.ensurePersistedSq(spark, emb, TestSpark.sf0001) == dir)
+    assert(Similarity.ensurePersisted(spark, emb, TestSpark.sf0001, Similarity.Lifecycle.q290) == dir)
     assert(new java.io.File(g).listFiles()
       .map(f => (f.getName, f.lastModified)).toSet == files)
   }
 
   test("ensurePersistedBq (q291): two-wave persisted sign codes equal a one-shot encode; probe parity; build-once") {
-    val dir = Similarity.ensurePersistedBq(spark, emb, TestSpark.sf0001)
+    val dir = Similarity.ensurePersisted(spark, emb, TestSpark.sf0001, Similarity.Lifecycle.q291)
     val loaded = Similarity.loadBqIndex(
       spark, Similarity.resolveIndexDir(spark, dir))
     val oneShot = Similarity.bqIndex(emb).as[(Long, Long)].collect().toMap
@@ -661,7 +705,7 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(_.toString).sorted
     val b = Similarity.bqTopK(emb, queries, 3).collect().map(_.toString).sorted
     assert(a.sameElements(b) && a.nonEmpty)
-    assert(Similarity.ensurePersistedBq(spark, emb, TestSpark.sf0001) == dir)
+    assert(Similarity.ensurePersisted(spark, emb, TestSpark.sf0001, Similarity.Lifecycle.q291) == dir)
   }
 
   test("compactIvfAt + ivfCellStats (q296/q297): multi-upsert fragmentation observed, compaction to one file per cell, probes byte-identical") {
@@ -944,14 +988,14 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("retrained ensure rebuild resets the root: a crashed build's partial generation cannot leak into the rebuilt index") {
-    val dir = Similarity.ensurePersistedDetIvfRetrained(spark, emb, TestSpark.sf0001)
+    val dir = Similarity.ensurePersisted(spark, emb, TestSpark.sf0001, Similarity.Lifecycle.q301)
     def probe() = Similarity.ivfProbe(
       Similarity.loadIvfAt(spark, dir), queries, 3, nProbe = 3)
       .collect().map(_.toString).sorted
     val want = probe()
     // simulate a PREVIOUS build crashing mid-retrain: a partial next
     // generation dir left beside the serving one, plus a stale pointer,
-    // with _INDEX_READY missing (the ensure retry rebuilds from scratch).
+    // with the ready marker missing (the ensure retry rebuilds from scratch).
     // The reset-then-rebuild rule must wipe all of it — if any planted
     // state survived into the rebuilt index, the probe would differ
     val staleGen = Similarity.currentGen(spark, dir).get + 1
@@ -959,10 +1003,9 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.detIvfIndex(w0, 8).centroids.write.mode("overwrite")
       .parquet(s"$dir/gen=$staleGen/centroids")
     val marker = new java.io.File(new java.io.File(dir).getParentFile,
-      "_INDEX_READY")
+      graft.TmpCache.ReadyMarker)
     assert(marker.delete())
-    assert(Similarity.ensurePersistedDetIvfRetrained(
-      spark, emb, TestSpark.sf0001) == dir)
+    assert(Similarity.ensurePersisted(spark, emb, TestSpark.sf0001, Similarity.Lifecycle.q301) == dir)
     assert(!new java.io.File(s"$dir/gen=$staleGen/centroids").exists()
         || Similarity.currentGen(spark, dir).contains(staleGen),
       "planted partial generation must not survive the reset")
@@ -1081,7 +1124,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ensurePersistedIvfPqMaintained (q300): >=3-wave + compacted lifecycle is history-invariant and one file per coarse cell") {
-    val dir = Similarity.ensurePersistedIvfPqMaintained(spark, emb, TestSpark.sf0001)
+    val dir = Similarity.ensurePersisted(spark, emb, TestSpark.sf0001, Similarity.Lifecycle.q300)
     val g = Similarity.resolveIndexDir(spark, dir)
     val (coarse, pq) = Similarity.loadIvfPqAt(spark, dir)
     // all three waves landed in both artifacts

@@ -197,7 +197,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streamedStateBase stamps loudly; a regenerated source gets a fresh state dir, never the stale cache") {
     val docs = Tables.documents(spark, TestSpark.sf0001)
     // un-stattable source: the ensure* call must FAIL, not fall back to a
-    // stampless key that a _STATE_READY marker could serve stale
+    // stampless key that a ready marker could serve stale
     intercept[IllegalStateException] {
       Streams.ensureStreamedDocState(
         spark, docs, "/nonexistent-graft-sfdir", "stampfail")(
@@ -218,6 +218,29 @@ class StreamingSpec extends AnyFunSuite {
     val second = build()
     assert(first != second,
       "regenerated source served the stale cached state dir")
+  }
+
+  test("ensureLexDeletedState: a lost marker beside a planted partial generation rebuilds to the clean state") {
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    def rows(state: String) = Streams.epochsAt(spark, state)
+      .collect().map(_.toString).sorted.toSeq
+    val out = Streams.ensureLexDeletedState(spark, docs, TestSpark.sf0001)
+    val clean = rows(out)
+    assert(clean.nonEmpty)
+    // a crashed later build: marker gone, and a partial next generation
+    // (half the docs, no pointer flip) left in the state root
+    val marker = new java.io.File(new java.io.File(out).getParentFile,
+      TmpCache.ReadyMarker)
+    assert(marker.delete())
+    val next = graft.operators.GenDir.currentGen(spark, out).getOrElse(0) + 1
+    Streams.epochsAt(spark, out).filter($"doc_id" % 2 === 0)
+      .write.mode("overwrite").partitionBy("epoch").parquet(s"$out/gen=$next")
+    assert(Streams.ensureLexDeletedState(spark, docs, TestSpark.sf0001) == out)
+    assert(marker.exists())
+    assert(rows(out) == clean, "the rebuilt state differs from a clean build")
+    assert(Streams.epochsAt(spark, out)
+      .filter(pmod($"doc_id", lit(5)) === 3 && $"kind" =!= "s").isEmpty,
+      "the rebuild skipped the delete leg")
   }
 
   test("streamingMinhashBands (q259): pairs from the maintained band index equal batch minhashPairs, before and after a takedown") {
@@ -1046,8 +1069,8 @@ object StreamingSpec {
     * state) — for specs that MUTATE their state and must rebuild fresh on
     * every run rather than inherit a prior run's mutation. */
   def dropDocState(spark: org.apache.spark.sql.SparkSession, tag: String): Unit = {
-    val base = new org.apache.hadoop.fs.Path(Streams.streamedStateBase(
-      spark, TestSpark.sf0001, s"$tag-w2-c0", "documents.parquet"))
+    val base = new org.apache.hadoop.fs.Path(graft.TmpCache.dir(spark,
+      s"docstream-$tag", s"$tag-w2-c0", Seq(s"${TestSpark.sf0001}/documents.parquet")))
     base.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(base, true)
   }
 

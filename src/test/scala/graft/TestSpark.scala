@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.io.LocalFs
-
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -14,7 +12,10 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    LocalFs.install(s)
+    // production session settings (and the fork-free LocalFs), once: a
+    // declared query re-tunes the session it is given, so a spec session
+    // tuned only by whichever suite ran first would plan order-dependently
+    SparkEntry.tune(s)
     GraftFunctions.register(s)
     s
   }
