@@ -91,7 +91,7 @@ private[graft] object CellStore {
         Memo.loads(spark,
             s"cellstore|$dir|${render(m)}|${Memo.dirStamp(spark, dir)}") {
           val paths = m.toSeq.sorted.map { case (c, v) => s"$dir/cell=$c/v=$v" }
-          spark.read.option("basePath", dir).parquet(paths: _*).drop("v")
+          graft.io.ParquetSchema.read(spark, paths, Some(dir)).drop("v")
         }
       case None => spark.read.parquet(dir)
     }
@@ -176,7 +176,6 @@ private[graft] object CellStore {
   def rewriteCells(spark: SparkSession, dir: String, touched: Seq[Int],
                    stagedRows: DataFrame): Unit = {
     val man = servingManifest(spark, dir)
-    import spark.implicits._
     // next version per touched cell: past the serving one AND any orphan
     // dirs a crashed attempt left (the retry must never append into a
     // partially-written dir)
@@ -184,8 +183,10 @@ private[graft] object CellStore {
       c -> (math.max(man.getOrElse(c, 0),
         listVersions(spark, dir, c).lastOption.getOrElse(0)) + 1)
     }.toMap
-    val vmap = newv.toSeq.toDF("cell", "v")
-    stagedRows.join(broadcast(vmap), Seq("cell"))
+    // the version map rides in the plan as one nLists-bounded literal, so
+    // the write is the rewrite's only job
+    stagedRows.filter(col("cell").isin(touched: _*))
+      .withColumn("v", element_at(typedLit(newv), col("cell")))
       .write.mode("append").partitionBy("cell", "v").parquet(dir)
     // a touched cell whose every row vanished wrote no new version dir —
     // read emptiness off the layout instead of recomputing the staged

@@ -478,7 +478,7 @@ object Similarity {
     // relation, so a probe ranks its cells on the driver without a job
     val (schema, rows) = Memo.loads(spark,
         s"cents|$dir|${Memo.dirStamp(spark, s"$dir/centroids")}") {
-      val df = spark.read.parquet(s"$dir/centroids")
+      val df = graft.io.ParquetSchema.read(spark, Seq(s"$dir/centroids"))
       (df.schema, df.collect())
     }
     IvfIndex(CellStore.read(spark, s"$dir/assignments"),
@@ -539,14 +539,20 @@ object Similarity {
     * Ties break to the lowest cell id; a zero vector passes through
     * un-normalized (the Normalizer's behavior at build time). */
   def assignCells(vectors: DataFrame, centroids: DataFrame,
-                  embCol: String = "embedding"): DataFrame = {
+                  embCol: String = "embedding"): DataFrame =
+    vectors
+      .withColumn("cell",
+        nearest_cell(l2_normalize(col(embCol)), centroidCells(centroids)))
+      .select(col("vec_id"), col(embCol), col("cell"))
+
+  /** A stored (f32) centroid table as the `nearest_cell` kernel's f64
+    * table; the nLists rows are collected (a loaded index's table is a
+    * local relation, so that costs no job). */
+  private def centroidCells(centroids: DataFrame): VecTables = {
     val cents = centroids.select("cell", "centroid").collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).map(_.toDouble).toArray))
     require(cents.nonEmpty, "empty centroid table")
-    vectors
-      .withColumn("cell",
-        nearest_cell(l2_normalize(col(embCol)), VecTables.cells(cents.toSeq)))
-      .select(col("vec_id"), col(embCol), col("cell"))
+    VecTables.cells(cents.toSeq)
   }
 
   /** Incremental IVF maintenance: replace-by-id upsert of a delta without a
@@ -590,10 +596,9 @@ object Similarity {
     // keep resolving the pointer
     val dir = resolveIndexDir(spark, path)
     val idx = loadIvfIndex(spark, dir)
-    val assigned = assignCells(delta, idx.centroids)
     upsertCellTable(spark, s"$dir/assignments", idx.assignments,
-      assigned.select("vec_id", "embedding", "cell"),
-      delta.select("vec_id"), Seq("vec_id", "embedding"))
+      assignCells(delta, idx.centroids), delta.select("vec_id"),
+      Seq("vec_id", "embedding"))
   }
 
   /** The touched-partitions-only upsert shared by the cell-partitioned
@@ -606,16 +611,34 @@ object Similarity {
     * [[CellStore]] manifest (an emptied cell must stop serving its stale
     * rows the moment the manifest flips). */
   private def upsertCellTable(spark: org.apache.spark.sql.SparkSession,
-                              tableDir: String, table: DataFrame,
+                              tableDir: String, cur: DataFrame,
                               newRows: DataFrame, deltaIds: DataFrame,
-                              rowCols: Seq[String]): Unit = {
-    val cur = CellStore.read(spark, tableDir)
-    val oldCells = cur
-      .join(broadcast(deltaIds), Seq("vec_id"))
-      .select("cell")
-    // bounded collect: cell domain is nLists by construction
-    val touched = newRows.select("cell").unionByName(oldCells).distinct()
-      .collect().map(_.getInt(0)).toSeq
+                              rowCols: Seq[String]): Unit =
+    rewriteTouched(spark, tableDir, cur, newRows, deltaIds, rowCols,
+      touchedCells(cur, newRows, deltaIds))
+
+  /** The cells an upsert touches: its new rows' cells and the cells its
+    * ids live in now. */
+  private def touchedCells(cur: DataFrame, newRows: DataFrame,
+                           deltaIds: DataFrame): Seq[Int] =
+    cellSet(newRows.select("cell")
+      .unionByName(cur.join(broadcast(deltaIds), Seq("vec_id")).select("cell")))
+
+  /** The distinct values of a one-int-column cell frame in one job: each
+    * task sends its own distinct cells (bounded: the cell domain is nLists
+    * by construction), where `distinct().collect()` would add a shuffle
+    * stage. */
+  private def cellSet(cells: DataFrame): Seq[Int] =
+    cells.queryExecution.toRdd
+      .mapPartitions(rows => rows.map(_.getInt(0)).toSet.iterator)
+      .collect().distinct.sorted.toSeq
+
+  /** Replace the `touched` cells of the table at `tableDir` (serving rows
+    * `cur`) with `newRows` plus their rows whose id is not in the delta. */
+  private def rewriteTouched(spark: org.apache.spark.sql.SparkSession,
+                             tableDir: String, cur: DataFrame,
+                             newRows: DataFrame, deltaIds: DataFrame,
+                             rowCols: Seq[String], touched: Seq[Int]): Unit = {
     val kept = cur.filter(col("cell").isin(touched: _*))
       .join(broadcast(deltaIds), Seq("vec_id"), "left_anti")
       .select((rowCols :+ "cell").map(col): _*)
@@ -663,10 +686,8 @@ object Similarity {
                                   tableDir: String, ids: DataFrame,
                                   rowCols: Seq[String]): Unit = {
     val table = CellStore.read(spark, tableDir)
-    // bounded collect: cell domain is nLists by construction
-    val touched = table
-      .join(broadcast(ids.select("vec_id")), Seq("vec_id"))
-      .select("cell").distinct().collect().map(_.getInt(0)).toSeq
+    val touched = cellSet(table
+      .join(broadcast(ids.select("vec_id")), Seq("vec_id")).select("cell"))
     if (touched.isEmpty) return
     val kept = table.filter(col("cell").isin(touched: _*))
       .join(broadcast(ids.select("vec_id")), Seq("vec_id"), "left_anti")
@@ -685,8 +706,9 @@ object Similarity {
   sealed trait Codec extends Product
   /** Deterministic IVF with f32 cells: [[detIvfIndex]]. */
   final case class DetIvf(nLists: Int, iters: Int) extends Codec
-  /** IVF-PQ: [[detIvfIndex]] coarse cells beside cell-partitioned
-    * [[pqIndex]] codes ([[savePqCellPartitioned]], the IVFADC layout). */
+  /** IVF-PQ: [[detKMeans]] coarse cells beside cell-partitioned
+    * [[pqIndex]] codes ([[savePqCellPartitioned]], the IVFADC layout),
+    * written by [[writeIvfPq]] and upserted by [[upsertIvfPqAt]]. */
   final case class IvfPq(nLists: Int, kmIters: Int, m: Int, ksub: Int,
                          pqIters: Int) extends Codec
   /** Flat int8 scalar codes: [[sqIndex]]. */
@@ -779,9 +801,7 @@ object Similarity {
   private def wave(embeddings: DataFrame, mod: Int, res: Int): DataFrame =
     embeddings.filter(pmod(col("vec_id"), lit(mod)) === res)
 
-  /** The interpreter behind [[ensurePersisted]]. An IVF-PQ upsert runs
-    * coarse first: the assignments are the source of truth the code rows
-    * take their cell from. */
+  /** The interpreter behind [[ensurePersisted]]. */
   private def runLifecycle(spark: org.apache.spark.sql.SparkSession,
                            embeddings: DataFrame, index: String,
                            lc: Lifecycle): Unit = {
@@ -789,10 +809,7 @@ object Similarity {
     GenDir.rewrite(spark, index) { g =>
       lc.codec match {
         case DetIvf(nLists, iters) => detIvfIndex(w0, nLists, iters).save(g)
-        case IvfPq(nLists, kmIters, m, ksub, pqIters) =>
-          detIvfIndex(w0, nLists, kmIters).save(s"$g/coarse")
-          savePqCellPartitioned(pqIndex(w0, m, ksub, pqIters),
-            CellStore.read(spark, s"$g/coarse/assignments"), s"$g/pq")
+        case c: IvfPq => writeIvfPq(w0, g, c)
         case Sq => saveSqIndex(sqIndex(w0), g)
         case Bq(numBits) => saveBqIndex(bqIndex(w0, numBits), g)
       }
@@ -806,11 +823,7 @@ object Similarity {
         case (DetIvf(nLists, iters), Retrain) => retrainIvfAt(spark, index, nLists, iters)
         case (_: DetIvf, Compact) => compactIvfAt(spark, index)
         case (DetIvf(_, iters), SplitHottest) => splitHottestIvfCellAt(spark, index, iters)
-        case (_: IvfPq, Upsert(m, r)) =>
-          val w = wave(embeddings, m, r)
-          upsertIvfAt(spark, s"$g/coarse", w)
-          upsertCellPqAt(spark, s"$g/pq",
-            CellStore.read(spark, s"$g/coarse/assignments"), w)
+        case (_: IvfPq, Upsert(m, r)) => upsertIvfPqAt(spark, g, wave(embeddings, m, r))
         case (_: IvfPq, Delete(m, r)) =>
           val ids = wave(embeddings, m, r).select("vec_id")
           deleteIvfAt(spark, s"$g/coarse", ids)
@@ -828,6 +841,55 @@ object Similarity {
         case (codec, _) => require(false, s"$codec does not support $step")
       }
     }
+  }
+
+  /** Fit both IVF-PQ quantizers on `items` and write the generation dir
+    * `g` (`coarse/` and `pq/`) from ONE pass: the normalized vectors are
+    * cached once, the coarse centroids and the PQ codebooks fit on them
+    * (through the [[detKMeans]] and [[pqIndex]] memos, keyed as those
+    * calls key them), and both cell tables are written from one
+    * (vec_id, embedding, cell, codes) projection — the codes take their
+    * cell from the same `nearest_cell` the assignments do, with no join
+    * and no read-back of the coarse table. */
+  private def writeIvfPq(items: DataFrame, g: String, c: IvfPq): Unit = {
+    val inDim = 64 // pqIndex's default: the embeddings' width
+    require(c.m >= 1 && inDim % c.m == 0, s"inDim=$inDim must split into m=${c.m} subspaces")
+    val nv = withNv(items, "embedding")
+      .select(col("vec_id"), col("embedding"), col("__nv")).cache()
+    try {
+      val (cents, _) = detKmFits.fit(items, detKmKey(c.nLists, c.kmIters, "embedding"))(
+        detKmFit(items, nv, c.nLists, c.kmIters, "embedding"))
+      val pq = pqFits.fit(items, pqKey(c.m, c.ksub, c.pqIters, inDim, "embedding"))(
+        buildPqFromNv(nv.select(col("vec_id"), col("__nv")), c.m, c.ksub, c.pqIters,
+          inDim / c.m))
+      val rows = nv.select(col("vec_id"), col("embedding"),
+        nearest_cell(col("__nv"), VecTables.cells(cents)).as("cell"),
+        subCodes(pq.codebooks).as("codes"))
+      IvfIndex(rows.select("vec_id", "embedding", "cell"), centroidTable(items, cents))
+        .save(s"$g/coarse")
+      savePqCellPartitioned(pq.copy(codes = rows.select("vec_id", "codes", "cell")),
+        s"$g/pq")
+    } finally nv.unpersist()
+  }
+
+  /** Upsert `delta` into both cell tables of the IVF-PQ generation dir
+    * `g`: one projection encodes its cell (against the stored f32
+    * centroids, as [[upsertIvfAt]] assigns) and its codes (as
+    * [[upsertCellPqAt]] encodes), one touched-cell set serves both
+    * tables, and each table rewrites exactly the cells the two calls in
+    * sequence would rewrite. */
+  private def upsertIvfPqAt(spark: org.apache.spark.sql.SparkSession, g: String,
+                            delta: DataFrame): Unit = {
+    val coarse = loadIvfIndex(spark, s"$g/coarse")
+    val pq = loadPqIndex(spark, s"$g/pq")
+    val rows = encodeDelta(delta, "embedding", pq.codebooks)
+      .withColumn("cell", nearest_cell(col("__nv"), centroidCells(coarse.centroids)))
+    val ids = delta.select("vec_id")
+    val touched = touchedCells(coarse.assignments, rows, ids)
+    rewriteTouched(spark, s"$g/coarse/assignments", coarse.assignments, rows, ids,
+      Seq("vec_id", "embedding"), touched)
+    rewriteTouched(spark, s"$g/pq/codes", pq.codes, rows, ids,
+      Seq("vec_id", "codes"), touched)
   }
 
   // ------------------------------------- generation-pointer serving —
@@ -1197,52 +1259,105 @@ object Similarity {
     *     converts back as `(sum / n) / 2^20` in f64;
     *   - an empty cell keeps its previous centroid.
     *
-    * Scale shape per iteration: one map-only assignment pass + one
-    * (cell, dim)-keyed aggregation whose shuffle is partitions x k x dim
-    * partial rows (map-side combined), never corpus-sized. The centroid
-    * table (k x dim doubles) is driver-side by design — same tiny-table
-    * contract as `assignCells`. Returns (final centroids, assignments
-    * against them). */
+    * Scale shape per iteration: ONE job — each task folds its rows'
+    * assignments into a flat k x (dim + 1) buffer of longs
+    * ([[lloydFold]]) and the driver adds the buffers, so nothing is
+    * shuffled and the plan is the same every iteration (the centroid
+    * table rides by reference). The centroid table (k x dim doubles) is
+    * driver-side by design — same tiny-table contract as `assignCells`.
+    * Returns (final centroids, assignments against them; the assignments
+    * frame is cached on first use). */
   def detKMeans(items: DataFrame, k: Int, iters: Int = 3,
                 embCol: String = "embedding")
       : (Seq[(Int, Array[Double])], DataFrame) = {
     require(k >= 1 && iters >= 1, s"need k >= 1, iters >= 1; got k=$k iters=$iters")
-    detKmFits.fit(items, s"detkm|$k|$iters|$embCol")(buildDetKMeans(items, k, iters, embCol))
+    detKmFits.fit(items, detKmKey(k, iters, embCol)) {
+      val nv = withNv(items, embCol).select(col("vec_id"), col("__nv")).cache()
+      try detKmFit(items, nv, k, iters, embCol) finally nv.unpersist()
+    }
   }
 
-  private def buildDetKMeans(items: DataFrame, k: Int, iters: Int,
-                             embCol: String): (Seq[(Int, Array[Double])], DataFrame) = {
-    val nv = withNv(items, embCol).select(col("vec_id"), col("__nv")).cache()
+  private def detKmKey(k: Int, iters: Int, embCol: String) = s"detkm|$k|$iters|$embCol"
+
+  /** The [[detKMeans]] memo value: Lloyd over the prepared (vec_id, __nv)
+    * frame `nv` of `items`, and the assignments of `items` against the
+    * fitted centroids (computed and cached on first use). */
+  private def detKmFit(items: DataFrame, nv: DataFrame, k: Int, iters: Int,
+                       embCol: String): (Seq[(Int, Array[Double])], DataFrame) = {
+    val cents = lloydCells(nv, k, iters)
+    (cents, PlanCache.memo(assignNv(withNv(items, embCol), cents).select("vec_id", "cell")))
+  }
+
+  private def lloydCells(nv: DataFrame, k: Int,
+                         iters: Int): Seq[(Int, Array[Double])] = {
     var cents: Seq[(Int, Array[Double])] = nv.orderBy("vec_id").limit(k)
       .select("__nv").collect()
       .map(_.getSeq[Double](0).toArray).zipWithIndex
       .map { case (c, i) => (i, c) }.toSeq
     require(cents.size == k, s"corpus has fewer than k=$k vectors")
+    val dim = cents.head._2.length
     for (_ <- 1 to iters) {
-      val sums = assignNv(nv, cents)
-        .select(col("cell"), posexplode(col("__nv")).as(Seq("dim", "x")))
-        .withColumn("fx", expr(s"CAST(floor(x * $DetKmFx + 0.5) AS BIGINT)"))
-        .groupBy("cell", "dim")
-        .agg(sum("fx").as("sfx"), count(lit(1)).as("n"))
-        .collect()
-      val byCell = sums.groupBy(_.getInt(0))
+      val assigned = nv.select(col("__nv"),
+        array(nearest_cell(col("__nv"), VecTables.cells(cents))))
+      val sums = assigned.queryExecution.toRdd
+        .aggregate(new Array[Long](k * (dim + 1)))(
+          (buf, r) => lloydFold(buf, if (r.isNullAt(0)) null else r.getArray(0),
+            r.getArray(1), k, dim),
+          addLongs)
       cents = cents.map { case (cell, old) =>
-        byCell.get(cell) match {
-          case Some(rows) =>
-            val arr = new Array[Double](old.length)
-            rows.foreach { r =>
-              arr(r.getInt(1)) =
-                (r.getLong(2).toDouble / r.getLong(3).toDouble) / DetKmFx
-            }
-            (cell, arr)
-          case None => (cell, old)
-        }
+        (cell, lloydMean(sums, 0, cell, k, dim).getOrElse(old))
       }
     }
-    val assigned = PlanCache.memo(assignNv(nv, cents).select("vec_id", "cell"))
-    assigned.count() // materialize so the normalized input can be released
-    nv.unpersist()
-    (cents, assigned)
+    cents
+  }
+
+  /** Fold one vector into a flat buffer of fixed-point Lloyd sums over
+    * `codes.size` tables of `k` cells, each `width` dims wide: cell
+    * `(t, c)` holds `[n, sum_0, ..., sum_{width-1}]` at offset
+    * `(t * k + c) * (width + 1)`. Code `t` names the cell the slice
+    * `nv[t * width, (t + 1) * width)` joins; the row counts once there
+    * and each non-null coordinate `x` adds `floor(x * 2^20 + 0.5)`. A
+    * null vector adds nothing. This is the fold the (cell, dim) groupBy
+    * of a posexploded vector computed (`sum` skips a null `x`, `count`
+    * does not); integer addition commutes, so no partition split or merge
+    * order can flip a bit of the means. */
+  private def lloydFold(buf: Array[Long], nv: ArrayData, codes: ArrayData,
+                        k: Int, width: Int): Array[Long] = {
+    if (nv != null) {
+      val tables = codes.numElements()
+      require(nv.numElements() >= tables * width,
+        s"a ${nv.numElements()}-dim vector cannot fill $tables slices of $width dims")
+      var t = 0
+      while (t < tables) {
+        val off = (t * k + codes.getInt(t)) * (width + 1)
+        buf(off) += 1L
+        var d = 0
+        while (d < width) {
+          val i = t * width + d
+          if (!nv.isNullAt(i))
+            buf(off + 1 + d) += math.floor(nv.getDouble(i) * DetKmFx + 0.5).toLong
+          d += 1
+        }
+        t += 1
+      }
+    }
+    buf
+  }
+
+  private def addLongs(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+
+  /** The mean `(sum / n) / 2^20` of cell `(t, c)` of a [[lloydFold]]
+    * buffer; None for an empty cell, which keeps its previous centroid. */
+  private def lloydMean(sums: Array[Long], t: Int, c: Int, k: Int,
+                        width: Int): Option[Array[Double]] = {
+    val off = (t * k + c) * (width + 1)
+    val n = sums(off)
+    if (n == 0L) None
+    else Some(Array.tabulate(width)(d => (sums(off + 1 + d).toDouble / n.toDouble) / DetKmFx))
   }
 
   /** Deterministic, persistable IVF index: `detKMeans` cells packaged as
@@ -1254,15 +1369,19 @@ object Similarity {
     * path for oracle checks is `detIvfTopK`. */
   def detIvfIndex(items: DataFrame, nLists: Int = 8, iters: Int = 3): IvfIndex = {
     val (cents, assigned) = detKMeans(items, nLists, iters)
-    val spark = items.sparkSession
-    import spark.implicits._
-    val centroids = cents.sortBy(_._1)
-      .map { case (cell, c) => (cell, c.map(_.toFloat).toSeq) }
-      .toDF("cell", "centroid")
     IvfIndex(
       assigned.join(items.select("vec_id", "embedding"), Seq("vec_id"))
         .select("vec_id", "embedding", "cell"),
-      centroids)
+      centroidTable(items, cents))
+  }
+
+  /** The stored f32 (cell, centroid) table of f64 [[detKMeans]] centroids. */
+  private def centroidTable(items: DataFrame, cents: Seq[(Int, Array[Double])]): DataFrame = {
+    val spark = items.sparkSession
+    import spark.implicits._
+    cents.sortBy(_._1)
+      .map { case (cell, c) => (cell, c.map(_.toFloat).toSeq) }
+      .toDF("cell", "centroid")
   }
 
   /** Fully-deterministic IVF top-k: `detKMeans` cells + the standard
@@ -1509,12 +1628,7 @@ object Similarity {
     def m: Int = codebooks.size
     def save(path: String): Unit = {
       codes.write.mode("overwrite").parquet(s"$path/codes")
-      val spark = codes.sparkSession
-      import spark.implicits._
-      codebooks.zipWithIndex.flatMap { case (cb, s) =>
-        cb.zipWithIndex.map { case (c, cell) => (s, cell, c.toSeq) }
-      }.toDF("sub", "cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+      saveCodebooks(codebooks, codes.sparkSession, path)
     }
   }
 
@@ -1525,7 +1639,7 @@ object Similarity {
     // the dir's content stamp (one listing RPC per load keeps freshness)
     val codebooks = Memo.loads(spark,
         s"pqcb|$path|${Memo.dirStamp(spark, s"$path/codebooks")}") {
-      val rows = spark.read.parquet(s"$path/codebooks").collect()
+      val rows = graft.io.ParquetSchema.read(spark, Seq(s"$path/codebooks")).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       require(rows.nonEmpty, s"empty codebook table at $path/codebooks")
       val m = rows.map(_._1).max + 1
@@ -1576,71 +1690,65 @@ object Similarity {
     * integer-sum means (summation order cannot flip bits), empty cells keep
     * their centroid — so two builds are bit-identical and the whole
     * codebook trajectory reproduces in SQL (the q76 oracle). All `m`
-    * subspaces train in ONE pass per iteration: a single map-only
-    * assignment projection (one `pq_encode` gives all m argmins) + one
-    * (sub, cell, dim)-keyed aggregation whose shuffle is
-    * partitions x m x ksub x dsub partial rows — corpus-size-independent,
-    * same shape as one full-dim detKMeans iteration. */
+    * subspaces train in ONE pass per iteration: one `pq_encode` gives all
+    * m argmins, and one fold adds every sample row into an
+    * m x ksub x (dsub + 1) buffer of longs — on the driver, since the
+    * sample is bounded ([[pqCodebooks]]). */
   def pqIndex(items: DataFrame, m: Int = 16, ksub: Int = 16, iters: Int = 2,
               inDim: Int = 64, embCol: String = "embedding"): PqIndex = {
     require(m >= 1 && inDim % m == 0, s"inDim=$inDim must split into m=$m subspaces")
     require(ksub >= 1 && iters >= 1, s"need ksub >= 1, iters >= 1")
-    pqFits.fit(items, s"pq|$m|$ksub|$iters|$inDim|$embCol")(
-      buildPqIndex(items, m, ksub, iters, inDim / m, embCol))
+    pqFits.fit(items, pqKey(m, ksub, iters, inDim, embCol))(
+      buildPqFromNv(withNv(items, embCol).select(col("vec_id"), col("__nv")),
+        m, ksub, iters, inDim / m))
   }
 
-  private def buildPqIndex(items: DataFrame, m: Int, ksub: Int, iters: Int,
-                           dsub: Int, embCol: String): PqIndex =
-    buildPqFromNv(
-      withNv(items, embCol).select(col("vec_id"), col("__nv")), m, ksub, iters, dsub)
+  private def pqKey(m: Int, ksub: Int, iters: Int, inDim: Int, embCol: String) =
+    s"pq|$m|$ksub|$iters|$inDim|$embCol"
 
   /** The PQ build over a prepared (vec_id, __nv) frame — `__nv` is
     * whatever vector the codebooks should model: the normalized embedding
-    * (plain PQ) or the cell residual (IVFADC). */
-  private def buildPqFromNv(nvIn: DataFrame, m: Int, ksub: Int, iters: Int,
+    * (plain PQ) or the cell residual (IVFADC). The codes of every row are
+    * computed and cached on first use. */
+  private def buildPqFromNv(nv: DataFrame, m: Int, ksub: Int, iters: Int,
                             dsub: Int): PqIndex = {
-    val nv = nvIn.cache()
-    // deterministic hash-ordered training sample (ties impossible: sha256
-    // of distinct ids); the Lloyd loop never touches the full corpus
-    val fit = nv
+    val cbs = pqCodebooks(nv, m, ksub, iters, dsub)
+    PqIndex(PlanCache.memo(nv.select(col("vec_id"), subCodes(cbs).as("codes"))),
+      cbs, dsub)
+  }
+
+  /** Lloyd per subspace over the deterministic hash-ordered training
+    * sample (ties impossible: sha256 of distinct ids). The sample is at
+    * most [[PqFitRows]] rows, so it is collected in one job and every
+    * iteration folds it on the driver ([[lloydFold]] over the
+    * `pq_encode` kernel's own codes): the Lloyd loop never touches the
+    * full corpus, and no iteration costs a job. */
+  private def pqCodebooks(nv: DataFrame, m: Int, ksub: Int, iters: Int,
+                          dsub: Int): Seq[Seq[Array[Double]]] = {
+    val (ids, vecs, _) = vectorRows(nv
       .withColumn("__h", expr("sha2(CAST(vec_id AS STRING), 256)"))
       .orderBy(col("__h"), col("vec_id")).limit(PqFitRows)
-      .select(col("vec_id"), col("__nv")).cache()
-    val initRows = fit.orderBy("vec_id").limit(ksub).select("__nv").collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(initRows.length == ksub, s"corpus has fewer than ksub=$ksub vectors")
+      .select(col("vec_id"), col("__nv")))
+    val init = vecs.indices.sortBy(ids(_)).take(ksub).map { i =>
+      val v = vecs(i)
+      Array.tabulate(v.numElements())(d => if (v.isNullAt(d)) 0.0 else v.getDouble(d))
+    }
+    require(init.length == ksub, s"corpus has fewer than ksub=$ksub vectors")
     var cbs: Seq[Seq[Array[Double]]] = (0 until m).map { s =>
-      initRows.map(r => r.slice(s * dsub, (s + 1) * dsub)).toSeq
+      init.map(r => r.slice(s * dsub, (s + 1) * dsub))
     }
     for (_ <- 1 to iters) {
-      val sums = fit
-        .select(col("__nv"), posexplode(subCodes(cbs)).as(Seq("sub", "cell")))
-        .select(col("sub"), col("cell"),
-          posexplode(slice(col("__nv"), col("sub") * dsub + 1, lit(dsub)))
-            .as(Seq("dim", "x")))
-        .withColumn("fx", expr(s"CAST(floor(x * $DetKmFx + 0.5) AS BIGINT)"))
-        .groupBy("sub", "cell", "dim")
-        .agg(sum("fx").as("sfx"), count(lit(1)).as("n"))
-        .collect()
-      val byKey = sums.map(r =>
-        ((r.getInt(0), r.getInt(1), r.getInt(2)), (r.getLong(3), r.getLong(4)))).toMap
+      val books = VecTables.books(cbs)
+      val sums = vecs.foldLeft(new Array[Long](m * ksub * (dsub + 1))) { (buf, v) =>
+        lloydFold(buf, v, if (v == null) null else VectorQuant.pqEncode(v, books), ksub, dsub)
+      }
       cbs = cbs.zipWithIndex.map { case (cb, s) =>
         cb.zipWithIndex.map { case (old, cell) =>
-          if (byKey.contains((s, cell, 0)))
-            Array.tabulate(dsub) { d =>
-              val (sfx, n) = byKey((s, cell, d))
-              (sfx.toDouble / n.toDouble) / DetKmFx
-            }
-          else old // empty cell keeps its previous centroid
+          lloydMean(sums, s, cell, ksub, dsub).getOrElse(old)
         }
       }
     }
-    fit.unpersist()
-    // the ONE full-corpus pass: encode everything against the fitted books
-    val codes = PlanCache.memo(nv.select(col("vec_id"), subCodes(cbs).as("codes")))
-    codes.count() // materialize so the normalized input can be released
-    nv.unpersist()
-    PqIndex(codes, cbs, dsub)
+    cbs
   }
 
   /** Per-query ADC lookup tables for a PQ index: `lt(sub)(cell)` = dot of
@@ -1810,33 +1918,40 @@ object Similarity {
     * equality). */
   def upsertPq(index: PqIndex, delta: DataFrame,
                embCol: String = "embedding"): PqIndex = {
-    val newCodes = withNv(delta, embCol)
-      .select(col("vec_id"), subCodes(index.codebooks).as("codes"))
+    val newCodes = encodeDelta(delta, embCol, index.codebooks).select("vec_id", "codes")
     PqIndex(
       newCodes.unionByName(
         index.codes.join(delta.select("vec_id"), Seq("vec_id"), "left_anti")),
       index.codebooks, index.dsub)
   }
 
-  /** Persist a PQ index in the IVFADC layout: the codes table carries
-    * each vector's COARSE CELL (taken from the paired coarse assignments
-    * — the one source of truth for cell membership, so codes.cell and
+  /** A delta encoded against frozen codebooks: its columns plus `__nv`
+    * and `codes` — the one delta encoding every PQ upsert shares. */
+  private def encodeDelta(delta: DataFrame, embCol: String,
+                          cbs: Seq[Seq[Array[Double]]]): DataFrame =
+    withNv(delta, embCol).withColumn("codes", subCodes(cbs))
+
+  /** Persist a PQ index in the IVFADC layout: `pq.codes` carries each
+    * vector's COARSE CELL (the cell its coarse assignment row has — the
+    * one source of truth for cell membership, so codes.cell and
     * assignments.cell can never disagree) and is `partitionBy("cell")`,
     * which is what makes the serving scan partition-prunable: a probe
     * reads only the nProbe probed cells' code files instead of the whole
     * table (`ivfPqProbe`), and deletes inherit `deleteIvfAt`'s
     * partition-pruned rewrite. The tiny codebooks land beside them as
     * before. */
-  def savePqCellPartitioned(pq: PqIndex, assignments: DataFrame,
+  def savePqCellPartitioned(pq: PqIndex, path: String): Unit = {
+    require(pq.codes.columns.contains("cell"),
+      "a cell-partitioned codes table needs each vector's coarse cell")
+    CellStore.write(pq.codes.select("vec_id", "codes", "cell"), s"$path/codes")
+    saveCodebooks(pq.codebooks, pq.codes.sparkSession, path)
+  }
+
+  private def saveCodebooks(cbs: Seq[Seq[Array[Double]]],
+                            spark: org.apache.spark.sql.SparkSession,
                             path: String): Unit = {
-    CellStore.write(
-      pq.codes
-        .hint("SHUFFLE_HASH")
-        .join(assignments.select("vec_id", "cell"), Seq("vec_id")),
-      s"$path/codes")
-    val spark = pq.codes.sparkSession
     import spark.implicits._
-    pq.codebooks.zipWithIndex.flatMap { case (cb, s) =>
+    cbs.zipWithIndex.flatMap { case (cb, s) =>
       cb.zipWithIndex.map { case (c, cell) => (s, cell, c.toSeq) }
     }.toDF("sub", "cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
@@ -1859,8 +1974,7 @@ object Similarity {
       .join(broadcast(delta.select("vec_id")), Seq("vec_id"))
     // delta-sized × delta-sized equi-join: SHUFFLE_HASH, not broadcast —
     // an upsert wave can be any size, only its ids ride broadcasts
-    val newCodes = withNv(delta, embCol)
-      .select(col("vec_id"), subCodes(pq.codebooks).as("codes"))
+    val newCodes = encodeDelta(delta, embCol, pq.codebooks).select("vec_id", "codes")
       .hint("SHUFFLE_HASH").join(deltaCells, Seq("vec_id"))
     upsertCellTable(spark, s"$path/codes", pq.codes,
       newCodes.select("vec_id", "codes", "cell"),
@@ -1976,11 +2090,8 @@ object Similarity {
                      ksub: Int = 16, pqIters: Int = 2): Unit = {
     val cur = resolveIndexDir(spark, root)
     GenDir.rewrite(spark, root) { next =>
-      val stored = CellStore.read(spark, s"$cur/coarse/assignments")
-        .select("vec_id", "embedding")
-      detIvfIndex(stored, nLists, kmIters).save(s"$next/coarse")
-      savePqCellPartitioned(pqIndex(stored, m, ksub, pqIters),
-        CellStore.read(spark, s"$next/coarse/assignments"), s"$next/pq")
+      writeIvfPq(CellStore.read(spark, s"$cur/coarse/assignments")
+        .select("vec_id", "embedding"), next, IvfPq(nLists, kmIters, m, ksub, pqIters))
     }
     pruneGens(spark, root)
   }

@@ -16,6 +16,11 @@ class SimilaritySpec extends AnyFunSuite {
     .filter($"vec_id" < 5)
     .select($"vec_id".as("query_id"), $"embedding".as("query_embedding")).cache()
 
+  /** `pq` with each code row's coarse cell, the codes table
+    * `savePqCellPartitioned` writes. */
+  def withCells(pq: Similarity.PqIndex, assignments: org.apache.spark.sql.DataFrame): Similarity.PqIndex =
+    pq.copy(codes = pq.codes.join(assignments.select("vec_id", "cell"), Seq("vec_id")))
+
   /** (name, mtime) of one cell's SERVING files under the versioned cell
     * store — the manifest-pinned version dir, not a raw listing (which
     * would also see the retained previous version). */
@@ -787,7 +792,7 @@ class SimilaritySpec extends AnyFunSuite {
     val pqDir = java.nio.file.Files.createTempDirectory("graft_pqdel").toString + "/idx"
     val coarseForPq = Similarity.detIvfIndex(emb, 8)
     Similarity.savePqCellPartitioned(
-      Similarity.pqIndex(emb), coarseForPq.assignments, pqDir)
+      withCells(Similarity.pqIndex(emb), coarseForPq.assignments), pqDir)
     val bookStamp = new java.io.File(s"$pqDir/codebooks").listFiles()
       .map(f => (f.getName, f.lastModified)).toSet
     val delCells = coarseForPq.assignments
@@ -1048,9 +1053,9 @@ class SimilaritySpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_pqcup").toString + "/idx"
     val w0 = emb.filter($"vec_id" % 2 === 0)
     Similarity.detIvfIndex(w0, 8).save(s"$dir/coarse")
-    Similarity.savePqCellPartitioned(Similarity.pqIndex(w0),
+    Similarity.savePqCellPartitioned(withCells(Similarity.pqIndex(w0),
       graft.operators.CellStore
-        .read(spark, s"$dir/coarse/assignments"), s"$dir/pq")
+        .read(spark, s"$dir/coarse/assignments")), s"$dir/pq")
     // a tiny 2-id delta; its cells come from the coarse assignment rule
     val delta = emb.filter($"vec_id".isin(1L, 3L))
     Similarity.upsertIvfAt(spark, s"$dir/coarse", delta)
@@ -1093,9 +1098,9 @@ class SimilaritySpec extends AnyFunSuite {
     val w0 = emb.filter($"vec_id" % 2 === 0)
     val w1 = emb.filter($"vec_id" % 2 === 1)
     Similarity.detIvfIndex(w0, 8).save(s"$dir/coarse")
-    Similarity.savePqCellPartitioned(Similarity.pqIndex(w0),
+    Similarity.savePqCellPartitioned(withCells(Similarity.pqIndex(w0),
       graft.operators.CellStore
-        .read(spark, s"$dir/coarse/assignments"), s"$dir/pq")
+        .read(spark, s"$dir/coarse/assignments")), s"$dir/pq")
     Similarity.upsertIvfAt(spark, s"$dir/coarse", w1)
     Similarity.upsertCellPqAt(spark, s"$dir/pq",
       graft.operators.CellStore

@@ -206,18 +206,28 @@ class StreamingSpec extends AnyFunSuite {
     // regenerated source: same path, new bytes -> new (len, mtime) stamp ->
     // a DIFFERENT cache dir is built, so the old state cannot be served
     val tmp = Files.createTempDirectory("graft-stamp-regen").toString
-    def regen(n: Int): Unit = docs.limit(n).coalesce(1)
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    regen(8)
-    def build() = Streams.ensureStreamedDocState(
-      spark, spark.read.parquet(s"$tmp/documents.parquet"), tmp, "stampregen")(
-      (sd, out, ckpt) => Streams.streamingLexIndex(sd, out, ckpt))
-    val first = build()
-    Thread.sleep(1100) // coarsest-filesystem mtime granularity is 1 s
-    regen(6)
-    val second = build()
-    assert(first != second,
-      "regenerated source served the stale cached state dir")
+    // the temp source and both state bases (each beside its build lock)
+    // are this test's own: deleted however it ends
+    val built = scala.collection.mutable.ArrayBuffer(tmp)
+    try {
+      def regen(n: Int): Unit = docs.limit(n).coalesce(1)
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      regen(8)
+      def build() = {
+        val state = Streams.ensureStreamedDocState(
+          spark, spark.read.parquet(s"$tmp/documents.parquet"), tmp, "stampregen")(
+          (sd, out, ckpt) => Streams.streamingLexIndex(sd, out, ckpt))
+        val base = state.stripSuffix("/state")
+        built ++= Seq(base, s"$base.lock")
+        state
+      }
+      val first = build()
+      Thread.sleep(1100) // coarsest-filesystem mtime granularity is 1 s
+      regen(6)
+      val second = build()
+      assert(first != second,
+        "regenerated source served the stale cached state dir")
+    } finally built.foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
   }
 
   test("ensureLexDeletedState: a lost marker beside a planted partial generation rebuilds to the clean state") {

@@ -281,8 +281,10 @@ class VectorQuantSpec extends AnyFunSuite {
       }
       out.result()
     }
-    Similarity.savePqCellPartitioned(Similarity.PqIndex(refCodes, cbs, dsub), assignments, s"$root/ref")
-    Similarity.savePqCellPartitioned(Similarity.PqIndex(newCodes, cbs, dsub), assignments, s"$root/new")
+    def save(codes: DataFrame, dir: String): Unit = Similarity.savePqCellPartitioned(
+      Similarity.PqIndex(codes.join(assignments, Seq("vec_id")), cbs, dsub), s"$root/$dir")
+    save(refCodes, "ref")
+    save(newCodes, "new")
     val (ref, got) = (footers(s"$root/ref/codes"), footers(s"$root/new/codes"))
     assert(ref.size == 1 && got == ref, s"\nreference: $ref\nkernel: $got")
     assert(ref.head.contains("\"containsNull\":true"))
