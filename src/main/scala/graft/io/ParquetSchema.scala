@@ -2,51 +2,86 @@ package graft.io
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Reads of parquet dirs this engine wrote, without schema inference's
-  * job. `spark.read.parquet` infers a schema by running a one-task Spark
-  * job that reads one data file's footer (even for a single file); a
-  * store that is written and read back in one build pays that job per
-  * table. The footer of a file Spark wrote carries the schema it was
-  * written with (the `org.apache.spark.sql.parquet.row.metadata` key),
-  * which is exactly what inference returns for it, so it is read here on
-  * the driver instead. A dir without such a file reads through plain
-  * inference. */
+/** Reads of parquet trees this engine wrote, with no Spark job before the
+  * scan. `spark.read.parquet` pays two: schema inference runs a one-task
+  * job that reads one data file's footer (even for a single file), and
+  * partition discovery lists any dir with more than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) children
+  * in a job of its own — every epoch dir of the lex state holds 65
+  * bucket dirs. Here the leaves are listed on the driver and handed to
+  * the file index through a pre-filled status cache, and the data schema
+  * comes from a footer: the footer of a file Spark wrote carries the
+  * schema it was written with (the `org.apache.spark.sql.parquet.row
+  * .metadata` key), which is exactly what inference returns for it.
+  * Partition columns are inferred from the dir names as before. A tree
+  * without such a file reads through plain `spark.read.parquet`. */
 private[graft] object ParquetSchema {
 
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  /** The Spark schema in the footer of the first data file directly under
-    * `dir`, if there is one. */
-  private def of(spark: SparkSession, dir: String): Option[StructType] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    Try(fs.listStatus(p)).toOption.toSeq.flatten
-      .filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet")
-      }
-      .sortBy(_.getPath.getName).headOption
-      .flatMap { s =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
-        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
-        finally reader.close()
-      }
+  /** Names partition discovery skips (Spark's rule for hidden and
+    * in-progress paths: `_SUCCESS`, `_temporary`, `.crc` sidecars, ...). */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** Every visible file under `dir`, recursively; `None` when `dir` cannot
+    * be listed. */
+  private def leaves(fs: FileSystem, dir: Path): Option[Seq[FileStatus]] = {
+    def walk(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(s => hidden(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
+    Try(walk(dir)).toOption
+  }
+
+  /** The Spark schema in the footer of `file`, if it carries one. */
+  private def footerSchema(conf: Configuration, file: FileStatus): Option[StructType] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    Option(try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+      finally reader.close())
       .flatMap(json => Try(DataType.fromJson(json)).toOption)
       .collect { case st: StructType => st }
   }
 
   /** `spark.read.parquet(paths)` (partition discovery under `basePath`,
-    * when given), with the data schema taken from the first path's footer. */
+    * when given), with the leaves listed on the driver and the data
+    * schema taken from the first data file's footer. */
   def read(spark: SparkSession, paths: Seq[String],
            basePath: Option[String] = None): DataFrame = {
-    val reader = basePath.foldLeft(spark.read)(_.option("basePath", _))
-    of(spark, paths.head).fold(reader)(reader.schema).parquet(paths: _*)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val roots = paths.map { p =>
+      val path = new Path(p)
+      path.getFileSystem(conf).makeQualified(path)
+    }
+    val listed = roots.flatMap(r => leaves(r.getFileSystem(conf), r).map(r -> _)).toMap
+    // a root that cannot be listed reads through Spark, which reports it
+    val schema =
+      if (listed.size < roots.size) None
+      else listed.values.flatten.filter(_.getPath.getName.endsWith(".parquet"))
+        .toSeq.sortBy(_.getPath.toString).headOption.flatMap(footerSchema(conf, _))
+    schema match {
+      case None =>
+        basePath.foldLeft(spark.read)(_.option("basePath", _)).parquet(paths: _*)
+      case Some(dataSchema) =>
+        val cache = new FileStatusCache {
+          override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+            listed.get(path).map(_.toArray)
+          override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+          override def invalidateAll(): Unit = ()
+        }
+        val options = basePath.map("basePath" -> _).toMap
+        val index = new InMemoryFileIndex(spark, roots, options, None, cache)
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+          GraftSqlBridge.asNullable(dataSchema), None, new ParquetFileFormat, options)(spark))
+    }
   }
 }

@@ -240,23 +240,25 @@ object Streams {
       val landing = new org.apache.hadoop.fs.Path(base, "landing")
       fs.mkdirs(landing)
       val schema = table.schema
+      // every wave staged by ONE job: one task (coalesce(1)) writes one file
+      // per wave dir, each wave's rows in scan order (the writer's sort by
+      // wave is stable). The wave number is a column, not a literal per
+      // wave, so there is one landing plan to compile.
+      val staging = new org.apache.hadoop.fs.Path(base, "__waves")
+      table.withColumn("__w", pmod(col(idCol), lit(waves))).coalesce(1)
+        .write.mode("overwrite").partitionBy("__w").parquet(staging.toString)
       (0 until waves).foreach { w =>
-        // ONE file per wave (coalesce(1)), staged and renamed to a
-        // deterministic landing name: the file source's checkpoint
-        // tracks committed paths, so one path per wave means a committed
-        // path == a complete wave (partials are order-insensitive per-row
-        // projections/aggregates, so row order inside the file does not
-        // matter)
-        val staging = new org.apache.hadoop.fs.Path(base, s"__w$w")
-        table.filter(pmod(col(idCol), lit(waves)) === w)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(staging.toString)
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(staging, "part-*")))
+        // each wave's file renamed to a deterministic landing name right
+        // before its run: the file source's checkpoint tracks committed
+        // paths, so one path per wave means a committed path == a complete
+        // wave (partials are order-insensitive per-row
+        // projections/aggregates). A wave with no rows lands no file, and
+        // its run writes no epoch.
+        Option(fs.globStatus(new org.apache.hadoop.fs.Path(staging, s"__w=$w/part-*")))
           .toSeq.flatten.zipWithIndex.foreach { case (st, i) =>
             val dst = new org.apache.hadoop.fs.Path(landing, s"w$w-$i.parquet")
             require(fs.rename(st.getPath, dst), s"wave rename failed: $dst")
           }
-        fs.delete(staging, true)
         awaitBounded(start(
           spark.readStream.schema(schema).parquet(landing.toString),
           out, s"$base/ckpt"))
@@ -265,6 +267,7 @@ object Streams {
         // run), which is exactly compactEpochs' contract
         if (w + 1 == compactAfterWave) compactor(spark, out)
       }
+      fs.delete(staging, true)
       finish(spark, out)
     }
     s"$base/state"
@@ -299,15 +302,15 @@ object Streams {
   // Every maintainer below (CMS grid, DDSketch buckets, KMV sketch, the lex
   // index, ... and the compaction path they share) rides the same
   // mergeable-partials contract: each micro-batch reduces to a BOUNDED
-  // partial (additive counts or a k-bounded sketch) written under `epoch=<n>`
-  // with dynamic partition overwrite — a RETRIED epoch rewrites exactly its
-  // own partition, so per-batch delivery is idempotent (replace-by-partition,
-  // the `Engine.writeIndex` contract), unlike a read-merge-rewrite of a
-  // running total, which double-counts on retry. The matching `...At` reader
-  // folds the partials (sum / one more GroupedTopK) without ever touching raw
-  // history. The scaffold lives in exactly one place so a new maintainer
-  // cannot diverge from the contract (the retry test in StreamingSpec pins
-  // it).
+  // partial (additive counts or a k-bounded sketch) written as its own
+  // `epoch=<n>` dir by path ([[writeEpoch]]) — a RETRIED epoch rewrites
+  // exactly its own dir, so per-batch delivery is idempotent
+  // (replace-by-partition, the `Engine.writeIndex` contract), unlike a
+  // read-merge-rewrite of a running total, which double-counts on retry.
+  // The matching `...At` reader folds the partials (sum / one more
+  // GroupedTopK) without ever touching raw history. The scaffold lives in
+  // exactly one place so a new maintainer cannot diverge from the contract
+  // (the retry test in StreamingSpec pins it).
   // ------------------------------------------------------------------
 
   /** The scaffold: per-batch `partial` → idempotent `epoch=<n>` partition
@@ -318,6 +321,13 @@ object Streams {
     * index adds its `pbk` token bucket so term reads prune at the FILE
     * level.
     *
+    * `partial` runs in the session that started the stream, over the
+    * batch's analyzed plan: a stream runs each micro-batch in a cloned
+    * session whose tasks get a class loader of their own, and Spark keys
+    * its codegen cache by class loader, so every wave would compile every
+    * class of the same plan again. The epoch travels in the write path,
+    * not as a literal column, so every wave's plan is the same code.
+    *
     * A state that has never been rewritten lives directly under `path`
     * (epoch dirs at the root); the first [[swapEpochState]] converts it
     * to `gen=N/` + `_GEN` pointer serving ([[graft.operators.GenDir]]),
@@ -327,21 +337,39 @@ object Streams {
   private def epochPartials(input: DataFrame, path: String,
                             checkpointDir: String,
                             partCols: Seq[String] = Seq("epoch"))
-                           (partial: DataFrame => DataFrame): StreamingQuery =
+                           (partial: DataFrame => DataFrame): StreamingQuery = {
+    val spark = input.sparkSession
     input.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        epoch: Long) =>
-        if (!batch.isEmpty)
-          partial(batch.toDF())
-            .withColumn("epoch", lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partCols: _*)
-            .parquet(resolveStateDir(batch.sparkSession, path))
+        val b = org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+          org.apache.spark.sql.GraftSqlBridge.logicalPlan(batch))
+        if (!b.isEmpty)
+          writeEpoch(partial(b), resolveStateDir(spark, path), epoch, partCols)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
+  }
+
+  /** The one epoch write: `df` replaces the dir `<dir>/epoch=<epoch>`
+    * (partitioned below it by the rest of `partCols`), so a retried epoch
+    * rewrites exactly its own dir and the `epoch` values on disk are the
+    * dir names. */
+  private def writeEpoch(df: DataFrame, dir: String, epoch: Long,
+                         partCols: Seq[String] = Seq("epoch")): Unit =
+    df.write.mode("overwrite").partitionBy(partCols.filterNot(_ == "epoch"): _*)
+      .parquet(s"$dir/epoch=$epoch")
+
+  /** The epochs directly under `dir`, from its `epoch=<n>` dir names
+    * (none when `dir` is absent). */
+  private def epochsIn(spark: SparkSession, dir: String): Seq[Long] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("epoch=")).map(_.stripPrefix("epoch=").toLong).sorted
+  }
 
   /** The directory the maintained state at `path` currently serves from:
     * the `_GEN` generation when the state has been rewritten at least
@@ -374,24 +402,19 @@ object Streams {
     * subreads. */
   private def readStateDir(spark: SparkSession, path: String, dir: String,
                            stamp: String): DataFrame =
-    // listing/footer-inference work memoized per state snapshot
-    // (Memo.loads): the stamp covers the epoch dirs and their mtimes, so a
-    // new wave, a compaction or a generation rewrite reads fresh, while
-    // the 50+ maintained-state readers stop re-listing and re-inferring
-    // an unchanged state on every invocation. The frame stays a lazy
-    // plan — every execution re-reads the parquet files.
+    // the driver listing and footer read (graft.io.ParquetSchema: no
+    // listing job however many bucket dirs an epoch holds, no inference
+    // job) memoized per state snapshot (Memo.loads): the stamp covers the
+    // epoch dirs and their mtimes, so a new wave, a compaction or a
+    // generation rewrite reads fresh, while the 50+ maintained-state
+    // readers stop re-listing an unchanged state on every invocation. The
+    // frame stays a lazy plan — every execution re-reads the parquet files.
     graft.operators.Memo.loads(spark, s"state|$path|$dir|$stamp") {
-      if (dir != path) spark.read.parquet(dir)
-      else {
-        val rootP = new org.apache.hadoop.fs.Path(path)
-        val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val epochDirs =
-          if (!fs.exists(rootP)) Nil
-          else fs.listStatus(rootP).toSeq.map(_.getPath.getName)
-            .filter(_.startsWith("epoch=")).sorted.map(e => s"$path/$e")
-        if (epochDirs.nonEmpty)
-          spark.read.option("basePath", path).parquet(epochDirs: _*)
-        else spark.read.parquet(path)
+      val ps = graft.io.ParquetSchema
+      if (dir != path) ps.read(spark, Seq(dir))
+      else epochsIn(spark, path) match {
+        case Nil => ps.read(spark, Seq(path))
+        case es => ps.read(spark, es.map(e => s"$path/epoch=$e"), Some(path))
       }
     }
 
@@ -813,10 +836,7 @@ object Streams {
                 .as("n_novel"))
             .select(col("doc_id"), col("n_shingles"), col("n_novel"),
               expr("round(CAST(n_novel AS DOUBLE) / n_shingles, 6)").as("novelty"))
-          nov.withColumn("epoch", lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch").parquet(outPath)
+          writeEpoch(nov, outPath, epoch)
           // full new state = untouched rows + merged touched rows
           val untouched = prior
             .join(bFirst.select("shingle").hint("SHUFFLE_HASH"),
@@ -884,10 +904,7 @@ object Streams {
               sha2(array_join(expr(
                 "transform(sort_array(collect_list(CASE WHEN kept THEN struct(idx, blk) END)), s -> s.blk)"),
                 " "), 256).as("clean_sha"))
-          out.withColumn("epoch", lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch").parquet(outPath)
+          writeEpoch(out, outPath, epoch)
           val untouched = prior
             .join(bFirst.select("blk").hint("SHUFFLE_HASH"), Seq("blk"), "left_anti")
           replaceState(spark, statePath, untouched.unionByName(mergedBatch))
@@ -1065,9 +1082,11 @@ object Streams {
     * produced. Three row kinds in one frame:
     *
     *   - `kind='p'` postings (token, doc_id, tf) CARRYING the doc's
-    *     length `dl` (batch-local join — each micro-batch joins only its
-    *     own docs), so the BM25 serving path never joins the corpus-sized
-    *     doc-length table ([[graft.operators.TextAnalysis.bm25CarriedDl]]);
+    *     length `dl`, so the BM25 serving path never joins the
+    *     corpus-sized doc-length table ([[graft.operators.TextAnalysis
+    *     .bm25CarriedDl]]). One tokenization gives both: the tokens are
+    *     exploded and counted per (token, doc_id, dl) with dl = the token
+    *     array's size — one exchange, no join;
     *   - `kind='d'` doc-length rows (pbk=-1) — the doc-keyed ground truth
     *     the all-docs readers (TF-IDF's zero-hit frame) and takedown
     *     audits need, and what stats recompute from on a purge;
@@ -1079,18 +1098,26 @@ object Streams {
     *     scorer's `count(*)`/`avg(dl)`. */
   private def lexPartial(b: DataFrame): DataFrame = {
     val ta = graft.operators.TextAnalysis
-    val dls = ta.docLengths(b).select(col("doc_id"), col("dl").cast("long").as("dl"))
-    val p = ta.postings(b)
-      .withColumn("pbk", expr(ta.tokenBucketExpr("token")))
-      .join(dls.hint("SHUFFLE_HASH"), Seq("doc_id"))
-      .select(lit("p").as("kind"), col("token"), col("doc_id"),
-        col("tf"), col("pbk"), col("dl"))
-    val d = dls
+    val p = b.select(col("doc_id"), expr(ta.tokensExpr).as("toks"))
+      .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
+        explode(col("toks")).as("token"))
+      .groupBy("token", "doc_id", "dl").agg(count(lit(1)).as("tf"))
+      .select(lit("p").as("kind"), col("token"), col("doc_id"), col("tf"),
+        expr(ta.tokenBucketExpr("token")).as("pbk"), col("dl"))
+    val d = ta.docLengths(b)
       .select(lit("d").as("kind"), lit(null).cast("string").as("token"),
         col("doc_id"), lit(null).cast("long").as("tf"),
-        lit(-1L).as("pbk"), col("dl"))
-    p.unionByName(d).unionByName(lexStatsRows(d))
+        lit(-1L).as("pbk"), col("dl").cast("long").as("dl"))
+    p.unionByName(d).unionByName(lexStatsRows(d)).sortWithinPartitions(LexFileOrder: _*)
   }
+
+  /** The row order inside every lex state file: the write's own sort by
+    * bucket, extended by token and doc. A bucket file then holds each
+    * token's postings together, which parquet's dictionary and run-length
+    * encodings store about 2% smaller than hash-aggregate order (the
+    * serve benchmark's 500-doc state), and the write needs no sort of its
+    * own. */
+  private val LexFileOrder = Seq(col("pbk"), col("token"), col("doc_id"))
 
   /** Recompute the `kind='s'` corpus-stat partials from doc-length rows,
     * one per epoch present (epochless input — a fresh partial — yields
@@ -1195,9 +1222,10 @@ object Streams {
     * epoch-tree swap as a delete — SKIPPED entirely when none exist (the
     * pure-append fast path: a readmit after a takedown, or genuinely new
     * docs, costs ONE new epoch partition and never rewrites the state) —
-    * then the docs' partial rows land as a fresh epoch (max existing + 1,
-    * so a retry of a crashed append overwrites its own partition via the
-    * dynamic mode rather than double-counting). Because the state keeps
+    * then the docs' partial rows land as a fresh epoch dir (max existing
+    * epoch + 1, through the stream's own [[writeEpoch]]; a retry after a
+    * crashed append finds the docs' rows and purges them first, so it
+    * never double-counts). Because the state keeps
     * raw doc-keyed rows and derives df/N/avgdl at read time, delete +
     * readmit of the same docs is an IDENTITY on every reader — the
     * contract q302/q303 hash-check against the never-deleted oracles. */
@@ -1217,20 +1245,11 @@ object Streams {
       // own fresh partial
       kept.unionByName(lexStatsRows(kept))
     }
-    // cast: partition-column inference may type epoch as INT (small
-    // values), and a compacted state's only partition is epoch=-1.
-    // coalesce: max(epoch) is NULL on an empty state (unreachable through
-    // the maintained lifecycles — deleteLexDocsAt refuses to empty a
-    // state — but a direct caller would otherwise die on a confusing NPE
-    // here)
+    // the next epoch from the serving dir's epoch dir names (a compacted
+    // state's only epoch is -1, an empty one has none: both append at 0)
     val dir = resolveStateDir(spark, path)
-    val next = math.max(0L, epochsAt(spark, path)
-      .agg(coalesce(max(col("epoch").cast("long")), lit(-1L)))
-      .head().getLong(0) + 1L)
-    lexPartial(docs).withColumn("epoch", lit(next))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(LexPartCols: _*).parquet(dir)
+    writeEpoch(lexPartial(docs), dir, (epochsIn(spark, dir) :+ -1L).max + 1L,
+      LexPartCols)
   }
 
   /** The lex state's READMIT lifecycle (q302/q303's lexical leg): the
@@ -1383,32 +1402,31 @@ object Streams {
       .orderBy(desc("n_occurrences"), asc("token")).limit(k)
 
   /** Compaction for the lex-index epochs — same contract. The fold
-    * re-groups postings (idempotent under exactly-once epochs; convergent
-    * if a violated append-only contract ever left split rows). */
+    * re-groups every row by (kind, token, doc_id, pbk): postings sum tf
+    * and keep their doc's length, the stat partials sum both counts, and
+    * a doc-length row — one per doc under the append-only contract —
+    * comes out as it went in (idempotent under exactly-once epochs;
+    * convergent if a violated contract ever left split postings).
+    *
+    * The state is repartitioned by bucket FIRST: pbk is one of the
+    * fold's keys, so the grouping needs no exchange of its own — one
+    * shuffle in all — and every bucket value sits in one task → ONE file
+    * per (epoch=-1, pbk) dir: the defragmentation half of the compaction
+    * contract (the IVF compactor's repartition(cell) rule). Without it the
+    * fold's tasks would scatter every bucket across up to
+    * shuffle.partitions files — GROWING the per-bucket open cost the
+    * compaction exists to reset (lexBucketStatsAt's n_files is the monitor
+    * that catches it). Parallelism = |buckets|, the layout's own
+    * granularity; spark.sql.files.maxRecordsPerFile bounds single-file
+    * size if a bucket outgrows one file. */
   def compactLexIndexAt(spark: SparkSession, indexPath: String): Unit =
-    compactEpochs(spark, indexPath, LexPartCols) { st =>
-      val p = st.filter(col("kind") === "p")
+    compactEpochs(spark, indexPath, LexPartCols)(
+      _.repartition(col("pbk"))
         .groupBy("kind", "token", "doc_id", "pbk")
-        .agg(sum("tf").as("tf"), max("dl").as("dl"))
+        .agg(sum("tf").as("tf"),
+          when(col("kind") === "s", sum("dl")).otherwise(max("dl")).as("dl"))
         .select("kind", "token", "doc_id", "tf", "pbk", "dl")
-      val s = st.filter(col("kind") === "s")
-        .groupBy("kind", "token", "doc_id", "pbk")
-        .agg(sum("tf").as("tf"), sum("dl").as("dl"))
-        .select("kind", "token", "doc_id", "tf", "pbk", "dl")
-      p.unionByName(st.filter(col("kind") === "d")
-          .select("kind", "token", "doc_id", "tf", "pbk", "dl"))
-        .unionByName(s)
-        // one task per bucket value → ONE file per (epoch=-1, pbk) dir:
-        // the defragmentation half of the compaction contract (the IVF
-        // compactor's repartition(cell) rule). Without this, the fold's
-        // groupBy tasks scatter every bucket across up to
-        // shuffle.partitions files — GROWING the per-bucket open cost
-        // the compaction exists to reset (lexBucketStatsAt's n_files is
-        // the monitor that catches it). Parallelism = |buckets|, the
-        // layout's own granularity; spark.sql.files.maxRecordsPerFile
-        // bounds single-file size if a bucket outgrows one file.
-        .repartition(col("pbk"))
-    }
+        .sortWithinPartitions(LexFileOrder: _*))
 
   /** Streaming Merkle-manifest maintenance — `Sketches.merkleManifest`'s
     * incremental form, making its "re-hashes only buckets whose rows

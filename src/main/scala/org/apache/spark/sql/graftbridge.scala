@@ -24,6 +24,10 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `schema` with every field (nested ones too) nullable — what a file
+    * source reports for the data schema it read. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** True iff this dataset's (normalized) plan already has a CacheManager
     * entry. Plan-builder persists check this before `persist()` so that
     * building the same operator twice over the same input reuses the
